@@ -20,6 +20,11 @@ object Wkb {
   private final val TMultiPolygon = 6
   private final val TCollection = 7
 
+  // EWKB dimension flags; ISO marks the same dimensions with type-code
+  // offsets 1000 (Z), 2000 (M) and 3000 (ZM)
+  private final val EwkbZ = 0x80000000
+  private final val EwkbM = 0x40000000
+
   // --------------------------------------------------------------- writer
 
   def write(g: Geography): Array[Byte] = {
@@ -108,22 +113,42 @@ object Wkb {
     g
   }
 
-  private def readGeom(buf: ByteBuffer): Geography = {
+  /** Reads a geometry's byte order and type word. Returns the 2-D type
+    * (1..7) in the low byte and, above it, the number of Z/M ordinates that
+    * follow each (lng, lat) pair — read and dropped, as geography is 2-D. */
+  private def readHeader(buf: ByteBuffer): Int = {
     val order = buf.get()
     buf.order(if (order == 1) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    val rawType = buf.getInt()
-    val geomType = rawType % 1000 // tolerate ISO Z/M offsets
-    geomType match {
+    val raw = buf.getInt()
+    val code = raw & ~(EwkbZ | EwkbM)
+    val iso = code / 1000
+    if (iso > 3) throw WkbParseException(s"Unsupported WKB geometry type: $code")
+    val z = (iso & 1) != 0 || (raw & EwkbZ) != 0
+    val m = (iso & 2) != 0 || (raw & EwkbM) != 0
+    val extra = (if (z) 1 else 0) + (if (m) 1 else 0)
+    (code % 1000) | (extra << 8)
+  }
+
+  private def skipOrdinates(buf: ByteBuffer, extra: Int): Unit = {
+    var i = 0
+    while (i < extra) { buf.getDouble(); i += 1 }
+  }
+
+  private def readGeom(buf: ByteBuffer): Geography = {
+    val header = readHeader(buf)
+    val extra = header >>> 8
+    (header & 0xff) match {
       case TPoint =>
         val lng = buf.getDouble(); val lat = buf.getDouble()
+        skipOrdinates(buf, extra)
         if (lng.isNaN || lat.isNaN) emptyPoint
         else Points(Vector(S2Point.fromLatLngDegrees(lat, lng)))
       case TLine =>
         val n = buf.getInt()
         if (n == 0) Polylines(Vector.empty)
-        else Polylines(Vector(readCoords(buf, n)))
+        else Polylines(Vector(readCoords(buf, n, extra)))
       case TPolygon =>
-        val g = readPolygonBody(buf)
+        val g = readPolygonBody(buf, extra)
         if (g.isEmpty) Polygons(Vector.empty) else Polygons(Vector(g))
       case TMultiPoint =>
         val n = buf.getInt()
@@ -171,24 +196,25 @@ object Wkb {
     }
   }
 
-  private def readCoords(buf: ByteBuffer, n: Int): Vector[S2Point] = {
+  private def readCoords(buf: ByteBuffer, n: Int, extra: Int): Vector[S2Point] = {
     val b = Vector.newBuilder[S2Point]
     var i = 0
     while (i < n) {
       val lng = buf.getDouble(); val lat = buf.getDouble()
+      skipOrdinates(buf, extra)
       b += S2Point.fromLatLngDegrees(lat, lng)
       i += 1
     }
     b.result()
   }
 
-  private def readPolygonBody(buf: ByteBuffer): Vector[Vector[S2Point]] = {
+  private def readPolygonBody(buf: ByteBuffer, extra: Int): Vector[Vector[S2Point]] = {
     val nRings = buf.getInt()
     val rings = Vector.newBuilder[Vector[S2Point]]
     var i = 0
     while (i < nRings) {
       val n = buf.getInt()
-      val pts = readCoords(buf, n)
+      val pts = readCoords(buf, n, extra)
       val ring = if (pts.size > 1 && pts.head == pts.last) pts.dropRight(1) else pts
       rings += ring
       i += 1
@@ -231,12 +257,16 @@ object Wkb {
     * on non-point geometries (the s2_cellfromwkb contract). */
   private def scanPoints(buf: ByteBuffer, visit: (Double, Double) => Boolean,
                          pointsOnly: Boolean): Boolean = {
-    val order = buf.get()
-    buf.order(if (order == 1) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    val geomType = buf.getInt() % 1000
-    geomType match {
+    val header = readHeader(buf)
+    val extra = header >>> 8
+    def visitNext(): Boolean = {
+      val lng = buf.getDouble(); val lat = buf.getDouble()
+      skipOrdinates(buf, extra)
+      visit(lng, lat)
+    }
+    (header & 0xff) match {
       case TPoint =>
-        visit(buf.getDouble(), buf.getDouble())
+        visitNext()
       case TMultiPoint =>
         val n = buf.getInt()
         var i = 0
@@ -255,7 +285,7 @@ object Wkb {
         } else {
           val n = buf.getInt()
           var i = 0
-          while (i < n) { if (!visit(buf.getDouble(), buf.getDouble())) return false; i += 1 }
+          while (i < n) { if (!visitNext()) return false; i += 1 }
           true
         }
       case TPolygon =>
@@ -268,7 +298,7 @@ object Wkb {
           while (r < nRings) {
             val n = buf.getInt()
             var i = 0
-            while (i < n) { if (!visit(buf.getDouble(), buf.getDouble())) return false; i += 1 }
+            while (i < n) { if (!visitNext()) return false; i += 1 }
             r += 1
           }
           true

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /**
  * Similarity search over embedding columns (Array[Float]).
  *
- * - cosine / dot products are pure built-in expressions (zip_with +
- *   aggregate) → whole-stage codegen, no UDF.
+ * - candidate-pair cosine / dot scoring uses the codegen natives of
+ *   spark/VecExpressions → whole-stage codegen, no UDF.
  * - bruteForceTopK broadcasts the (small) query side; the corpus streams —
  *   the right plan when queries << corpus (the common case at 100 TB).
  * - lshTopK buckets both sides with signed-random-projection LSH so the
@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
  */
 object Ann {
 
-  // JVM primitives for the hot pair loop: a single UDF call per pair is an
-  // order of magnitude faster than Catalyst higher-order lambda aggregates
-  // over arrays at bench scale.
+  // JVM primitives for the scoring loops that run over primitive arrays
+  // (the bruteForceTopK kernel, the quantizers, the embedding
+  // contamination flag).
   private val dotFn: (Array[Float], Array[Float]) => Double =
     (a: Array[Float], b: Array[Float]) => {
       var s = 0.0
@@ -34,16 +34,10 @@ object Ann {
     Math.sqrt(s)
   }
 
-  def dot(a: Column, b: Column): Column = udf(dotFn).apply(a, b)
-
-  def norm(a: Column): Column = udf(normFn).apply(a)
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  // Native codegen scoring (spark/VecExpressions): the UDF forms above stay
-  // as the session-free Column API; the candidate-pair join paths register
-  // the natives on the frame's session and score with zero per-pair
-  // allocations (the UDF converter copies both arrays on every call).
+  // Native codegen scoring (spark/VecExpressions): the candidate-pair join
+  // paths register the natives on the frame's session and score with zero
+  // per-pair allocations (a UDF converter would copy both arrays on every
+  // call).
   private def nativeDot(spark: org.apache.spark.sql.SparkSession,
                         a: Column, b: Column): Column = {
     graft.spark.VecExpressions.ensureRegistered(spark)
@@ -186,46 +180,16 @@ object Ann {
     (0 until n).map(b => sig.bitwiseXOR(lit(1L << b)))
 
   /**
-   * Skew guard for SRP buckets: anisotropic embeddings pile up in a few
-   * signatures, and one giant bucket means one straggler task doing a
-   * quadratic chunk of the join. Buckets larger than `maxBucket` on the
-   * `buildId` side are split into ceil(n/maxBucket) salted sub-buckets
-   * (deterministic id-hash); the probe side REPLICATES across its bucket's
-   * sub-buckets, so the candidate pair set is EXACTLY preserved — this
-   * redistributes work, it never changes results. The per-bucket size map
-   * is at most 2^bits rows — broadcast. Returns both sides re-keyed to the
-   * salted bucket.
-   *
-   * Salted key layout: `bucket << 32 | salt`. Signatures use `bits` <= 31
-   * hyperplanes (callers pass 8), so the shifted bucket never collides with
-   * another bucket's salt range, and a salt needs __nsplit > 2^32 (i.e.
-   * > ~17e12 rows in ONE bucket at maxBucket=4096) before it could wrap —
-   * unreachable, so distinct (bucket, salt) pairs stay distinct keys and the
-   * "probe buckets are pairwise-distinct" no-dedupe arguments below hold.
-   */
-  private def saltBuckets(build: DataFrame, buildId: String,
-                          probe: DataFrame, maxBucket: Int): (DataFrame, DataFrame) = {
-    if (maxBucket <= 0) return (build, probe)
-    val splits = build.groupBy("bucket")
-      .agg(ceil(count(lit(1)) / lit(maxBucket.toDouble)).cast("int").as("__nsplit"))
-      .where(col("__nsplit") > 1)
-    val b = build.join(broadcast(splits), Seq("bucket"), "left")
-      .withColumn("bucket",
-        shiftleft(col("bucket"), 32) + when(col("__nsplit").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col(buildId)), col("__nsplit").cast("long"))))
-      .drop("__nsplit")
-    val p = probe.join(broadcast(splits), Seq("bucket"), "left")
-      .withColumn("__salt",
-        explode(sequence(lit(0), coalesce(col("__nsplit"), lit(1)) - 1)))
-      .withColumn("bucket", shiftleft(col("bucket"), 32) + col("__salt"))
-      .drop("__nsplit", "__salt")
-    (b, p)
-  }
-
-  /**
    * Approximate top-k: bucket queries and corpus by SRP signature, compare
    * only within buckets (plus single-bit-flip probing for recall), exact
    * rerank inside the bucket. Scale path: one equi-join shuffle.
+   *
+   * Skew guard: anisotropic embeddings pile up in a few signatures, and
+   * one giant bucket is one straggler task doing a quadratic chunk of the
+   * join. Corpus buckets over the cap are salted candidate-preservingly —
+   * the result is unchanged. `maxBucket` follows [[BucketPairs]], except
+   * that the default ALWAYS salts at [[BucketPairs.DefaultCap]]: the split
+   * map is at most 2^bits rows, broadcast, and no probe job runs.
    *
    * Precondition: `idCol` is unique per row on BOTH sides. Candidates are
    * bag-semantic (no distinct — each join match scores and ranks once), so a
@@ -235,25 +199,26 @@ object Ann {
    */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, bits: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              maxBucket: Int = 4096): DataFrame = {
+              maxBucket: Int = BucketPairs.DefaultCap): DataFrame = {
     val sess = queries.sparkSession
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       nativeNorm(sess, col(vecCol)).as("q_norm"),
       nativeSrpPacked(sess, col(vecCol), bits).as("sig"))
     // multiprobe: original bucket + each 1-bit flip
-    val probes0 = q.withColumn("bucket",
+    val probes = q.withColumn("bucket",
       explode(array(col("sig") +: flips(col("sig"), bits): _*)))
-    val c0 = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
+    val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
       nativeNorm(sess, col(vecCol)).as("c_norm"),
       nativeSrpPacked(sess, col(vecCol), bits).as("bucket"))
-    val (c, probes) = saltBuckets(c0, "c_id", probes0, maxBucket)
+    val s = BucketPairs.salt(c, probes, "c_id", Seq("bucket"),
+      BucketPairs.cap(c, Seq("bucket"), maxBucket))
     // norms hoisted to one UDF per ROW above: each candidate pair pays a
     // single dot-product call instead of dot + two norms
-    // no pair dedupe needed: each corpus row lives in exactly ONE bucket and
-    // a query's probe buckets (sig + its 1-bit flips, sub-bucket replicas
-    // included) are pairwise-distinct values, so every (q,c) pair joins at
-    // most once — a distinct here would be a pure extra shuffle
-    val scored = c.join(probes.hint("shuffle_hash"), Seq("bucket"))
+    // no pair dedupe needed: each corpus row lives in exactly ONE bucket
+    // (and one salt) and a query's probe keys (sig + its 1-bit flips, salt
+    // replicas included) are pairwise-distinct, so every (q,c) pair joins
+    // at most once — a distinct here would be a pure extra shuffle
+    val scored = s.build.join(s.probe.hint("shuffle_hash"), s.keys)
       .where(col("q_id") =!= col("c_id"))
       .withColumn("sim",
         nativeDot(sess, col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")))
@@ -545,28 +510,28 @@ object Ann {
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold via LSH buckets,
-    * with oversized buckets salted (see [[saltBuckets]]). Precondition:
+    * with oversized buckets salted (see [[lshTopK]]). Precondition:
     * unique `idCol` — output is bag-semantic (one row per join match), so
     * duplicate ids would emit duplicate pair rows (see [[lshTopK]]). */
   def cosineNearDupPairs(df: DataFrame, threshold: Double, bits: Int = 8,
                          idCol: String = "vec_id", vecCol: String = "embedding",
-                         maxBucket: Int = 4096): DataFrame = {
+                         maxBucket: Int = BucketPairs.DefaultCap): DataFrame = {
     val sess = df.sparkSession
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       nativeNorm(sess, col(vecCol)).as("nrm"),
       nativeSrpPacked(sess, col(vecCol), bits).as("sig"))
-    val probes0 = v.withColumn("bucket",
+    val probes = v.withColumn("bucket",
       explode(array(col("sig") +: flips(col("sig"), bits): _*)))
       .select(col("id"), col("vec"), col("nrm"), col("bucket"))
-    val base0 = v.select(col("id"), col("vec"), col("nrm"), col("sig").as("bucket"))
-    val (base, probes) = saltBuckets(base0, "id", probes0, maxBucket)
-    base.as("a").join(probes.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+    val base = v.select(col("id"), col("vec"), col("nrm"), col("sig").as("bucket"))
+    val s = BucketPairs.salt(base, probes, "id", Seq("bucket"),
+      BucketPairs.cap(base, Seq("bucket"), maxBucket))
+    s.build.as("a").join(s.probe.as("b"), s.on("a", "b") && col("a.id") < col("b.id"))
       .withColumn("sim",
         nativeDot(sess, col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm")))
       .where(col("sim") >= threshold)
       // at most one match per pair: the base side carries only its own sig
-      // bucket (one row per id) and the probe side's buckets are distinct
+      // bucket and salt (one row per id) and the probe side's keys are distinct
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("sim"))
   }
 

@@ -222,98 +222,14 @@ object Multimodal {
       .toDF("media_id", "ahash")
   }
 
-  /**
-   * Candidate-preserving salt for a bucketed self-pair-join (the
-   * Ann.saltBuckets discipline applied to pair joins): per `keyCols`
-   * bucket holding more than `maxBucket` rows, the BUILD side takes ONE
-   * salt replica (`pmod(xxhash64(id), nsplit)`) while the PROBE side is
-   * replicated to ALL `nsplit` salts, so every within-bucket pair still
-   * meets exactly once (at the build row's salt) but the quadratic work
-   * of a degenerate bucket spreads over `nsplit` tasks instead of
-   * serializing into one. Buckets at or under the cap get salt 0 on both
-   * sides — the plan is unchanged for them. Join the returned frames on
-   * `keyCols :+ "__salt"`.
-   *
-   * `maxBucket` semantics — unified with [[graft.llm.Dedup]]'s adaptive
-   * discipline (r16; VERDICT r15 item 5 — the two modules made opposite
-   * default choices for the same tradeoff):
-   *   = 0 : never salt — both sides share the identical lineage, so the
-   *         symmetric self-join's exchange computes once (ReuseExchange);
-   *   > 0 : always salt at that cap (the r14 opt-in behavior, unchanged);
-   *   < 0 : DEFAULT ([[AdaptiveMaxBucket]]) — persist the exploded key
-   *         frame once (slim: id + key + hash columns, no per-row
-   *         arrays; the lineage above it runs the decode-heavy media
-   *         hash UDFs, which is why the probe reads a cache here instead
-   *         of recomputing like the text side), probe the bucket
-   *         histogram, and take the salted plan only when a bucket
-   *         exceeds [[DefaultMaxBucket]] — a cold corpus keeps the
-   *         unsalted symmetric plan.
-   * NOTE the adaptive default runs a small Spark job (the probe) at
-   * DataFrame-construction time; the cache is released when the first
-   * consuming query completes (CacheLifecycle).
-   */
-  private def saltSelfJoin(rows: DataFrame, idCol: String, keyCols: Seq[String],
-                           maxBucket: Int): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    if (maxBucket == 0) return (rows.withColumn("__salt", lit(0L)),
-      rows.withColumn("__salt", lit(0L)), Nil)
-    // ADVICE r14: the consumers below (probe/splits aggregation + build +
-    // probe side) would each re-evaluate `rows`' lineage — for the media
-    // joins that lineage runs the decode-heavy hash UDFs, ~3x per call,
-    // and the asymmetric sides forfeit the ReuseExchange the symmetric
-    // self-join had. Persist once; the caller arms
-    // CacheLifecycle.releaseAfterUse on the consuming join so the cache
-    // dies with the first query.
-    val cached = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cap = if (maxBucket < 0) DefaultMaxBucket else maxBucket
-    if (maxBucket < 0) {
-      val hot = cached.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-        .limit(1).count() > 0
-      if (!hot) return (cached.withColumn("__salt", lit(0L)),
-        cached.withColumn("__salt", lit(0L)), Seq(cached))
-    }
-    val splits = cached.groupBy(keyCols.map(col): _*)
-      .agg(ceil(count(lit(1)) / lit(cap.toDouble)).cast("long").as("__nsplit"))
-      .where(col("__nsplit") > 1)
-    val build = cached.join(broadcast(splits), keyCols, "left")
-      .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
-        .otherwise(pmod(xxhash64(col(idCol)), col("__nsplit"))))
-      .drop("__nsplit")
-    val probe = cached.join(broadcast(splits), keyCols, "left")
-      .withColumn("__salt",
-        explode(sequence(lit(0L), coalesce(col("__nsplit"), lit(1L)) - 1)))
-      .drop("__nsplit")
-    (build, probe, Seq(cached))
-  }
-
-  /** Sentinel default for `maxBucket` across the media near-dup joins:
-    * probe the bucket histogram and salt ONLY when some bucket exceeds
-    * [[DefaultMaxBucket]] (see [[saltSelfJoin]]) — same adaptive default
-    * as [[graft.llm.Dedup.AdaptiveMaxBucket]]. */
-  val AdaptiveMaxBucket: Int = -1
-
   /** Diagnostic for the banded joins' hot-bucket governance: one row per
-    * OVERSIZED (blk, bucket) — its population and the salt fan-out the
-    * join will apply. Run it (and log the rows) before a production
-    * near-dup pass to see exactly which degenerate hash values (uniform
-    * images, steady tones, black frames) are being split. */
+    * OVERSIZED (blk, bucket) — its population `n` and the salt fan-out
+    * `nsplit` the join will apply. Run it (and log the rows) before a
+    * production near-dup pass to see exactly which degenerate hash values
+    * (uniform images, steady tones, black frames) are being split. */
   def hotBucketStats(hashes: DataFrame, maxHamming: Int,
-                     maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val nBlocks = maxHamming + 1
-    val width = 64 / nBlocks
-    hashes.select(col("id"),
-        explode(array((0 until nBlocks).map(i =>
-          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
-      .select(col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
-      .groupBy("blk", "bucket").agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket)
-      .withColumn("nsplit", ceil(col("n") / lit(maxBucket.toDouble)).cast("long"))
-  }
-
-  /** Default hot-bucket split threshold for the banded similarity joins
-    * (same order as Ann's LSH cap: bounds one task's pair work to
-    * ~maxBucket^2/nsplit comparisons). */
-  val DefaultMaxBucket: Int = 4096
+                     maxBucket: Int = BucketPairs.DefaultCap): DataFrame =
+    BucketPairs.hotBuckets(hammingBlocks(hashes, maxHamming), Seq("blk", "bucket"), maxBucket)
 
   // static per-block shifts (shift amounts must be literals in Spark)
   private def blockVal(h: Column, i: Int, width: Int, nBlocks: Int): Column = {
@@ -336,42 +252,57 @@ object Multimodal {
    * Hot-bucket governance: a degenerate hash value — the aHash of a
    * uniform image, the all-zero envelope of a steady tone — puts its
    * whole equivalence class into one (blk, bucket), where the self-join
-   * is quadratic in the class. Buckets over `maxBucket` rows are salted
-   * candidate-preservingly ([[saltSelfJoin]]): every qualifying pair is
-   * still emitted exactly once, but the class's work spreads over
-   * ceil(n/maxBucket) tasks. [[hotBucketStats]] reports what gets split.
+   * is quadratic in the class. Such buckets are salted
+   * candidate-preservingly; `maxBucket` follows [[BucketPairs]] (adaptive
+   * by default). [[hotBucketStats]] reports what gets split.
    */
   private[llm] def hamming64Pairs(hashes: DataFrame, maxHamming: Int,
-                                  maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
+                                  maxBucket: Int = BucketPairs.Adaptive): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       "hamming64Pairs: maxHamming must be in [0, 15] (block count <= 16)")
     val nBlocks = maxHamming + 1
     val width = 64 / nBlocks // uneven tail bits join the last block
-    val blocks = hashes.select(col("id"), col("h"),
-        explode(array((0 until nBlocks).map(i =>
-          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
-      .select(col("id"), col("h"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
     def blockEq(i: Int): Column =
       blockVal(col("a.h"), i, width, nBlocks) === blockVal(col("b.h"), i, width, nBlocks)
     val firstBlk = (0 until nBlocks - 1).foldRight(lit(nBlocks - 1): Column) {
       (i, acc) => when(blockEq(i), lit(i)).otherwise(acc)
     }
-    val (build, probe, cached) = saltSelfJoin(blocks, "id", Seq("blk", "bucket"), maxBucket)
-    val joined = build.as("a").hint("shuffle_hash").join(probe.as("b").hint("shuffle_hash"),
-        col("a.blk") === col("b.blk") && col("a.bucket") === col("b.bucket") &&
-          col("a.__salt") === col("b.__salt") &&
-          col("a.id") < col("b.id") && col("a.blk") === firstBlk)
+    val blocks = cacheUnlessUnsalted(hammingBlocks(hashes, maxHamming), maxBucket)
+    val keys = Seq("blk", "bucket")
+    val s = BucketPairs.salt(blocks, blocks, "id", keys, BucketPairs.cap(blocks, keys, maxBucket))
+    val joined = s.build.as("a").hint("shuffle_hash").join(s.probe.as("b").hint("shuffle_hash"),
+        s.on("a", "b") && col("a.id") < col("b.id") && col("a.blk") === firstBlk)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
-    graft.spark.CacheLifecycle.releaseAfterUse(cached, joined)
+    graft.spark.CacheLifecycle.releaseAfterUse(if (maxBucket == 0) Nil else Seq(blocks), joined)
   }
+
+  /** (id, h, blk, bucket): each hash exploded to its `maxHamming + 1`
+    * (block index, block value) keys. */
+  private def hammingBlocks(hashes: DataFrame, maxHamming: Int): DataFrame = {
+    val nBlocks = maxHamming + 1
+    val width = 64 / nBlocks
+    hashes.select(col("id"), col("h"),
+        explode(array((0 until nBlocks).map(i =>
+          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
+      .select(col("id"), col("h"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
+  }
+
+  /** The media join's key frame, persisted unless `maxBucket == 0`: its
+    * lineage runs the decode-heavy media hash UDFs, which the histogram
+    * probe, the split histogram and both join sides would otherwise each
+    * re-run. Unsalted (= 0) both sides share the lineage, so ReuseExchange
+    * computes it once. The consuming join releases it (CacheLifecycle). */
+  private def cacheUnlessUnsalted(rows: DataFrame, maxBucket: Int): DataFrame =
+    if (maxBucket == 0) rows
+    else rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Image NEAR-DEDUP via banded aHash — the multimodal twin of SimHash
     * near-dedup, riding [[hamming64Pairs]]. Undecodable payloads are
     * dropped before the join. */
   def imageNearDupPairs(media: DataFrame, maxHamming: Int = 3,
-                        maxBucket: Int = AdaptiveMaxBucket): DataFrame =
+                        maxBucket: Int = BucketPairs.Adaptive): DataFrame =
     hamming64Pairs(
       imageHashes(media).where(col("ahash").isNotNull)
         .select(col("media_id").as("id"), col("ahash").as("h")),
@@ -434,7 +365,7 @@ object Multimodal {
   /** Audio NEAR-DEDUP: banded envelope-hash join, same machinery as
     * [[imageNearDupPairs]]. */
   def audioNearDupPairs(media: DataFrame, maxHamming: Int = 3,
-                        maxBucket: Int = AdaptiveMaxBucket): DataFrame =
+                        maxBucket: Int = BucketPairs.Adaptive): DataFrame =
     hamming64Pairs(
       audioHashes(media).where(col("audiohash").isNotNull)
         .select(col("media_id").as("id"), col("audiohash").as("h")),
@@ -508,14 +439,13 @@ object Multimodal {
    *
    * Hot-bucket governance: a frame hash shared by a huge population
    * (black frames, title cards, station idents) makes the equi-join
-   * quadratic in that population. Frame hashes with more than
-   * `maxBucket` carriers are salted candidate-preservingly
-   * ([[saltSelfJoin]]) — intersection counts are exact (each
-   * (pair, frame) match still meets exactly once) while a degenerate
-   * frame's work spreads over ceil(n/maxBucket) tasks.
+   * quadratic in that population. Such frame hashes are salted
+   * candidate-preservingly — intersection counts stay exact (each
+   * (pair, frame) match still meets exactly once); `maxBucket` follows
+   * [[BucketPairs]] (adaptive by default).
    */
   def videoNearDupPairs(media: DataFrame, minJaccardPermille: Int = 500,
-                        maxBucket: Int = AdaptiveMaxBucket): DataFrame =
+                        maxBucket: Int = BucketPairs.Adaptive): DataFrame =
     videoNearDupPairsFromFingerprints(
       videoFingerprints(media).where(col("frame_hashes").isNotNull)
         .select(col("media_id"), col("frame_hashes"),
@@ -526,15 +456,17 @@ object Multimodal {
     * fingerprint table `(media_id, frame_hashes, nf)` — the entry point
     * when fingerprints are persisted (or synthesized in specs). */
   def videoNearDupPairsFromFingerprints(fp: DataFrame, minJaccardPermille: Int = 500,
-                                        maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
+                                        maxBucket: Int = BucketPairs.Adaptive): DataFrame = {
     require(minJaccardPermille >= 0 && minJaccardPermille <= 1000,
       "videoNearDupPairs: minJaccardPermille must be in [0, 1000]")
     val ex = fp.select(col("media_id").as("id"), col("nf"),
       explode(col("frame_hashes")).as("fh"))
-    val (build, probe, cached) = saltSelfJoin(ex, "id", Seq("fh"), maxBucket)
-    val a = build.select(col("id").as("id_a"), col("nf").as("na"), col("fh"), col("__salt"))
-    val b = probe.select(col("id").as("id_b"), col("nf").as("nb"), col("fh"), col("__salt"))
-    val joined = a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("fh", "__salt"))
+    val cached = cacheUnlessUnsalted(ex, maxBucket)
+    val s = BucketPairs.salt(cached, cached, "id", Seq("fh"),
+      BucketPairs.cap(cached, Seq("fh"), maxBucket))
+    val a = s.build.select(Seq(col("id").as("id_a"), col("nf").as("na")) ++ s.keys.map(col): _*)
+    val b = s.probe.select(Seq(col("id").as("id_b"), col("nf").as("nb")) ++ s.keys.map(col): _*)
+    val joined = a.hint("shuffle_hash").join(b.hint("shuffle_hash"), s.keys)
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "na", "nb")
       .agg(count(lit(1)).as("inter"))
@@ -543,7 +475,7 @@ object Multimodal {
       .where(col("jaccard_permille") >= minJaccardPermille)
       .select(col("id_a"), col("id_b"), col("inter").cast("long").as("n_shared"),
         col("jaccard_permille"))
-    graft.spark.CacheLifecycle.releaseAfterUse(cached, joined)
+    graft.spark.CacheLifecycle.releaseAfterUse(if (maxBucket == 0) Nil else Seq(cached), joined)
   }
 
   /** Resample a decoded image to the target size (nearest-neighbor via

@@ -3612,7 +3612,7 @@ object Queries {
     * On FLAT storage the IN(DISTINCT) form wins: the explicit DISTINCT
     * adds a map-side partial dedup BEFORE the lineitem side shuffles, so
     * the semi-join's shuffled volume drops to unique-orderkey grain
-    * (tools/Q4Variants A/B: 2.97 -> 2.70 s at unbucketed sf10,
+    * (A/B recorded in SCALEUP.md: 2.97 -> 2.70 s at unbucketed sf10,
     * 0.71 -> 0.60 s at sf0.1 vs bare EXISTS). On the CO-LOCATED bucketed
     * layout there is no shuffle to shrink — the distinct's two hash
     * aggregates are pure overhead AND destroy the buckets' sort order —
@@ -3832,9 +3832,9 @@ object Queries {
     * until r18 the bucketed branch was exercised only by ScalaTest — never
     * by a driver CORRECTNESS row. This builds a bucketed+sorted IDENTITY
     * copy of the gate's sf dir (ScaleUp at copies=1: same rows, co-located
-    * layout, sorted marker) under the gitignored bigdata/, keyed by the
-    * source lineitem fingerprint so a regenerated source never reuses a
-    * stale copy. The *_bucketed rows below run the UNCHANGED dispatchers
+    * layout, sorted marker) under java.io.tmpdir, keyed by the source
+    * lineitem fingerprint so a regenerated source never reuses a stale
+    * copy while JVMs on one box share a current one. The *_bucketed rows below run the UNCHANGED dispatchers
     * against it — same oracles, so the driver hash-verifies the bucketed
     * plans end to end (CREATE TABLE … CLUSTERED/SORTED BY registration,
     * outputOrdering/sortAgg confs, streaming-merge joins). */
@@ -3842,7 +3842,8 @@ object Queries {
     val (len, mtime) = dirFingerprint(s"$dir/lineitem.parquet")
     val tag = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(s"$dir|$len|$mtime").toLong & 0xffffffffL)
-    val dst = s"/root/repo/bigdata/gate_bucketed_$tag"
+    val dst = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_gate_bucketed_$tag").getPath
     if (!new java.io.File(s"$dst/lineitem.parquet/_graft_buckets.json").exists())
       graft.tools.ScaleUp.run(s, src = dir, dst = dst, copies = 1)
     dst

@@ -64,7 +64,7 @@ object ScaleUp {
       * the storage layout directly — zero join/window-feeding exchanges,
       * the same recipe the reference documents for partition-by-cell
       * (docs/function-reference.md:750-768) applied to relational keys.
-      * tools/Q4Q12Bucketed measured the effect at sf10: q4 1.87->1.26 s,
+      * SCALEUP.md records the effect at sf10: q4 1.87->1.26 s,
       * q12 3.38->2.40 s, join exchanges -> 0. At 100 TB this is not an
       * optimization but the design: co-locating fact tables on the join
       * key at write time is what makes the join cost linear-per-node.

@@ -46,7 +46,7 @@ class DedupAdaptiveSaltSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a beyond-threshold identical-band class completes with DEFAULT args, pair set exact") {
     val s = spark; import s.implicits._
     // 5000 identical docs — one signature class, every band the same
-    // bucket, population > DefaultHotBucket (4096): the r14 default would
+    // bucket, population > BucketPairs.DefaultCap (4096): the r14 default would
     // put the whole 12.5M-pair clique in one task. Since the r21
     // signature-group collapse the class enters the band join as ONE
     // representative (no hot bucket, no band salt); the 12.5M pairs come
@@ -55,7 +55,7 @@ class DedupAdaptiveSaltSpec extends AnyFunSuite with BeforeAndAfterAll {
     // expansion spreads over multiple tasks — and still emits every clique
     // pair exactly once.
     val n = 5000
-    assert(n > Dedup.DefaultHotBucket)
+    assert(n > BucketPairs.DefaultCap)
     val docs = ((1 to n).map(i => (i.toLong, "the same boilerplate text block")) ++
       (n + 1 to n + 40).map(i => (i.toLong, s"unique tail doc $i ${i % 5}")))
       .toDF("doc_id", "text")

@@ -26,7 +26,7 @@ class MultimodalAdaptiveSaltSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cold corpus: adaptive default keeps the unsalted plan, pair set identical (image-hash join)") {
     val s = spark; import s.implicits._
-    // distinct-ish hashes, small clusters — nothing near DefaultMaxBucket
+    // distinct-ish hashes, small clusters — nothing near BucketPairs.DefaultCap
     val hashes = (1 to 400)
       .map(i => (i.toLong, (i / 2).toLong << 8)) // pairs of near hashes
       .toDF("id", "h")
@@ -42,7 +42,7 @@ class MultimodalAdaptiveSaltSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hot corpus: a beyond-threshold identical-hash class flips to the salted plan, clique exact") {
     val s = spark; import s.implicits._
-    val n = Multimodal.DefaultMaxBucket + 400 // 4496 identical hashes
+    val n = BucketPairs.DefaultCap + 400 // 4496 identical hashes
     val hashes = ((1 to n).map(i => (i.toLong, 0xdeadbeefL)) ++
       (n + 1 to n + 30).map(i => (i.toLong, i.toLong << 20)))
       .toDF("id", "h")
