@@ -49,7 +49,7 @@ object GeoParquet {
   /** Recursively list the data part files under `p` (descends into
     * partitionBy subdirectories; skips _SUCCESS/_metadata and hidden
     * files). */
-  private def partFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Path] = {
+  private[spark] def partFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Path] = {
     val st = fs.getFileStatus(p)
     if (st.isDirectory)
       fs.listStatus(p).filter(s => !s.getPath.getName.startsWith("_") &&

@@ -80,11 +80,8 @@ object KnnJoin {
   /** Initial probe level: the finest level whose 3×3 neighborhood still
     * expects ≥ ~4k right points, from the optimizer's size estimate —
     * wrong guesses cost one extra round (too fine) or extra candidates
-    * (too coarse), never correctness. Override with
-    * spark.graft.knn.initLevel. */
+    * (too coarse), never correctness. */
   private def initialLevel(right: DataFrame, k: Int): Int = {
-    val conf = right.sparkSession.conf.get("spark.graft.knn.initLevel", "")
-    if (conf.nonEmpty) return conf.toInt.max(0).min(14)
     val stats = try right.queryExecution.optimizedPlan.stats catch { case _: Throwable => null }
     val n: Double =
       if (stats == null) 1e6

@@ -63,7 +63,7 @@ object Queries {
     * make merge-joins/sort-aggs consume an ordering that is not there —
     * wrong results, not just wrong perf — so a marker without the flag is
     * registered bucketed-but-unsorted. */
-  private def bucketMarker(dir: String, t: String): Option[(String, Int, Boolean)] = {
+  private[spark] def bucketMarker(dir: String, t: String): Option[(String, Int, Boolean)] = {
     val f = new java.io.File(s"$dir/$t.parquet/_graft_buckets.json")
     if (!f.exists) None
     else try {
@@ -3426,11 +3426,10 @@ object Queries {
   // schema-bounded groups. EXACTNESS BOUND, no distribution assumption:
   // the largest per-row term is disc_c <= round(price*100) * 100 ~ 1e9,
   // so a single BIGINT group sum overflows 2^63 only past ~9.2e9 rows IN
-  // ONE GROUP — at lineitem's ~18 B/row parquet density that is a ~160 GB
-  // single-group file. The dispatcher flips to the salted two-level shape
-  // two orders of magnitude before that; below it the salt's 9x1024
+  // ONE GROUP. The dispatcher flips to the salted two-level shape at 1e9
+  // lineitem rows (Shape.Q1SaltRows); below it the salt's 9x1024
   // partial groups + second exchange were pure stage floor (sf0.1 A/B:
-  // 0.167 -> ~0.12 s; the sf10 section also keeps flat at 1.1 GB).
+  // 0.167 -> ~0.12 s; the sf10 section also keeps flat at 60M rows).
   private[spark] val q1FlatSql =
     """SELECT l_returnflag, l_linestatus,
       | CAST(CAST(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DECIMAL(38,0)) / 100 AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
@@ -3441,15 +3440,13 @@ object Queries {
       |FROM lineitem
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus LIMIT 1000""".stripMargin
-  /** SIZE-ADAPTIVE q1 (r18, same discipline as q5): flat single-level agg
-    * until the per-group BIGINT-cents bound could plausibly bind (64 GB
-    * lineitem — 2.5 orders of magnitude of margin against the ~160 GB
-    * single-group overflow point), salted two-level beyond. Both shapes
-    * stay registered against the same oracle. */
+  /** SIZE-ADAPTIVE q1 (r18): flat single-level agg up to 1e9 lineitem
+    * rows — 9x below the 9.2e9-rows-in-one-group BIGINT-cents overflow
+    * point even if every row lands in one group — salted two-level beyond.
+    * Both shapes stay registered against the same oracle. */
   private val qTpchQ1: Q = (s, dir) => {
     prep(s, dir)
-    val (len, _) = dirFingerprint(s"$dir/lineitem.parquet")
-    s.sql(if (len > 64L * 1024 * 1024 * 1024) q1SaltedSql else q1FlatSql)
+    s.sql(if (Shape.q1(Shape.rows(dir, "lineitem")) == "flat") q1FlatSql else q1SaltedSql)
   }
   private val oTpchQ1 =
     """SELECT l_returnflag, l_linestatus,
@@ -3497,12 +3494,10 @@ object Queries {
   // join; there PRE-AGG-FIRST wins: aggregate lineitem per orderkey (the
   // group key IS the join key, so map-side combine collapses the exchange
   // to order grain, ~4x fewer rows than raw) and join the key set after.
-  // The choice keys off the PHYSICAL orders file size (a bare relation's
-  // byte stats are the FileIndex total — reliable, unlike the join-side
-  // product stats an r5 optimizer rule tripped over): filter-first while
-  // the ~1/5 key set plausibly broadcasts, pre-agg-first beyond. Both
-  // shapes use the same BIGINT cents math (one order <= 7 lineitems, far
-  // from 2^63, no salt) and produce identical rows.
+  // The choice keys off the orders footer row count (Shape.q3):
+  // filter-first while the ~1/5 key set plausibly broadcasts,
+  // pre-agg-first beyond. Both shapes use the same BIGINT cents math (one
+  // order <= 7 lineitems, far from 2^63, no salt) and produce identical rows.
   private[spark] val q3FilterFirst =
     """WITH bo AS (
       |  SELECT o.o_orderkey
@@ -3530,22 +3525,6 @@ object Queries {
       | CAST(CAST(CAST(r.cents AS DECIMAL(38,0)) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue
       |FROM lrev r JOIN bo ON r.l_orderkey = bo.o_orderkey
       |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin
-  // q3's shape choice needs the physical orders file size; the listing +
-  // footer pass is driver-side and identical per dataset, so cache it —
-  // re-deriving it per bench rep was ~10% of the whole sf0.1 row. Keyed
-  // by (dir, total file length, latest mtime) — NOT by SparkSession
-  // (ADVICE r14: a session key pins session references for the JVM
-  // lifetime and returns stale sizes when the same path is regenerated
-  // in-session, flipping q3 to the wrong plan shape).
-  private val ordersBytesCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), BigInt]
-  private def dirFingerprint(path: String): (Long, Long) = {
-    val files = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile)
-    if (files.isEmpty) {
-      val f = new java.io.File(path); (f.length, f.lastModified)
-    } else (files.map(_.length).sum, files.map(_.lastModified).max)
-  }
   /** SMALL-FLAT q3 (r17): both dims broadcast, so their builds
     * materialize CONCURRENTLY and the whole query is one lineitem stage
     * + TakeOrdered — the sequential customer-then-bo broadcast chain of
@@ -3562,33 +3541,22 @@ object Queries {
       |WHERE c.c_mktsegment = 'BUILDING'
       |GROUP BY l.l_orderkey
       |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin
+  /** CO-LOCATED LAYOUT (r17): when lineitem AND orders are both bucketed
+    * on orderkey, filter-first is the best shape at EVERY size — the
+    * lineitem⋈bo join is a zero-exchange sorted-bucket merge and the
+    * per-order agg streams as a SortAggregate on the merge output (sf10
+    * A/B: 2.1 s pre-agg / 0.93 s hinted SHJ / 0.76 s sorted merge). Flat
+    * inputs take both-dims broadcast while orders fits the forced-broadcast
+    * budget, filter-first while its key set does, pre-agg-first beyond —
+    * and pre-agg-first whenever broadcasts are disabled. */
   private val qTpchQ3: Q = (s, dir) => {
     prep(s, dir)
-    // CO-LOCATED LAYOUT (r17): when lineitem AND orders are both bucketed
-    // on orderkey, filter-first is the best shape at EVERY size — the
-    // lineitem⋈bo join is a zero-exchange sorted-bucket merge (the
-    // customer key-set broadcast feeds bo through the orders scan's own
-    // order) and the per-order agg streams as a SortAggregate on the
-    // merge output. Pre-agg-first's 15M-group hash agg and the key-set
-    // broadcast threshold are both irrelevant there (sf10 A/B: 2.1 s
-    // pre-agg / 0.93 s hinted SHJ / 0.76 s sorted merge).
-    if (bucketMarker(dir, "lineitem").isDefined && bucketMarker(dir, "orders").isDefined)
-      s.sql(q3FilterFirst)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      // threshold <= 0 means broadcasts are disabled — the filter-first
-      // shape's key-set broadcast can't happen, so always pre-agg first
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      // both-dims broadcast while the FULL 2-col orders relation fits the
-      // budget; filter-first while the ~1/5 KEY SET does (2x slack for
-      // the in-memory hashed form); pre-agg-first beyond
-      if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) s.sql(q3BcastBoth)
-      else if (thresh > 0 && ordersBytes / 5 <= BigInt(2L * thresh)) s.sql(q3FilterFirst)
-      else s.sql(q3PreAggFirst)
-    }
+    s.sql(Shape.q3(Shape.bucketed(dir, "lineitem", "orders"), Shape.rows(dir, "orders"),
+      Shape.bcast(s)) match {
+      case "bcast-both" => q3BcastBoth
+      case "filter-first" => q3FilterFirst
+      case _ => q3PreAggFirst
+    })
   }
   private val oTpchQ3 =
     """SELECT o.o_orderkey,
@@ -3661,16 +3629,12 @@ object Queries {
       |GROUP BY o_orderpriority ORDER BY o_orderpriority LIMIT 1000""".stripMargin
   private val qTpchQ4: Q = (s, dir) => {
     prep(s, dir)
-    if (bucketMarker(dir, "lineitem").isDefined) s.sql(q4Exists)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) q4BcastOrders
-            else q4InDistinct)
-    }
+    s.sql(Shape.q4(Shape.bucketed(dir, "lineitem"), Shape.rows(dir, "orders"),
+      Shape.bcast(s)) match {
+      case "exists" => q4Exists
+      case "bcast-orders" => q4BcastOrders
+      case _ => q4InDistinct
+    })
   }
   private val oTpchQ4 =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n
@@ -3706,7 +3670,7 @@ object Queries {
     * one of the two per-row timestamp conversions run once per ORDER on
     * the build side instead of once per LINEITEM row on the probe side,
     * and the broadcast payload is (long, bool, long). Forced hint, so
-    * dispatched only inside the same 2x broadcast budget as q3/q4. */
+    * dispatched only inside the same broadcast budget as q3/q4. */
   private[spark] val q12Narrow =
     """SELECT CASE WHEN high THEN 'high' ELSE 'low' END AS prio, n_late, n_items FROM (
       | SELECT /*+ BROADCAST(o) */ o.high,
@@ -3725,16 +3689,8 @@ object Queries {
     * body (Catalyst picks the shuffled join). */
   private val qTpchQ12: Q = (s, dir) => {
     prep(s, dir)
-    if (bucketMarker(dir, "lineitem").isDefined && bucketMarker(dir, "orders").isDefined)
-      s.sql(q12Body)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) q12Narrow else q12Body)
-    }
+    s.sql(if (Shape.q12(Shape.bucketed(dir, "lineitem", "orders"), Shape.rows(dir, "orders"),
+      Shape.bcast(s)) == "narrow") q12Narrow else q12Body)
   }
   private val oTpchQ12 =
     """SELECT CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -3745,39 +3701,6 @@ object Queries {
       |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       |GROUP BY 1 ORDER BY 1 LIMIT 1000""".stripMargin
 
-  private val q5SaltedSql =
-    """WITH p AS (
-      | SELECT r.r_name, n.n_name, pmod(l.l_orderkey, 1024) AS salt,
-      |  sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-      |    * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS rev_c,
-      |  count(*) AS n
-      | FROM lineitem l
-      | JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      | JOIN nation n ON s.s_nationkey = n.n_nationkey
-      | JOIN region r ON n.n_regionkey = r.r_regionkey
-      | GROUP BY r.r_name, n.n_name, salt)
-      |SELECT r_name, n_name,
-      | CAST(CAST(sum(CAST(rev_c AS DECIMAL(38,0))) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-      | CAST(sum(n) AS BIGINT) AS n_items
-      |FROM p
-      |GROUP BY r_name, n_name
-      |ORDER BY r_name, n_name LIMIT 1000""".stripMargin
-  // single-level form: the salt exists only for BIGINT-cents headroom —
-  // a (r_name, n_name) group overflows 2^63 cents at ~10^10 lineitem
-  // rows per group (multi-TB per group), so below the size threshold the
-  // two-level shape is pure overhead (25600 partial groups + a second
-  // exchange + a second aggregate for 25 output rows)
-  private val q5FlatSql =
-    """SELECT r.r_name, n.n_name,
-      | CAST(CAST(CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-      |    * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS DECIMAL(38,0)) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-      | CAST(count(*) AS BIGINT) AS n_items
-      |FROM lineitem l
-      |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |JOIN nation n ON s.s_nationkey = n.n_nationkey
-      |JOIN region r ON n.n_regionkey = r.r_regionkey
-      |GROUP BY r.r_name, n.n_name
-      |ORDER BY r.r_name, n.n_name LIMIT 1000""".stripMargin
   /** SUPPLIER-GRAIN PRE-AGG (r17): the best large-input q5 shape does NO
     * joins at all on the 60M-row pass — aggregate lineitem by l_suppkey
     * (one primitive-key agg, ~0.25 s of the sf10 stage), then walk the
@@ -3806,25 +3729,18 @@ object Queries {
       |JOIN region r ON n.n_regionkey = r.r_regionkey
       |GROUP BY r.r_name, n.n_name
       |ORDER BY r.r_name, n.n_name LIMIT 1000""".stripMargin
-  private val qTpchQ5Salted = sqlQ(q5SaltedSql)
-  private val qTpchQ5Flat = sqlQ(q5FlatSql)
   private val qTpchQ5Supp = sqlQ(q5SuppSql)
   /** Forced-broadcast BRANCH rows (b_tpch_q3_bcast / b_tpch_q4_bcast) are
     * correctness-gate pins, but a forced BROADCAST hint has no size guard
     * of its own — run at a large SF it would risk driver OOM inside the
-    * gate (ADVICE r17). Wrap them in the SAME 2x-threshold budget the
-    * dispatcher uses: within budget the forced shape runs (what the row
-    * exists to pin, and always true at gate SFs); beyond it the row falls
-    * back to the unforced shape instead of failing — same oracle either
-    * way. */
+    * gate (ADVICE r17). Wrap them in the SAME budget the dispatchers use:
+    * within budget the forced shape runs (what the row exists to pin, and
+    * always true at gate SFs); beyond it the row falls back to the
+    * unforced shape instead of failing — same oracle either way. */
   private def guardedBcast(bcastSql: String, fallbackSql: String): Q = (s, dir) => {
     prep(s, dir)
-    val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-    val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-      s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-    val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-    val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-    s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) bcastSql else fallbackSql)
+    s.sql(if (Shape.guarded(Shape.rows(dir, "orders"), Shape.bcast(s)) == "bcast") bcastSql
+          else fallbackSql)
   }
 
   /** BUCKETED-LAYOUT GATE DIR (VERDICT r17 item 7): the q3/q4/q12/funnel
@@ -3839,7 +3755,7 @@ object Queries {
     * plans end to end (CREATE TABLE … CLUSTERED/SORTED BY registration,
     * outputOrdering/sortAgg confs, streaming-merge joins). */
   private def bucketedGateDir(s: SparkSession, dir: String): String = synchronized {
-    val (len, mtime) = dirFingerprint(s"$dir/lineitem.parquet")
+    val (len, mtime) = Shape.dirFingerprint(s"$dir/lineitem.parquet")
     val tag = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(s"$dir|$len|$mtime").toLong & 0xffffffffL)
     val dst = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3875,48 +3791,17 @@ object Queries {
       |FROM p JOIN dim d ON p.sk = d.sk
       |GROUP BY d.r_name, d.n_name
       |ORDER BY d.r_name, d.n_name LIMIT 1000""".stripMargin
-  /** q5 dispatcher (r18): supplier-grain pre-agg ALWAYS (exact via
+  /** q5 dispatcher (r18): supplier-grain pre-agg at every size (exact via
     * per-supplier BIGINT cents — TPC-H suppliers scale with the data at a
     * fixed ~600 rows each, so the headroom is unbounded in corpus size);
-    * the broadcast-hinted dim nesting while supplier fits the same 2x
-    * budget the other dispatchers use (supplier is SF x 10K rows — at
-    * warehouse scale it outgrows any broadcast), the unhinted
-    * [[q5SuppSql]] beyond. Legacy shapes stay registered against the
-    * same oracle, so every branch remains driver-verified. */
+    * the broadcast-hinted dim nesting while supplier fits the
+    * forced-broadcast budget (supplier is SF x 10K rows — at warehouse
+    * scale it outgrows any broadcast), the unhinted [[q5SuppSql]] beyond.
+    * Both branches stay oracle-verified (b_tpch_q5 / b_tpch_q5_supp). */
   private val qTpchQ5: Q = (s, dir) => {
     prep(s, dir)
-    // MID-SIZE FLAT WINDOW (r20, VERDICT r19 item 5): three same-process
-    // A/Bs place the flat join-then-agg ahead of the supplier pre-agg
-    // ONLY in the ~sf1 neighborhood — sf0.1 small-profile 0.99 supp vs
-    // 1.33 flat, sf1 0.485 supp vs 0.407 flat (FloorLab dispatched:
-    // 0.876 vs ~0.73), sf3 0.846 supp vs 1.163 flat. The non-monotone
-    // crossover is a barrier-vs-volume tradeoff: at the small SF the
-    // 8-partition AQE-off profile makes the pre-agg's extra exchange
-    // nearly free while its 10x-narrower probe input wins; at mid size
-    // the bucket-file scan is only a handful of tasks, so the pre-agg's
-    // two real stage barriers cost more than flat's one-stage 3-broadcast
-    // probe; from sf3 up the probe volume dominates and pre-agg pays
-    // again. Window bounds sit between the measured points (sf0.1 11 MB,
-    // sf1 114 MB, sf3 339 MB); both branches share the oracle and stay
-    // driver-verified via b_tpch_q5_flat / b_tpch_q5_supp.
-    val liBytes = dirFingerprint(s"$dir/lineitem.parquet")._1
-    // ADVICE r20 (low): the window keys on on-disk bytes, which are codec-
-    // sensitive — log which branch dispatched so every A/B stays
-    // attributable to the branch that actually ran.
-    System.err.println(s"[q5] dispatch: lineitem ${liBytes >> 20} MB -> " +
-      (if (liBytes > 48L * 1024 * 1024 && liBytes <= 200L * 1024 * 1024) "flat"
-       else "supplier pre-agg"))
-    if (liBytes > 48L * 1024 * 1024 && liBytes <= 200L * 1024 * 1024)
-      s.sql(q5FlatSql)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/supplier.parquet")
-      val suppBytes = ordersBytesCache.getOrElseUpdate((dir + "#supplier", len, mtime),
-        s.read.parquet(s"$dir/supplier.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && suppBytes <= BigInt(2L * thresh)) q5SuppBcastSql
-            else q5SuppSql)
-    }
+    s.sql(if (Shape.q5(Shape.rows(dir, "supplier"), Shape.bcast(s)) == "supp-bcast") q5SuppBcastSql
+          else q5SuppSql)
   }
   private val oTpchQ5 =
     """SELECT r.r_name, n.n_name,
@@ -4115,17 +4000,15 @@ object Queries {
     * sf10: staged 0.28 s vs window 0.47 s); on small FLAT files the three
     * tiny join stages are pure stage-launch floor — 3 stages' overhead on
     * a sub-100 ms oracle — and the r14 single-scan array-fold wins (r14
-    * sf0.1: fold 0.162 s vs staged 0.344 s). Dispatch: bucketed marker →
-    * staged; flat and small (< [[FunnelFoldMaxBytes]] of events parquet)
-    * → fold; flat and LARGE → staged (the fold's per-user collect_list
-    * buffer is unbounded in the hot-user dimension, never the 100-TB
-    * pick). All three shapes share one oracle — the differential check. */
-  private val FunnelFoldMaxBytes = 64L * 1024 * 1024
+    * sf0.1: fold 0.162 s vs staged 0.344 s). Dispatch (Shape.funnel):
+    * bucketed marker → staged; flat and small → fold; flat and LARGE →
+    * staged (the fold's per-user collect_list buffer is unbounded in the
+    * hot-user dimension, never the 100-TB pick). All three shapes share
+    * one oracle — the differential check. */
   private val qEventsFunnel: Q = (s, dir) => {
     prep(s, dir)
-    val staged = bucketMarker(dir, "events").isDefined ||
-      dirFingerprint(s"$dir/events.parquet")._1 > FunnelFoldMaxBytes
-    s.sql(if (staged) funnelStagedSql else funnelFoldSql)
+    s.sql(if (Shape.funnel(Shape.bucketed(dir, "events"), Shape.rows(dir, "events")) == "fold")
+      funnelFoldSql else funnelStagedSql)
   }
   private val qEventsFunnelStaged = sqlQ(funnelStagedSql)
   private val qEventsFunnelFold = sqlQ(funnelFoldSql)
@@ -4176,12 +4059,10 @@ object Queries {
       |      FROM (SELECT /*+ COALESCE(1) */ event_type, ts, user_id FROM events)
       |      GROUP BY 1, 2, 3)
       |GROUP BY event_type, hour_epoch""".stripMargin
-  private val HourlyOneMaxBytes = 16L * 1024 * 1024
   private val qEventsHourly: Q = (s, dir) => {
     prep(s, dir)
-    val one = bucketMarker(dir, "events").isEmpty &&
-      dirFingerprint(s"$dir/events.parquet")._1 < HourlyOneMaxBytes
-    s.sql(if (one) hourlyOneSql else hourlyTwoLevelSql)
+    s.sql(if (Shape.hourly(Shape.bucketed(dir, "events"), Shape.rows(dir, "events")) ==
+      "one-partition") hourlyOneSql else hourlyTwoLevelSql)
   }
   private val qEventsHourlyWide = sqlQ(hourlyTwoLevelSql)
   private val oEventsHourly =
@@ -4430,8 +4311,6 @@ object Queries {
     ("b_tpch_q4_exists", sqlQ(q4Exists), Some(oTpchQ4)),
     ("b_tpch_q4_indistinct", sqlQ(q4InDistinct), Some(oTpchQ4)),
     ("b_tpch_q5", qTpchQ5, Some(oTpchQ5)),
-    ("b_tpch_q5_salted", qTpchQ5Salted, Some(oTpchQ5)),
-    ("b_tpch_q5_flat", qTpchQ5Flat, Some(oTpchQ5)),
     ("b_tpch_q5_supp", qTpchQ5Supp, Some(oTpchQ5)),
     ("b_tpch_q12", qTpchQ12, Some(oTpchQ12)),
     ("b_top_order", qTopOrderPerCustomer, Some(oTopOrderPerCustomer)),

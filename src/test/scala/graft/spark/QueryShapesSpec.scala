@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The size-adaptive q3 picks between two SQL shapes; the driver's
-  * oracle gate only ever exercises the small-data (filter-first) branch,
-  * so the pre-agg-first branch needs its own equivalence guard. */
+/** The size-adaptive queries pick between exact-identical SQL shapes; at
+  * the gate's small flat SFs the dispatchers take one branch each (q3
+  * bcast-both), so every other branch needs its own equivalence guard. */
 class QueryShapesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -31,18 +31,14 @@ class QueryShapesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val qmap = Queries.all.map { case (n, q, _) => n -> q }.toMap
 
-  test("q5 dispatcher: flat and salted shapes return identical rows; small flat dir takes the single-level plan") {
+  test("q5 dispatcher: broadcast and unhinted supplier-grain shapes return identical rows; small flat dir takes an unsalted plan") {
     val dir = "/root/testdata/sf0.001"
     Queries.prep(spark, dir)
-    val flat = qmap("b_tpch_q5_flat")(spark, dir).collect().map(_.toSeq).toSeq
-    val salted = qmap("b_tpch_q5_salted")(spark, dir).collect().map(_.toSeq).toSeq
     val supp = qmap("b_tpch_q5_supp")(spark, dir).collect().map(_.toSeq).toSeq
     val dispatched = qmap("b_tpch_q5")(spark, dir)
-    assert(flat.nonEmpty && flat === salted)
-    assert(flat === supp, "supplier-grain pre-agg shape must agree with the join-then-agg shapes")
-    assert(dispatched.collect().map(_.toSeq).toSeq === flat)
-    // a tiny flat dir is far below the 512 MB salt threshold: the
-    // dispatched plan must be the single-level one (no salt column)
+    assert(supp.nonEmpty)
+    assert(dispatched.collect().map(_.toSeq).toSeq === supp)
+    // no q5 branch salts: the dispatched plan carries no salt column
     assert(!dispatched.queryExecution.optimizedPlan.toString.contains("salt"),
       "small input must take the single-level q5 shape")
   }
