@@ -25,6 +25,12 @@ object Wkb {
   private final val EwkbZ = 0x80000000
   private final val EwkbM = 0x40000000
 
+  /** Deepest multi/collection nesting the readers accept. Real data nests
+    * a few levels at most; the cap keeps a blob of thousands of nested
+    * headers from overflowing the stack, a fatal Error that takes down
+    * the executor. */
+  private final val MaxDepth = 64
+
   // --------------------------------------------------------------- writer
 
   def write(g: Geography): Array[Byte] = {
@@ -107,8 +113,7 @@ object Wkb {
   // --------------------------------------------------------------- reader
 
   def read(bytes: Array[Byte], validate: Boolean = true): Geography = {
-    val buf = ByteBuffer.wrap(bytes)
-    val g = readGeom(buf)
+    val g = parsing(readGeom(ByteBuffer.wrap(bytes), 0))
     if (validate) Validation.findError(g).foreach(e => throw WkbParseException(e))
     g
   }
@@ -116,7 +121,8 @@ object Wkb {
   /** Reads a geometry's byte order and type word. Returns the 2-D type
     * (1..7) in the low byte and, above it, the number of Z/M ordinates that
     * follow each (lng, lat) pair — read and dropped, as geography is 2-D. */
-  private def readHeader(buf: ByteBuffer): Int = {
+  private def readHeader(buf: ByteBuffer, depth: Int): Int = {
+    if (depth > MaxDepth) throw WkbParseException(s"WKB nesting deeper than $MaxDepth levels")
     val order = buf.get()
     buf.order(if (order == 1) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
     val raw = buf.getInt()
@@ -134,8 +140,15 @@ object Wkb {
     while (i < extra) { buf.getDouble(); i += 1 }
   }
 
-  private def readGeom(buf: ByteBuffer): Geography = {
-    val header = readHeader(buf)
+  /** Runs a reader, mapping a read past the end of the blob (a truncated
+    * body or a count larger than the data) to a typed parse error. */
+  private def parsing[T](body: => T): T =
+    try body catch {
+      case _: java.nio.BufferUnderflowException => throw WkbParseException("Truncated WKB")
+    }
+
+  private def readGeom(buf: ByteBuffer, depth: Int): Geography = {
+    val header = readHeader(buf, depth)
     val extra = header >>> 8
     (header & 0xff) match {
       case TPoint =>
@@ -155,7 +168,7 @@ object Wkb {
         val pts = Vector.newBuilder[S2Point]
         var i = 0
         while (i < n) {
-          readGeom(buf) match {
+          readGeom(buf, depth + 1) match {
             case Points(ps) => ps.foreach(pts += _)
             case _ => throw WkbParseException("MULTIPOINT member is not a point")
           }
@@ -167,7 +180,7 @@ object Wkb {
         val ls = Vector.newBuilder[Vector[S2Point]]
         var i = 0
         while (i < n) {
-          readGeom(buf) match {
+          readGeom(buf, depth + 1) match {
             case Polylines(xs) => xs.foreach(ls += _)
             case _ => throw WkbParseException("MULTILINESTRING member is not a linestring")
           }
@@ -179,7 +192,7 @@ object Wkb {
         val gs = Vector.newBuilder[Vector[Vector[S2Point]]]
         var i = 0
         while (i < n) {
-          readGeom(buf) match {
+          readGeom(buf, depth + 1) match {
             case p: Polygons => p.ringGroups.foreach(gs += _)
             case _ => throw WkbParseException("MULTIPOLYGON member is not a polygon")
           }
@@ -190,7 +203,7 @@ object Wkb {
         val n = buf.getInt()
         val items = Vector.newBuilder[Geography]
         var i = 0
-        while (i < n) { items += readGeom(buf); i += 1 }
+        while (i < n) { items += readGeom(buf, depth + 1); i += 1 }
         Collection(items.result())
       case other => throw WkbParseException(s"Unsupported WKB geometry type: $other")
     }
@@ -228,11 +241,11 @@ object Wkb {
     * (reference: s2_cell_ops.cpp:174-285). Returns the sentinel for empty. */
   def cellFromWkb(bytes: Array[Byte]): Long = {
     var found: Option[(Double, Double)] = None
-    scanPoints(ByteBuffer.wrap(bytes), (lng, lat) => {
+    parsing(scanPoints(ByteBuffer.wrap(bytes), (lng, lat) => {
       if (lng.isNaN || lat.isNaN) true
       else if (found.isEmpty) { found = Some((lng, lat)); true }
       else throw WkbParseException("Can't parse WKB with more than one point to S2_CELL_CENTER")
-    }, pointsOnly = true)
+    }, pointsOnly = true, 0))
     found match {
       case Some((lng, lat)) => S2CellId.fromLonLatDegrees(lng, lat)
       case None => S2CellId.Sentinel
@@ -243,10 +256,10 @@ object Wkb {
     * (reference: s2_cell_ops.cpp:207-308). Sentinel if no vertex. */
   def arbitraryCellFromWkb(bytes: Array[Byte]): Long = {
     var found: Option[(Double, Double)] = None
-    scanPoints(ByteBuffer.wrap(bytes), (lng, lat) => {
+    parsing(scanPoints(ByteBuffer.wrap(bytes), (lng, lat) => {
       if (lng.isNaN || lat.isNaN) true
       else { found = Some((lng, lat)); false } // stop at first vertex
-    }, pointsOnly = false)
+    }, pointsOnly = false, 0))
     found match {
       case Some((lng, lat)) => S2CellId.fromLonLatDegrees(lng, lat)
       case None => S2CellId.Sentinel
@@ -256,8 +269,8 @@ object Wkb {
   /** Streaming WKB scan; visit returns false to stop. pointsOnly=true errors
     * on non-point geometries (the s2_cellfromwkb contract). */
   private def scanPoints(buf: ByteBuffer, visit: (Double, Double) => Boolean,
-                         pointsOnly: Boolean): Boolean = {
-    val header = readHeader(buf)
+                         pointsOnly: Boolean, depth: Int): Boolean = {
+    val header = readHeader(buf, depth)
     val extra = header >>> 8
     def visitNext(): Boolean = {
       val lng = buf.getDouble(); val lat = buf.getDouble()
@@ -270,12 +283,12 @@ object Wkb {
       case TMultiPoint =>
         val n = buf.getInt()
         var i = 0
-        while (i < n) { if (!scanPoints(buf, visit, pointsOnly)) return false; i += 1 }
+        while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
         true
       case TCollection =>
         val n = buf.getInt()
         var i = 0
-        while (i < n) { if (!scanPoints(buf, visit, pointsOnly)) return false; i += 1 }
+        while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
         true
       case TLine =>
         if (pointsOnly) {
@@ -306,7 +319,7 @@ object Wkb {
       case TMultiLine | TMultiPolygon =>
         val n = buf.getInt()
         var i = 0
-        while (i < n) { if (!scanPoints(buf, visit, pointsOnly)) return false; i += 1 }
+        while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
         true
       case other => throw WkbParseException(s"Unsupported WKB geometry type: $other")
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{Decimal, LongType}
 
 /**
@@ -17,7 +18,9 @@ import org.apache.spark.sql.types.{Decimal, LongType}
  * scalable cover-then-refine equi-join (SURVEY §2.8). Without the rule such
  * joins execute as BroadcastNestedLoopJoin — O(|L|*|R|) predicate
  * evaluations; with it they shuffle once on covering cells and evaluate the
- * exact predicate only on cell-colocated candidates.
+ * exact predicate only on cell-colocated candidates. The DataFrame helpers
+ * in [[S2Join]] plan through the same rule ([[SpatialJoinRewrite.planJoin]]),
+ * so sessions without the extension get the identical join.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
@@ -34,10 +37,6 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     * covering cost, so this is purely a plan-quality knob. When unset the
     * level comes from the parallelism-and-count heuristic below. */
   val CoveringLevelConf = "spark.graft.join.coveringLevel"
-
-  /** Opt-out for the parallelism-and-count default-level heuristic
-    * (`=false` pins the floors: covering level 4, dwithin offset 0). */
-  val LevelHeuristicConf = "spark.graft.join.levelHeuristic"
 
   /** Dwithin shuffle-key cardinality knob: `SET
     * spark.graft.join.dwithinLevelOffset=k` covers at kMinWidth-level + k
@@ -94,8 +93,7 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     * once keys outnumber rows). Unknown rows trust the partition count:
     * the refine keeps any level correct, and a high-parallelism session is
     * strong evidence of cluster-scale data. */
-  private def targetKeys(sqlConf: org.apache.spark.sql.internal.SQLConf,
-                         left: LogicalPlan, right: LogicalPlan): BigInt = {
+  private def targetKeys(sqlConf: SQLConf, left: LogicalPlan, right: LogicalPlan): BigInt = {
     val fromParallelism = BigInt(sqlConf.numShufflePartitions.max(1)) * KeysPerPartition
     Seq(estimatedRows(left), estimatedRows(right)).flatten
       .maxOption.fold(fromParallelism)(_.min(fromParallelism))
@@ -112,21 +110,37 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     * the level undershoots the shuffle-key target, capped at 6. On
     * local[32] this always returns 4 (1536 cells ≥ 2·32); a
     * 4096-partition cluster session gets 6. */
-  def defaultCoveringLevel(sqlConf: org.apache.spark.sql.internal.SQLConf,
-                           left: LogicalPlan, right: LogicalPlan): Int =
-    if (!sqlConf.getConfString(LevelHeuristicConf, "true").toBoolean) DefaultCoveringLevel
-    else bumpLevel(DefaultCoveringLevel, MaxHeuristicCoveringLevel,
-      targetKeys(sqlConf, left, right))
+  def defaultCoveringLevel(sqlConf: SQLConf, left: LogicalPlan, right: LogicalPlan): Int =
+    bumpLevel(DefaultCoveringLevel, MaxHeuristicCoveringLevel, targetKeys(sqlConf, left, right))
 
   /** Default dwithin level offset: 0, bumped while the cell count at
     * (radius level + offset) undershoots the shuffle-key target, capped at
     * 2. A 300 km radius (level 3, 384 cells) stays 0 on local[32] and
     * reaches 2 (6144 cells) on a 4096-partition session. */
-  def defaultDwithinOffset(sqlConf: org.apache.spark.sql.internal.SQLConf, baseLevel: Int,
+  def defaultDwithinOffset(sqlConf: SQLConf, baseLevel: Int,
                            left: LogicalPlan, right: LogicalPlan): Int =
-    if (!sqlConf.getConfString(LevelHeuristicConf, "true").toBoolean) 0
-    else bumpLevel(baseLevel, baseLevel + MaxHeuristicDwithinOffset,
+    bumpLevel(baseLevel, baseLevel + MaxHeuristicDwithinOffset,
       targetKeys(sqlConf, left, right)) - baseLevel
+
+  /** An integer join setting clamped to [0, max]; None when unset or
+    * malformed. A tuning knob must never be able to fail the query it
+    * tunes, so a bad value falls back to the heuristic. */
+  private def levelSetting(sqlConf: SQLConf, key: String, max: Int): Option[Int] =
+    sqlConf.getConfString(key, "").trim.toIntOption.map(_.max(0).min(max))
+
+  /** Level for the intersects/contains shuffle key: [[CoveringLevelConf]]
+    * when set, otherwise [[defaultCoveringLevel]]. */
+  private def coveringLevel(sqlConf: SQLConf, left: LogicalPlan, right: LogicalPlan): Int =
+    levelSetting(sqlConf, CoveringLevelConf, 20)
+      .getOrElse(defaultCoveringLevel(sqlConf, left, right))
+
+  /** Dwithin level offset: [[DwithinLevelOffsetConf]] when set, otherwise
+    * [[defaultDwithinOffset]]. Shared with the streaming distance join
+    * ([[graft.streaming.GeoEnrich.dwithinJoin]]). */
+  private[graft] def dwithinOffset(sqlConf: SQLConf, baseLevel: Int,
+                                   left: LogicalPlan, right: LogicalPlan): Int =
+    levelSetting(sqlConf, DwithinLevelOffsetConf, 6)
+      .getOrElse(defaultDwithinOffset(sqlConf, baseLevel, left, right))
 
   /** Marks a join this rule already produced, so later optimizer
     * iterations never re-match the refine filter once it gets pushed into
@@ -134,14 +148,6 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     * the previous guard, broke on user tables that happen to carry a
     * `__cell` column). */
   private val RewrittenTag = TreeNodeTag[Boolean]("graft.spatialJoinRewritten")
-
-  /** Level for the cover-then-refine shuffle key: the conf wins; otherwise
-    * the parallelism-and-count heuristic ([[defaultCoveringLevel]]). */
-  private def coveringLevel(left: LogicalPlan, right: LogicalPlan): Int = {
-    val explicit = conf.getConfString(CoveringLevelConf, "")
-    if (explicit.nonEmpty) explicit.toInt.max(0).min(20)
-    else defaultCoveringLevel(conf, left, right)
-  }
 
   private def isFn(u: ScalaUDF, fn: AnyRef, name: String): Boolean =
     (u.function.asInstanceOf[AnyRef] eq fn) || u.udfName.contains(name)
@@ -201,8 +207,19 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case j @ Join(left, right, Inner, Some(cond), _)
-        if j.getTagValue(RewrittenTag).isEmpty =>
+    case j: Join if j.getTagValue(RewrittenTag).isEmpty => rewritten(j, scala.None)
+  }
+
+  /** The DataFrame surface ([[S2Join]]): plans an analyzed join under the
+    * session's conf, so sessions without the extension get the same
+    * cover-then-refine join as the SQL rewrite. `level` overrides the
+    * intersects/contains covering level. A join the rule does not match
+    * comes back unchanged. */
+  private[spark] def planJoin(sqlConf: SQLConf, j: Join, level: Option[Int]): LogicalPlan =
+    SQLConf.withExistingConf(sqlConf)(rewritten(j, level))
+
+  private def rewritten(j: Join, level: Option[Int]): LogicalPlan = j match {
+    case Join(left, right, Inner, Some(cond), _) =>
       // a spatial predicate ANYWHERE among the conjuncts drives the rewrite
       // (real joins carry extra conditions — id ordering, attribute
       // filters); the FULL original condition stays as the refine filter,
@@ -216,13 +233,14 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
         matched match {
           case Some((spatial, (g1, g2, meters)))
               if g1.references.subsetOf(left.outputSet) && g2.references.subsetOf(right.outputSet) =>
-            rewrite(j, left, right, spatial, conjuncts.filterNot(_ eq spatial), g1, g2, meters)
+            rewrite(j, spatial, conjuncts.filterNot(_ eq spatial), g1, g2, meters, level)
           case Some((spatial, (g1, g2, meters)))
               if g2.references.subsetOf(left.outputSet) && g1.references.subsetOf(right.outputSet) =>
-            rewrite(j, left, right, spatial, conjuncts.filterNot(_ eq spatial), g2, g1, meters)
+            rewrite(j, spatial, conjuncts.filterNot(_ eq spatial), g2, g1, meters, level)
           case _ => j
         }
       }
+    case _ => j
   }
 
   /**
@@ -243,17 +261,14 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
    * 8-neighborhood at a level whose min cell width exceeds the radius, so
    * every within-radius pair shares a probe cell.
    */
-  private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
-                      spatial: Expression, others: Seq[Expression],
-                      geogL: Expression, geogR: Expression, meters: Option[Double]): LogicalPlan = {
-    val dwithinOffset = meters.fold(0) { m =>
-      val explicit = conf.getConfString(DwithinLevelOffsetConf, "")
-      if (explicit.nonEmpty) explicit.toInt.max(0).min(6)
-      else defaultDwithinOffset(conf, S2Join.levelForDistance(m), left, right)
-    }
-    val level = meters.fold(coveringLevel(left, right))(m =>
-      Math.min(S2Join.levelForDistance(m) + dwithinOffset, 30))
-    val ring = 1 << dwithinOffset
+  private def rewrite(j: Join, spatial: Expression, others: Seq[Expression],
+                      geogL: Expression, geogR: Expression, meters: Option[Double],
+                      explicitLevel: Option[Int]): LogicalPlan = {
+    val (left, right) = (j.left, j.right)
+    val offset = meters.fold(0)(m => dwithinOffset(conf, S2Join.levelForDistance(m), left, right))
+    val level = meters.fold(explicitLevel.getOrElse(coveringLevel(conf, left, right)))(m =>
+      Math.min(S2Join.levelForDistance(m) + offset, 30))
+    val ring = 1 << offset
 
     def covered(child: LogicalPlan, geog: Expression, side: String,
                 withNeighbors: Boolean, withXyz: Boolean)
@@ -282,11 +297,13 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
 
     val cellJoin = Join(lPlan, rPlan, Inner, Some(EqualTo(lCell, rCell)), j.hint)
     cellJoin.setTagValue(RewrittenTag, true)
-    // evaluation-order discipline (same as S2Join.refineDedupe): the cheap
-    // non-spatial conjuncts run first inside an If the optimizer cannot
-    // split or reorder, then the exact spatial predicate (same
-    // per-candidate work as the replaced plan), then the array reporting
-    // condition on surviving pairs only
+    // evaluation-order discipline: the optimizer reorders bare conjuncts
+    // when it folds filters into a join condition, so the cheap
+    // non-spatial conjuncts (a pair prefilter such as id_a < id_b halves a
+    // symmetric self-join's refine count) run first inside an If the
+    // optimizer cannot split or reorder, then the exact spatial predicate
+    // (same per-candidate work as the replaced plan), then the array
+    // reporting condition on surviving pairs only
     //
     // dwithin refines through the chord-band tree (bit-identical to the
     // matched s2_dwithin — see GeogExpressions.dwithinXyzTree)
@@ -296,7 +313,7 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     }
     // single-cell shortcut: exploded cells are distinct per row, so a
     // one-cell side means a pair meets on at most one cell and the array
-    // reporting arithmetic can be skipped (mirrors S2Join.refineDedupe)
+    // reporting arithmetic can be skipped (point sides always hit this)
     val smallestCommonCell = Or(
       EqualTo(Size(rCov), Literal(1)),
       Or(EqualTo(Size(lCov), Literal(1)),

@@ -37,7 +37,8 @@ private[spark] final case class KnnTopKOut(cnt: Long, d2: Array[Double], ids: Ar
  *     population.
  *  3. Certification: the 3×3 ring at level L is guaranteed to contain
  *     every point within kMinWidth(L) of the query point (the same
- *     metric invariant [[S2Join.dwithin]] builds on, S2Join.scala:183-192).
+ *     metric invariant [[S2Join.dwithin]] builds on, see
+ *     [[S2Join.levelForDistance]]).
  *     A left row whose k-th candidate's squared chord is within that
  *     bound has its exact top-k — certified rows emit; the rest escalate
  *     to level L-1, where the covered radius DOUBLES while the probe set

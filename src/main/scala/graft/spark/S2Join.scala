@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 import S2Functions.S2
@@ -9,12 +10,18 @@ import S2Functions.S2
  * Spatial join helpers (SURVEY §2.8): the scalable default is the
  * cover-then-refine equi-join — explode a fixed-level covering on both
  * sides, equi-join on the cell (SortMergeJoin / ShuffledHashJoin, AQE
- * handles skew), then refine with the exact predicate and dedupe.
+ * handles skew), then refine with the exact predicate; multi-cell
+ * candidates are emitted once by smallest-common-cell reporting.
  *
  * The reference reaches the same result as a nested-loop predicate join
  * with a per-row covering prefilter (README.md:14-19,
  * s2_binary_index_ops.cpp:450-461); on Spark we hoist that prefilter into
  * the plan as a join key so it shuffles instead of looping.
+ *
+ * These helpers and the SQL rewrite share one implementation: each builds
+ * the plain predicate join and hands it to [[SpatialJoinRewrite.planJoin]], so
+ * `S2Join.intersects` and `JOIN ... ON s2_intersects(...)` under
+ * [[GraftExtensions]] run the same plan, with or without the extension.
  */
 object S2Join {
 
@@ -27,77 +34,15 @@ object S2Join {
     * candidates per cell; the refine predicate makes any level correct. */
   val AutoLevel: Int = -1
 
-  /** Heuristic input plan: the optimized plan for batch frames (best
-    * stats), the analyzed plan for streaming frames — forcing optimization
-    * on a streaming frame trips the batch-mode UnsupportedOperationChecker,
-    * and streaming leaves report sentinel sizes either way (the heuristic
-    * then falls back to the parallelism target). */
-  private def heuristicPlan(df: DataFrame) =
-    if (df.isStreaming) df.queryExecution.analyzed else df.queryExecution.optimizedPlan
-
-  private def resolveLevel(left: DataFrame, right: DataFrame, level: Int): Int =
-    if (level >= 0) level
-    else {
-      val explicit = left.sparkSession.conf.get(SpatialJoinRewrite.CoveringLevelConf, "")
-      if (explicit.nonEmpty) explicit.toInt.max(0).min(20)
-      else SpatialJoinRewrite.defaultCoveringLevel(left.sparkSession.sessionState.conf,
-        heuristicPlan(left), heuristicPlan(right))
-    }
-
-  /** Dwithin shuffle-key cardinality: the conf when set
-    * ([[SpatialJoinRewrite.DwithinLevelOffsetConf]]), otherwise the
-    * parallelism-and-count heuristic. Shared with the streaming twin
-    * ([[graft.streaming.GeoEnrich.dwithinJoin]]). */
-  private[graft] def dwithinLevelOffset(left: DataFrame, right: DataFrame, baseLevel: Int): Int = {
-    val explicit = left.sparkSession.conf.get(SpatialJoinRewrite.DwithinLevelOffsetConf, "")
-    if (explicit.nonEmpty) explicit.toInt.max(0).min(6)
-    else SpatialJoinRewrite.defaultDwithinOffset(left.sparkSession.sessionState.conf,
-      baseLevel, heuristicPlan(left), heuristicPlan(right))
-  }
-
-  /** Keep the `level`-covering of geogCol as an array column AND explode it
-    * into a `__cell` join key. The kept array drives the smallest-common-cell
-    * dedupe below. Null geographies cover nothing → their rows drop out of
-    * the explode, exactly like the vanilla predicate join drops them on a
-    * null predicate. */
-  private def withCells(df: DataFrame, geogCol: String, level: Int, covName: String): DataFrame =
-    df.withColumn(covName, call_function("s2_covering_fixed_level", col(geogCol), lit(level)))
-      .withColumn("__cell", explode(col(covName)))
-
-  /** Join two cell-exploded sides and refine with `predicate`.
-    *
-    * Multi-cell matches are deduplicated by REPORTING, not by a distinct:
-    * a candidate pair is kept only when the matched cell is the smallest
-    * cell id the two coverings share (`__cell == array_min(array_intersect)`)
-    * — every pair survives on exactly one cell, so no dedupe shuffle, no row
-    * fingerprinting, and inner-join multiplicity (duplicate input rows,
-    * rows differing only in null placement, map-typed columns) is preserved
-    * exactly. Same reporting trick as distributed spatial joins use for
-    * grid-partitioned candidates. */
-  private def refineDedupe(l: DataFrame, r: DataFrame,
-                           predicate: org.apache.spark.sql.Column,
-                           prefilter: Option[Column] = None): DataFrame = {
-    val joined = l.join(r, "__cell")
-    // single-cell shortcut: exploded cell values are DISTINCT per row
-    // (coverings are canonical; the dwithin probe set dedupes through a
-    // LinkedHashSet), so when either side's kept array has exactly one cell
-    // a pair can meet on at most one cell — reporting is vacuously true and
-    // the per-pair array_intersect/array_min allocation is skipped. Point
-    // sides (the dominant case in distance joins) always hit this.
-    val reporting =
-      size(col("__rcov")) === 1 || size(col("__lcov")) === 1 ||
-        col("__cell") === array_min(array_intersect(col("__lcov"), col("__rcov")))
-    // Evaluation-order discipline: the optimizer reorders bare conjuncts when
-    // folding filters into the join condition, which can put the expensive
-    // exact-predicate UDF ahead of the cheap pair prefilter (id_a < id_b for
-    // symmetric self-joins — it halves the refine count). A `when` expression
-    // is a single non-splittable conjunct, so prefilter -> exact predicate ->
-    // reporting evaluate strictly in that order.
-    val full = prefilter match {
-      case Some(pf) => when(pf, predicate && reporting).otherwise(lit(false))
-      case scala.None => predicate && reporting
-    }
-    joined.where(full).drop("__cell", "__lcov", "__rcov")
+  /** Inner join on `condition` (an s2 predicate plus optional cheap
+    * conjuncts), planned as the cover-then-refine join. */
+  private def coverThenRefine(left: DataFrame, right: DataFrame, condition: Column,
+                              level: Int = AutoLevel): DataFrame = {
+    val session = left.sparkSession
+    S2Functions.ensureRegistered(session)
+    val join = left.join(right, condition).queryExecution.analyzed.asInstanceOf[Join]
+    GraftShim.ofRows(session, SpatialJoinRewrite.planJoin(session.sessionState.conf, join,
+      Some(level).filter(_ >= 0)))
   }
 
   /**
@@ -110,23 +55,13 @@ object S2Join {
    * needed; AQE splits skewed cells (e.g. dense metro areas).
    */
   def intersects(left: DataFrame, geogL: String, right: DataFrame, geogR: String,
-                 level: Int = AutoLevel): DataFrame = {
-    S2Functions.ensureRegistered(left.sparkSession)
-    val lv = resolveLevel(left, right, level)
-    val l = withCells(left, geogL, lv, "__lcov")
-    val r = withCells(right, geogR, lv, "__rcov")
-    refineDedupe(l, r, call_function("s2_intersects", col(geogL), col(geogR)))
-  }
+                 level: Int = AutoLevel): DataFrame =
+    coverThenRefine(left, right, call_function("s2_intersects", col(geogL), col(geogR)), level)
 
   /** Containment join: rows where left contains right. */
   def contains(left: DataFrame, geogL: String, right: DataFrame, geogR: String,
-               level: Int = AutoLevel): DataFrame = {
-    S2Functions.ensureRegistered(left.sparkSession)
-    val lv = resolveLevel(left, right, level)
-    val l = withCells(left, geogL, lv, "__lcov")
-    val r = withCells(right, geogR, lv, "__rcov")
-    refineDedupe(l, r, call_function("s2_contains", col(geogL), col(geogR)))
-  }
+               level: Int = AutoLevel): DataFrame =
+    coverThenRefine(left, right, call_function("s2_contains", col(geogL), col(geogR)), level)
 
   /**
    * Broadcast predicate join for a small build side (the reference's
@@ -144,8 +79,9 @@ object S2Join {
   /**
    * Distance join: pairs within `meters`. The covering level is chosen so
    * a cell diagonal comfortably exceeds `meters`, then each left cell
-   * probes its own cell plus edge neighbors (covers the `meters` buffer),
-   * refined by exact s2_dwithin semantics.
+   * probes its own cell plus its neighbor ring (covers the `meters`
+   * buffer), refined by exact s2_dwithin semantics. `pairFilter` is a
+   * cheap pair prefilter (e.g. `id_a < id_b`) evaluated before the refine.
    *
    * The refine runs through the chord-band fast path
    * ([[GeogExpressions.dwithinXyzTree]]): each side's unit vector is
@@ -156,28 +92,8 @@ object S2Join {
    */
   def dwithin(left: DataFrame, geogL: String, right: DataFrame, geogR: String,
               meters: Double, pairFilter: Option[Column] = None): DataFrame = {
-    S2Functions.ensureRegistered(left.sparkSession)
-    val offset = dwithinLevelOffset(left, right, levelForDistance(meters))
-    val level = Math.min(levelForDistance(meters) + offset, 30)
-    val ring = 1 << offset
-    // full ring probe set: edge neighbors alone miss pairs that are close
-    // across a cell corner (diagonal adjacency); ring 2^offset keeps the
-    // distance buffer exact at the offset-finer level (see
-    // S2Functions.cellsWithNeighborsRing)
-    val l = left
-      .withColumn("__lxyz", call_function("s2_point_xyz", col(geogL)))
-      .withColumn("__lcov",
-        call_function("s2_cells_with_ring",
-          call_function("s2_covering_fixed_level", col(geogL), lit(level)), lit(ring)))
-      .withColumn("__cell", explode(col("__lcov")))
-    val r = withCells(
-      right.withColumn("__rxyz", call_function("s2_point_xyz", col(geogR))),
-      geogR, level, "__rcov")
-    refineDedupe(l, r,
-      call_function("s2_dwithin_xyz",
-        col("__lxyz"), col("__rxyz"), col(geogL), col(geogR), lit(meters)),
-      pairFilter)
-      .drop("__lxyz", "__rxyz")
+    val within = call_function("s2_dwithin", col(geogL), col(geogR), lit(meters))
+    coverThenRefine(left, right, pairFilter.fold(within)(within && _))
   }
 
   /** Largest level whose minimum cell width still exceeds `meters`, so the

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.spark.{S2Functions, S2Join}
+import graft.spark.{S2Functions, S2Join, SpatialJoinRewrite}
 import graft.spark.S2Functions.S2
 
 /**
@@ -164,6 +164,12 @@ object GeoEnrich {
    * watermark - window on BOTH sides, so the operator runs forever with
    * state proportional to (rate x window), not the stream.
    *
+   * The level offset comes from the same resolver as the batch join
+   * ([[graft.spark.SpatialJoinRewrite.dwithinOffset]]), but the plan is
+   * built here: a stream-stream join needs its event-time range INSIDE
+   * the join condition, while the batch rewrite lifts every non-spatial
+   * conjunct into a filter above the cell join.
+   *
    * Column names must be distinct across the two sides (the standard
    * constraint for condition-form stream joins). The same call works on
    * batch frames — the watermark nodes fold away and the identical
@@ -176,7 +182,8 @@ object GeoEnrich {
                   pairFilter: Option[Column] = None): DataFrame = {
     S2Functions.ensureRegistered(left.sparkSession)
     val base = S2Join.levelForDistance(meters)
-    val offset = S2Join.dwithinLevelOffset(left, right, base)
+    val offset = SpatialJoinRewrite.dwithinOffset(left.sparkSession.sessionState.conf, base,
+      left.queryExecution.analyzed, right.queryExecution.analyzed)
     val level = Math.min(base + offset, 30)
     val ring = 1 << offset
     val l = left

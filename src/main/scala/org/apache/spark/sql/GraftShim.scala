@@ -8,6 +8,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 object GraftShim {
   /** Wrap a Catalyst expression as a user-facing Column. */
@@ -17,4 +18,8 @@ object GraftShim {
   /** Unwrap a Column to its Catalyst expression. */
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over an analyzed logical plan built outside the Dataset API. */
+  def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(classic.ClassicConversions.castToImpl(session), plan)
 }

@@ -173,4 +173,46 @@ class S2JoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("country", "city").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(a === b)
   }
+
+  private def countriesAndCities() = {
+    val sp = spark
+    import sp.implicits._
+    val countries = res("/graft/countries.tsv").map(a => (a(0), GeoCodec.encode(Wkt.read(a(2)))))
+    val cities = res("/graft/cities.tsv").map(a => (a(0), GeoCodec.encode(Wkt.read(a(2)))))
+    (countries.toDF("country", "cgeog"), cities.toDF("city", "geog"))
+  }
+
+  test("S2Join plans a cell equi-join without the SQL extension installed") {
+    val sp = spark
+    import sp.implicits._
+    val (cdf, tdf) = countriesAndCities()
+    val tdf2 = tdf.select($"city".as("city2"), $"geog".as("geog2"))
+    val joins = Seq(
+      "intersects" -> S2Join.intersects(cdf, "cgeog", tdf, "geog"),
+      "contains" -> S2Join.contains(cdf, "cgeog", tdf, "geog", level = 3),
+      "dwithin" -> S2Join.dwithin(tdf, "geog", tdf2, "geog2", 500000.0,
+        pairFilter = Some($"city" < $"city2")))
+    joins.foreach { case (name, df) =>
+      val physical = df.queryExecution.executedPlan.toString
+      assert(!physical.contains("BroadcastNestedLoopJoin"), s"$name:\n$physical")
+      assert(physical.contains("Generate"), s"$name has no covering explode:\n$physical")
+    }
+  }
+
+  test("a malformed level setting falls back to the heuristic instead of failing the join") {
+    val sp = spark
+    import sp.implicits._
+    val (cdf, tdf) = countriesAndCities()
+    val tdf2 = tdf.select($"city".as("city2"), $"geog".as("geog2"))
+    def counts(): Seq[Long] = Seq(
+      S2Join.intersects(cdf, "cgeog", tdf, "geog").count(),
+      S2Join.dwithin(tdf, "geog", tdf2, "geog2", 500000.0).count())
+    val want = counts()
+    assert(want.head === 210)
+    for (key <- Seq(SpatialJoinRewrite.CoveringLevelConf, SpatialJoinRewrite.DwithinLevelOffsetConf)) {
+      spark.conf.set(key, "abc")
+      try assert(counts() === want, s"$key=abc")
+      finally spark.conf.unset(key)
+    }
+  }
 }

@@ -1,6 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -159,10 +161,6 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SpatialJoinRewrite.defaultDwithinOffset(cluster, 3, small, small) === 0)
     // one big side is enough to justify the finer key space
     assert(SpatialJoinRewrite.defaultCoveringLevel(cluster, small, big) === 6)
-    // opt-out pins the floors
-    cluster.setConfString(SpatialJoinRewrite.LevelHeuristicConf, "false")
-    assert(SpatialJoinRewrite.defaultCoveringLevel(cluster, big, big) === 4)
-    assert(SpatialJoinRewrite.defaultDwithinOffset(cluster, 3, big, big) === 0)
   }
 
   test("coveringLevel conf changes the plan, not the result") {
@@ -179,5 +177,83 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       assertRewritten(fine)
       assert(fine.collect().map(_.toString).sorted.toSeq === base)
     } finally spark.conf.unset(SpatialJoinRewrite.CoveringLevelConf)
+  }
+
+  /** Node names of the executed plan, adaptive stages included. */
+  private def operators(df: DataFrame): Seq[String] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(_.nodeName)
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("S2Join.intersects and the SQL theta join run one plan") {
+    val s = spark; import s.implicits._
+    val helper = S2Join.intersects(
+        S2Data.countries(spark).select($"name".as("country"), $"geog".as("cgeog")), "cgeog",
+        S2Data.cities(spark).select($"name".as("city"), $"geog"), "geog")
+      .select("country", "city")
+    val sql = spark.sql(
+      """SELECT country, city
+        |FROM (SELECT name AS country, geog AS cgeog FROM s2_data_countries) c
+        |JOIN (SELECT name AS city, geog FROM s2_data_cities) t
+        |  ON s2_intersects(cgeog, geog)""".stripMargin)
+    val want = rows(sql)
+    assert(want.size === 210)
+    assert(rows(helper) === want)
+    assert(operators(helper) === operators(sql))
+  }
+
+  test("S2Join.dwithin with a pair filter equals the SQL dwithin join with the same conjunct") {
+    val s = spark; import s.implicits._
+    val cities = S2Data.cities(spark)
+    val helper = S2Join.dwithin(
+        cities.select($"name".as("name_a"), $"geog".as("ga")), "ga",
+        cities.select($"name".as("name_b"), $"geog".as("gb")), "gb", 500000.0,
+        pairFilter = Some($"name_a" < $"name_b"))
+      .select("name_a", "name_b")
+    val sql = spark.sql(
+      """SELECT a.name, b.name
+        |FROM s2_data_cities a JOIN s2_data_cities b
+        |  ON s2_dwithin(a.geog, b.geog, 500000.0) AND a.name < b.name""".stripMargin)
+    val want = rows(sql)
+    assert(want.nonEmpty)
+    assert(rows(helper) === want)
+    assert(operators(helper) === operators(sql))
+  }
+
+  test("S2Join's explicit level wins over the covering-level setting") {
+    val s = spark; import s.implicits._
+    spark.conf.set(SpatialJoinRewrite.CoveringLevelConf, "8")
+    try {
+      val df = S2Join.contains(
+        S2Data.countries(spark).select($"name".as("country"), $"geog".as("cgeog")), "cgeog",
+        S2Data.cities(spark).select($"name".as("city"), $"geog"), "geog", level = 3)
+      val levels = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(p => p)
+        .flatMap(_.expressions).flatMap(_.collect {
+          case e if e.prettyName == "s2_covering_fixed_level" => e.children(1)
+        })
+      assert(levels.nonEmpty && levels.forall(_ == Literal(3)), s"covering levels: $levels")
+      assert(df.count() === 210)
+    } finally spark.conf.unset(SpatialJoinRewrite.CoveringLevelConf)
+  }
+
+  test("a malformed level setting falls back to the heuristic instead of failing the query") {
+    val intersects =
+      """SELECT c.name, t.name FROM s2_data_countries c JOIN s2_data_cities t
+        |  ON s2_intersects(c.geog, t.geog)""".stripMargin
+    val dwithin =
+      """SELECT a.name, b.name FROM s2_data_cities a JOIN s2_data_cities b
+        |  ON s2_dwithin(a.geog, b.geog, 500000.0)""".stripMargin
+    val want = Seq(intersects, dwithin).map(q => rows(spark.sql(q)))
+    for (key <- Seq(SpatialJoinRewrite.CoveringLevelConf, SpatialJoinRewrite.DwithinLevelOffsetConf);
+         bad <- Seq("abc", "4.5")) {
+      spark.conf.set(key, bad)
+      try {
+        Seq(intersects, dwithin).zip(want).foreach { case (q, w) =>
+          val df = spark.sql(q)
+          assertRewritten(df)
+          assert(rows(df) === w, s"$key=$bad")
+        }
+      } finally spark.conf.unset(key)
+    }
   }
 }
