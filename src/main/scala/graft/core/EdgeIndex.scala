@@ -86,23 +86,35 @@ object EdgeIndex {
 
   /** Inverse of writeTo: rebuild edge endpoints from the decoded geometry
     * (same foreachEdge order as build) and attach the stored buckets.
-    * Falls back to a fresh build if the edge count disagrees. */
+    * Falls back to a fresh build if the edge count disagrees. The level,
+    * each count and each edge ordinal are checked against the data, so a
+    * corrupt index is a [[GeoCodec.DecodeException]]. */
   def readFrom(buf: java.nio.ByteBuffer, shapes: GeoShapes): EdgeIndex = {
     val level = buf.get().toInt
+    if (level < 0 || level > S2CellId.MaxLevel)
+      throw GeoCodec.DecodeException(s"GEOGRAPHY edge index level $level out of range")
     val nEdges = buf.getInt()
     val ss = mutable.ArrayBuffer[S2Point]()
     val es = mutable.ArrayBuffer[S2Point]()
     shapes.foreachEdge { (p, q) => ss += p; es += q; true }
     if (ss.size != nEdges) return build(shapes)
-    val nBuckets = buf.getInt()
+    // per bucket: an 8-byte cell and a 4-byte ordinal count
+    val nBuckets = GeoCodec.readCount(buf, 12, "edge index bucket")
     val buckets = new java.util.HashMap[Long, mutable.ArrayBuffer[Int]](nBuckets * 2)
     var b = 0
     while (b < nBuckets) {
+      GeoCodec.need(buf, 12, "edge index bucket")
       val cell = buf.getLong()
-      val cnt = buf.getInt()
+      val cnt = GeoCodec.readCount(buf, 4, "edge ordinal")
       val idxs = new mutable.ArrayBuffer[Int](cnt)
       var i = 0
-      while (i < cnt) { idxs += buf.getInt(); i += 1 }
+      while (i < cnt) {
+        val e = buf.getInt()
+        if (e < 0 || e >= nEdges)
+          throw GeoCodec.DecodeException(s"GEOGRAPHY edge index names edge $e of $nEdges")
+        idxs += e
+        i += 1
+      }
       buckets.put(cell, idxs)
       b += 1
     }

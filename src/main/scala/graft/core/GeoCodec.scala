@@ -133,14 +133,44 @@ object GeoCodec {
   }
 
   // --------------------------------------------------------------- decode
+  //
+  // Every reader trusts nothing in the blob: the tag, the covering size and
+  // each count are checked against the bytes actually present before
+  // anything is read or allocated (O(1) per header or count), and
+  // collection nesting is capped, so a malformed blob is a DecodeException,
+  // never a raw JVM exception or a fatal Error.
+
+  /** Deepest collection nesting the decoder accepts (the same cap as the
+    * WKB reader); deeper blobs would overflow the stack. */
+  private final val MaxDepth = 64
+
+  @inline private def checkTag(bytes: Array[Byte]): Unit =
+    if (bytes == null || bytes.length < 4) throw DecodeException("GEOGRAPHY blob too short")
+
+  /** Offset of the payload: past the 4-byte tag and the stored covering. */
+  private def payloadOffset(bytes: Array[Byte]): Int = {
+    checkTag(bytes)
+    val n = bytes(2) & 0xff
+    if (4 + 8 * n > bytes.length)
+      throw DecodeException(s"GEOGRAPHY covering of $n cells overruns a ${bytes.length}-byte blob")
+    4 + 8 * n
+  }
+
+  private def payload(bytes: Array[Byte]): ByteBuffer = {
+    val off = payloadOffset(bytes)
+    ByteBuffer.wrap(bytes, off, bytes.length - off).order(ByteOrder.LITTLE_ENDIAN)
+  }
 
   /** Tag-only peek: (kind, flags, coveringSize). */
-  @inline def kindOf(bytes: Array[Byte]): Byte = bytes(0)
-  @inline def isEmptyBlob(bytes: Array[Byte]): Boolean = (bytes(1) & FlagEmpty) != 0
+  @inline def kindOf(bytes: Array[Byte]): Byte = { checkTag(bytes); bytes(0) }
+  @inline def isEmptyBlob(bytes: Array[Byte]): Boolean = {
+    checkTag(bytes)
+    (bytes(1) & FlagEmpty) != 0
+  }
 
   /** Covering cells without decoding geometry. Empty array if none stored. */
   def coveringOf(bytes: Array[Byte]): Array[Long] = {
-    val n = bytes(2) & 0xff
+    val n = (payloadOffset(bytes) - 4) / 8
     val out = new Array[Long](n)
     val buf = ByteBuffer.wrap(bytes, 4, 8 * n).order(ByteOrder.LITTLE_ENDIAN)
     var i = 0
@@ -150,59 +180,73 @@ object GeoCodec {
 
   /** Cell-center fast path: the id without decoding (12-byte form). */
   def cellCenterIdOf(bytes: Array[Byte]): Long = {
-    val n = bytes(2) & 0xff
-    ByteBuffer.wrap(bytes, 4 + 8 * n, 8).order(ByteOrder.LITTLE_ENDIAN).getLong()
+    val buf = payload(bytes)
+    need(buf, 8, "cell id")
+    buf.getLong()
   }
 
   def decode(bytes: Array[Byte]): Geography = {
-    if (bytes == null || bytes.length < 4) throw DecodeException("GEOGRAPHY blob too short")
-    val kind = bytes(0)
-    val n = bytes(2) & 0xff
-    val buf = ByteBuffer.wrap(bytes, 4 + 8 * n, bytes.length - 4 - 8 * n)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    decodePayload(kind, buf)
+    val buf = payload(bytes)
+    decodePayload(bytes(0), buf, 0)
   }
 
   /** Decode to the predicate-ready shape view; for prepared blobs the
     * serialized edge index is reattached instead of rebuilt. */
   def decodeShapes(bytes: Array[Byte]): GeoShapes = {
-    if (bytes == null || bytes.length < 4) throw DecodeException("GEOGRAPHY blob too short")
-    val kind = bytes(0)
-    val n = bytes(2) & 0xff
-    val buf = ByteBuffer.wrap(bytes, 4 + 8 * n, bytes.length - 4 - 8 * n)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    val g = decodePayload(kind, buf)
+    val buf = payload(bytes)
+    val g = decodePayload(bytes(0), buf, 0)
     val shapes = new GeoShapes(g)
     if ((bytes(1) & FlagPrepared) != 0 && buf.remaining() >= 9)
       shapes.attachEdgeIndex(EdgeIndex.readFrom(buf, shapes))
     shapes
   }
 
-  private def decodePayload(kind: Byte, buf: ByteBuffer): Geography = kind match {
-    case KindCellCenter => CellCenter(buf.getLong())
+  @inline private[core] def need(buf: ByteBuffer, bytes: Long, what: String): Unit =
+    if (bytes > buf.remaining())
+      throw DecodeException(s"GEOGRAPHY $what needs $bytes bytes, ${buf.remaining()} left")
+
+  /** A count followed by that many elements of at least `minBytes` each:
+    * negative counts and counts the remaining bytes cannot hold are
+    * rejected before anything is allocated. */
+  private[core] def readCount(buf: ByteBuffer, minBytes: Int, what: String): Int = {
+    need(buf, 4, "count")
+    val n = buf.getInt()
+    if (n < 0 || n.toLong * minBytes > buf.remaining())
+      throw DecodeException(s"GEOGRAPHY $what count $n does not fit the ${buf.remaining()} bytes left")
+    n
+  }
+
+  private def decodePayload(kind: Byte, buf: ByteBuffer, depth: Int): Geography = kind match {
+    case KindCellCenter =>
+      need(buf, 8, "cell id")
+      CellCenter(buf.getLong())
     case KindPoint =>
-      val n = buf.getInt()
+      val n = readCount(buf, 24, "point")
       Points(Vector.fill(n)(getPoint(buf)))
     case KindPolyline =>
-      val n = buf.getInt()
+      val n = readCount(buf, 4, "polyline")
       Polylines(Vector.fill(n) {
-        val m = buf.getInt()
+        val m = readCount(buf, 24, "vertex")
         Vector.fill(m)(getPoint(buf))
       })
     case KindPolygon =>
-      val n = buf.getInt()
+      val n = readCount(buf, 4, "polygon")
       Polygons(Vector.fill(n) {
-        val nr = buf.getInt()
+        val nr = readCount(buf, 4, "ring")
         Vector.fill(nr) {
-          val m = buf.getInt()
+          val m = readCount(buf, 24, "vertex")
           Vector.fill(m)(getPoint(buf))
         }
       })
     case KindCollection =>
-      val n = buf.getInt()
+      if (depth >= MaxDepth)
+        throw DecodeException(s"GEOGRAPHY collection nesting deeper than $MaxDepth levels")
+      // each member is at least a kind byte and a 4-byte count
+      val n = readCount(buf, 5, "collection member")
       Collection(Vector.fill(n) {
+        need(buf, 1, "member kind")
         val k = buf.get()
-        decodePayload(k, buf)
+        decodePayload(k, buf, depth + 1)
       })
     case other => throw DecodeException(s"Unknown GEOGRAPHY kind: $other")
   }

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * static JVM method invocation on the kernel, keeping the codegen span
  * unbroken (the brief's preference order: native Expression > UDF).
  *
- * SQL surface only — `S2Functions.register` installs these over the UDF
- * fallbacks; the Column DSL keeps the UDFs (identical semantics).
+ * `S2Functions.register` installs these as the only implementation of
+ * their names; DataFrame code reaches them through `call_function`.
  */
 object CellExpressions {
 
@@ -130,10 +130,9 @@ object CellExpressions {
     override def prettyName: String = "s2_cell_token"
   }
 
-  /** Cast-graph natives (SURVEY §1.4): the cell <-> geography casts were the
-    * last SQL-surface functions riding ScalaUDF; these keep them inside the
-    * codegen span with the exact UDF semantics (incl. the reference's
-    * "Can't convert ..." / "Cell not valid <...>" error texts). */
+  /** Cast-graph natives (SURVEY §1.4): the cell <-> geography casts, inside
+    * the codegen span, with the reference's "Can't convert ..." /
+    * "Cell not valid <...>" error texts. */
   case class S2CellCenterToGeogExpr(child: Expression) extends UnaryExpression {
     override def nullIntolerant: Boolean = true
     override def dataType: DataType = BinaryType
@@ -200,7 +199,7 @@ object CellExpressions {
     override def prettyName: String = "s2_cellunion_from_list"
   }
 
-  /** Install native builders over the UDF fallbacks on the SQL surface. */
+  /** Install the native builders in the session's function registry. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def put1(name: String, f: Expression => Expression): Unit =

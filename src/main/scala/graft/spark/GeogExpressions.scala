@@ -13,22 +13,96 @@ import graft.core._
  * Static, primitive-typed kernel entry points for whole-stage codegen: the
  * generated Java calls these directly (no Scala-function boxing, no
  * Option allocation, no catalyst<->scala converters). Null handling stays in
- * the expression layer (nullIntolerant), preserving the null-propagation
- * contract of the UDF surface.
+ * the expression layer (nullIntolerant): null in, null out, for predicates
+ * too (null, not false).
  */
 object S2Native {
+
+  /** Per-executor decode cache: repeated predicate evaluation against the
+    * same blob (broadcast build sides, VALUES-joined polygons) reuses the
+    * decoded shapes + lazy edge index instead of re-decoding per row —
+    * the Spark analogue of the reference's per-chunk decoder reuse
+    * (s2_binary_index_ops.cpp:290-292) + prepared-geometry dispatch. */
+  private final class BytesKey(val bytes: Array[Byte]) {
+    private val h = java.util.Arrays.hashCode(bytes)
+    override def hashCode: Int = h
+    override def equals(o: Any): Boolean = o match {
+      case k: BytesKey => java.util.Arrays.equals(bytes, k.bytes)
+      case _ => false
+    }
+  }
+  /** Per-thread LRU of decoded shapes. Thread-local on purpose: a shared
+    * map is contended by every executor thread on every predicate call, and
+    * the previous clear-on-overflow policy turned >cap distinct blobs into
+    * a cache-clear storm (observed: a 2880-distinct-point grid against a
+    * 512 cap). An access-ordered LinkedHashMap evicts one entry at a time
+    * and is touched by exactly one thread, so the hot path is a plain hash
+    * lookup with no synchronization. Worst case per executor thread is
+    * cap × largest-prepared-blob decoded size — bounded, and duplicated
+    * decode across threads is the accepted cost of zero contention. */
+  private val ShapeCacheCap = 512
+  private val shapeCache = new ThreadLocal[java.util.LinkedHashMap[BytesKey, GeoShapes]] {
+    override def initialValue(): java.util.LinkedHashMap[BytesKey, GeoShapes] =
+      new java.util.LinkedHashMap[BytesKey, GeoShapes](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[BytesKey, GeoShapes]): Boolean =
+          size() > ShapeCacheCap
+      }
+  }
+
+  /** Two-slot per-thread identity cache in front of the value cache: in a
+    * broadcast nested-loop or hash join the STREAM side's blob is the same
+    * JVM array instance across the whole inner loop, so an `eq` check
+    * replaces a full-array hash+compare per build row. Two slots because a
+    * binary predicate alternates (streamGeog, buildGeog) lookups. */
+  private val identCache = new ThreadLocal[Array[AnyRef]] {
+    override def initialValue(): Array[AnyRef] = new Array[AnyRef](4)
+  }
+
+  private def shapes(b: Array[Byte]): GeoShapes = {
+    val tl = identCache.get()
+    if (tl(0) eq b) return tl(1).asInstanceOf[GeoShapes]
+    if (tl(2) eq b) return tl(3).asInstanceOf[GeoShapes]
+    val s = shapesByValue(b)
+    tl(2) = tl(0); tl(3) = tl(1)
+    tl(0) = b; tl(1) = s
+    s
+  }
+
+  private def shapesByValue(b: Array[Byte]): GeoShapes = {
+    // cache every PREPARED blob (the user explicitly asked for reuse —
+    // broadcast build sides under 4 KiB must not re-decode per row);
+    // unprepared blobs only when decode+index clearly beats hashing the key
+    if (!GeoCodec.isPrepared(b) && b.length < 4096) return GeoCodec.decodeShapes(b)
+    val cache = shapeCache.get()
+    val key = new BytesKey(b)
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val s = GeoCodec.decodeShapes(b)
+      cache.put(key, s)
+      s
+    }
+  }
+
+  /** Prepared blobs print their index form, not WKT (reference:
+    * s2_functions_io.cpp:188-192, functions_io.test:43-52). */
+  private def printBlob(b: Array[Byte], precision: Int): String =
+    if (GeoCodec.isPrepared(b)) s"<S2ShapeIndex ${b.length} b>"
+    else if (precision < 0) Wkt.write(GeoCodec.decode(b))
+    else Wkt.write(GeoCodec.decode(b), precision)
+
   def intersects(a: Array[Byte], b: Array[Byte]): Boolean = {
     if (GeoCodec.isEmptyBlob(a) || GeoCodec.isEmptyBlob(b)) false
     else if (!Covering.unionsIntersect(GeoCodec.coveringOf(a), GeoCodec.coveringOf(b))) false
-    else Relate.intersects(S2Functions.shapesOf(a), S2Functions.shapesOf(b))
+    else Relate.intersects(shapes(a), shapes(b))
   }
 
   def dwithin(a: Array[Byte], b: Array[Byte], meters: Double): Boolean =
-    Relate.dwithin(S2Functions.shapesOf(a), S2Functions.shapesOf(b), meters)
+    Relate.dwithin(shapes(a), shapes(b), meters)
 
   def contains(a: Array[Byte], b: Array[Byte]): Boolean = {
     if (GeoCodec.isEmptyBlob(a) || GeoCodec.isEmptyBlob(b)) false
-    else Relate.contains(S2Functions.shapesOf(a), S2Functions.shapesOf(b))
+    else Relate.contains(shapes(a), shapes(b))
   }
 
   def geogPoint(lon: Double, lat: Double): Array[Byte] =
@@ -45,18 +119,18 @@ object S2Native {
       RegionCoverer.coverFixedLevel(GeoCodec.decode(b), level), ring))
 
   def formatBlob(b: Array[Byte], precision: Int): UTF8String =
-    UTF8String.fromString(S2Functions.printBlobPublic(b, precision))
+    UTF8String.fromString(printBlob(b, precision))
 
   def asText(b: Array[Byte]): UTF8String =
-    UTF8String.fromString(S2Functions.printBlobPublic(b, -1))
+    UTF8String.fromString(printBlob(b, -1))
 
   def distance(a: Array[Byte], b: Array[Byte]): Double =
-    Relate.distanceMeters(S2Functions.shapesOf(a), S2Functions.shapesOf(b))
+    Relate.distanceMeters(shapes(a), shapes(b))
 
   def area(b: Array[Byte]): Double = S2Measure.areaMeters2(GeoCodec.decode(b))
 
   def equalsGeog(a: Array[Byte], b: Array[Byte]): Boolean =
-    Relate.equalsGeog(S2Functions.shapesOf(a), S2Functions.shapesOf(b))
+    Relate.equalsGeog(shapes(a), shapes(b))
 
   def mayIntersect(a: Array[Byte], b: Array[Byte]): Boolean =
     !GeoCodec.isEmptyBlob(a) && !GeoCodec.isEmptyBlob(b) &&
@@ -73,10 +147,9 @@ object S2Native {
   def isValid(b: Array[Byte]): Boolean = Validation.findError(GeoCodec.decode(b)).isEmpty
 
   def maxDistance(a: Array[Byte], b: Array[Byte]): Double =
-    Relate.maxDistanceMeters(S2Functions.shapesOf(a), S2Functions.shapesOf(b))
+    Relate.maxDistanceMeters(shapes(a), shapes(b))
 
-  // ---- cast-graph kernels (SURVEY §1.4): cell <-> geography casts, promoted
-  // from the ScalaUDF fallbacks so the SQL surface stays inside codegen
+  // ---- cast-graph kernels (SURVEY §1.4): cell <-> geography casts
   def cellCenterToGeog(id: Long): Array[Byte] =
     GeoCodec.encode(graft.core.Geography.CellCenter(id))
 
@@ -123,7 +196,7 @@ object S2Native {
     * once per INPUT row by the join builders, before the covering explode,
     * so the per-candidate-pair refine never re-decodes point blobs. */
   def pointXyz(b: Array[Byte]): ArrayData = {
-    val s = S2Functions.shapesOf(b)
+    val s = shapes(b)
     if (s.points.size == 1 && s.lines.isEmpty && s.polyGroups.isEmpty) {
       val p = s.points(0)
       new GenericArrayData(Array(p.x, p.y, p.z))
@@ -135,8 +208,9 @@ object S2Native {
  * Native Catalyst expressions for the hot geography predicates and
  * constructors (SURVEY §2.4/§2.8 refine path): these sit inside every
  * cover-then-refine join and every scan filter, so they get doGenCode and
- * live inside WholeStageCodegen instead of breaking the span with a
- * ScalaUDF. Installed over the UDF fallbacks on the SQL surface; the
+ * live inside WholeStageCodegen instead of breaking the span with a UDF.
+ * Each builder is the only implementation of its name, on the SQL surface
+ * and (via `call_function`) the DataFrame surface alike; the
  * constant-argument contracts of the reference are enforced at build time
  * with the reference's exact error messages
  * (src/s2_functions_io.cpp:166-169, src/s2_bounds.cpp:91-99).
@@ -346,7 +420,7 @@ object GeogExpressions {
     override def prettyName: String = "s2_" + method.toLowerCase
   }
 
-  /** Install native builders over the UDF fallbacks on the SQL surface,
+  /** Install the native builders in the session's function registry,
     * enforcing the reference's constant-argument contracts. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

@@ -149,11 +149,8 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     * `__cell` column). */
   private val RewrittenTag = TreeNodeTag[Boolean]("graft.spatialJoinRewritten")
 
-  private def isFn(u: ScalaUDF, fn: AnyRef, name: String): Boolean =
-    (u.function.asInstanceOf[AnyRef] eq fn) || u.udfName.contains(name)
-
   /** Constant radius of a dwithin conjunct: fold any numeric literal form
-    * (Double, Float, Int/Long, Decimal — `lit(300000)` reaches the UDF as
+    * (Double, Float, Int/Long, Decimal — `lit(300000)` reaches the predicate as
     * an integer) to meters. Radius 0 is a legal dwithin (= intersects). */
   private def foldedMeters(e: Expression): Option[Double] = {
     if (!e.foldable) return scala.None
@@ -166,24 +163,17 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     v.filter(d => d >= 0 && !d.isNaN)
   }
 
-  /** Recognize our registered predicate UDFs by function identity (Column
-    * DSL) or registered name (SQL surface). Returns (geogA, geogB,
-    * probeMeters): probeMeters is None for intersects/contains, the constant
-    * radius for dwithin. The predicate expression itself is reused verbatim
-    * as the refine filter, so argument order (contains is asymmetric) is
-    * never disturbed. */
+  /** Recognize the native spatial predicate expressions, the only form of
+    * these names. Returns (geogA, geogB, probeMeters): probeMeters is None
+    * for intersects/contains, the constant radius for dwithin. The
+    * predicate expression itself is reused verbatim as the refine filter,
+    * so argument order (contains is asymmetric) is never disturbed. */
   private def spatialPredicate(e: Expression): Option[(Expression, Expression, Option[Double])] =
     e match {
       case GeogExpressions.S2IntersectsExpr(g1, g2) => Some((g1, g2, None))
       case GeogExpressions.S2ContainsExpr(g1, g2) => Some((g1, g2, None))
       case GeogExpressions.S2DwithinExpr(g1, g2, m) =>
         foldedMeters(m).map(d => (g1, g2, Some(d)))
-      case u: ScalaUDF if u.children.size == 2 &&
-          (isFn(u, S2Functions.intersects, "s2_intersects") ||
-            isFn(u, S2Functions.contains, "s2_contains")) =>
-        Some((u.children(0), u.children(1), None))
-      case u: ScalaUDF if u.children.size == 3 && isFn(u, S2Functions.dwithin, "s2_dwithin") =>
-        foldedMeters(u.children(2)).map(d => (u.children(0), u.children(1), Some(d)))
       case _ => None
     }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Ann, Boilerplate, Bpe, Classifier, Dedup, Multimodal, Sampling, TextAnalysis}
-import S2Functions.S2
 
 /**
  * The driver-facing query inventory: one entry per operator

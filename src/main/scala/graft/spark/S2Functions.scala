@@ -1,7 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.SparkSession
 
 import graft.core._
 
@@ -15,86 +14,19 @@ import graft.core._
  * (GeoCodec); S2_CELL / S2_CELL_CENTER are LongType (sign-flip via
  * s2_cell_sortkey for unsigned order); S2_CELL_UNION is ArrayType(LongType).
  *
- * Registration is via `spark.udf.register`, so both the SQL surface
- * (`spark.sql("SELECT s2_intersects(a, b) ...")`) and the typed Column
- * DSL (`S2.intersects($"a", $"b")`) work. Catalyst still drives pushdown,
- * pruning and join planning around these expressions.
+ * Each `s2_*` name has exactly one implementation. The hot predicates,
+ * measures, accessors and cell casts are native Catalyst expressions
+ * ([[GeogExpressions]], [[CellExpressions]]); the names below are the rest,
+ * registered via `spark.udf.register`. DataFrame code reaches either form
+ * by name through `call_function`. Catalyst still drives pushdown, pruning
+ * and join planning around both.
  */
 object S2Functions {
 
   // ------------------------------------------------------------ kernel fns
-  // Shared, stateless, serializable function values. Each closes over
-  // nothing; the kernel objects are JVM singletons per executor.
-
-  /** Per-executor decode cache: repeated predicate evaluation against the
-    * same blob (broadcast build sides, VALUES-joined polygons) reuses the
-    * decoded shapes + lazy edge index instead of re-decoding per row —
-    * the Spark analogue of the reference's per-chunk decoder reuse
-    * (s2_binary_index_ops.cpp:290-292) + prepared-geometry dispatch. */
-  private final class BytesKey(val bytes: Array[Byte]) {
-    private val h = java.util.Arrays.hashCode(bytes)
-    override def hashCode: Int = h
-    override def equals(o: Any): Boolean = o match {
-      case k: BytesKey => java.util.Arrays.equals(bytes, k.bytes)
-      case _ => false
-    }
-  }
-  /** Per-thread LRU of decoded shapes. Thread-local on purpose: a shared
-    * map is contended by every executor thread on every predicate call, and
-    * the previous clear-on-overflow policy turned >cap distinct blobs into
-    * a cache-clear storm (observed: a 2880-distinct-point grid against a
-    * 512 cap). An access-ordered LinkedHashMap evicts one entry at a time
-    * and is touched by exactly one thread, so the hot path is a plain hash
-    * lookup with no synchronization. Worst case per executor thread is
-    * cap × largest-prepared-blob decoded size — bounded, and duplicated
-    * decode across threads is the accepted cost of zero contention. */
-  private val ShapeCacheCap = 512
-  private val shapeCache = new ThreadLocal[java.util.LinkedHashMap[BytesKey, GeoShapes]] {
-    override def initialValue(): java.util.LinkedHashMap[BytesKey, GeoShapes] =
-      new java.util.LinkedHashMap[BytesKey, GeoShapes](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[BytesKey, GeoShapes]): Boolean =
-          size() > ShapeCacheCap
-      }
-  }
-
-  /** Kernel-side access for the native codegen expressions (S2Native). */
-  private[spark] def shapesOf(b: Array[Byte]): GeoShapes = shapes(b)
-  private[spark] def printBlobPublic(b: Array[Byte], p: Int): String = printBlob(b, p)
-
-  /** Two-slot per-thread identity cache in front of the value cache: in a
-    * broadcast nested-loop or hash join the STREAM side's blob is the same
-    * JVM array instance across the whole inner loop, so an `eq` check
-    * replaces a full-array hash+compare per build row. Two slots because a
-    * binary predicate alternates (streamGeog, buildGeog) lookups. */
-  private val identCache = new ThreadLocal[Array[AnyRef]] {
-    override def initialValue(): Array[AnyRef] = new Array[AnyRef](4)
-  }
-
-  private def shapes(b: Array[Byte]): GeoShapes = {
-    val tl = identCache.get()
-    if (tl(0) eq b) return tl(1).asInstanceOf[GeoShapes]
-    if (tl(2) eq b) return tl(3).asInstanceOf[GeoShapes]
-    val s = shapesByValue(b)
-    tl(2) = tl(0); tl(3) = tl(1)
-    tl(0) = b; tl(1) = s
-    s
-  }
-
-  private def shapesByValue(b: Array[Byte]): GeoShapes = {
-    // cache every PREPARED blob (the user explicitly asked for reuse —
-    // broadcast build sides under 4 KiB must not re-decode per row);
-    // unprepared blobs only when decode+index clearly beats hashing the key
-    if (!GeoCodec.isPrepared(b) && b.length < 4096) return GeoCodec.decodeShapes(b)
-    val cache = shapeCache.get()
-    val key = new BytesKey(b)
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val s = GeoCodec.decodeShapes(b)
-      cache.put(key, s)
-      s
-    }
-  }
+  // Shared, stateless, serializable function values for the names that have
+  // no native expression. Each closes over nothing; the kernel objects are
+  // JVM singletons per executor.
 
   val geogFromText: String => Array[Byte] =
     (wkt: String) => if (wkt == null) null else GeoCodec.encode(Wkt.read(wkt, validate = true))
@@ -104,82 +36,18 @@ object S2Functions {
     (b: Array[Byte]) => if (b == null) null else GeoCodec.encode(Wkb.read(b, validate = true))
   val geogFromWkbNoValidate: Array[Byte] => Array[Byte] =
     (b: Array[Byte]) => if (b == null) null else GeoCodec.encode(Wkb.read(b, validate = false))
-  /** Prepared blobs print their index form, not WKT (reference:
-    * s2_functions_io.cpp:188-192, functions_io.test:43-52). */
-  private def printBlob(b: Array[Byte], precision: Int): String =
-    if (GeoCodec.isPrepared(b)) s"<S2ShapeIndex ${b.length} b>"
-    else if (precision < 0) Wkt.write(GeoCodec.decode(b))
-    else Wkt.write(GeoCodec.decode(b), precision)
-
-  val asText: Array[Byte] => String =
-    (b: Array[Byte]) => if (b == null) null else printBlob(b, -1)
-  val format: (Array[Byte], Int) => String =
-    (b: Array[Byte], p: Int) => if (b == null) null else printBlob(b, p)
   val asWkb: Array[Byte] => Array[Byte] =
     (b: Array[Byte]) => if (b == null) null else Wkb.write(GeoCodec.decode(b))
   val prepare: Array[Byte] => Array[Byte] =
     (b: Array[Byte]) => if (b == null) null else GeoCodec.prepare(b)
 
   // Null discipline (reference: DuckDB executors null-propagate for every
-  // scalar, src/s2_accessors.cpp:44 Execute templates): null in -> null out,
-  // for predicates too (null, not false). Primitive-returning functions wrap
-  // in Option so Spark surfaces a true SQL NULL; reference-returning ones
-  // return null directly.
+  // scalar, src/s2_accessors.cpp:44 Execute templates): null in -> null out.
+  // Primitive-returning functions wrap in Option so Spark surfaces a true
+  // SQL NULL; reference-returning ones return null directly.
 
-  val isEmpty: Array[Byte] => Option[Boolean] =
-    (b: Array[Byte]) => if (b == null) None else Some(GeoCodec.isEmptyBlob(b))
-  val isValid: Array[Byte] => Option[Boolean] =
-    (b: Array[Byte]) => if (b == null) None else Some(Validation.findError(GeoCodec.decode(b)).isEmpty)
   val isValidReason: Array[Byte] => String =
     (b: Array[Byte]) => if (b == null) null else Validation.findError(GeoCodec.decode(b)).getOrElse("")
-  val area: Array[Byte] => Option[Double] =
-    (b: Array[Byte]) => if (b == null) None else Some(S2Measure.areaMeters2(GeoCodec.decode(b)))
-  val perimeter: Array[Byte] => Option[Double] =
-    (b: Array[Byte]) => if (b == null) None else Some(S2Measure.perimeterMeters(GeoCodec.decode(b)))
-  val length: Array[Byte] => Option[Double] =
-    (b: Array[Byte]) => if (b == null) None else Some(S2Measure.lengthMeters(GeoCodec.decode(b)))
-  val x: Array[Byte] => Option[Double] =
-    (b: Array[Byte]) => if (b == null) None else Some(S2Measure.x(GeoCodec.decode(b)))
-  val y: Array[Byte] => Option[Double] =
-    (b: Array[Byte]) => if (b == null) None else Some(S2Measure.y(GeoCodec.decode(b)))
-  val dimension: Array[Byte] => Option[Int] =
-    (b: Array[Byte]) => if (b == null) None else Some(GeoCodec.decode(b).dimension)
-  val numPoints: Array[Byte] => Option[Int] =
-    (b: Array[Byte]) => if (b == null) None else Some(GeoCodec.decode(b).numPoints)
-
-  val distance: (Array[Byte], Array[Byte]) => Option[Double] =
-    (a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) None else Some(Relate.distanceMeters(shapes(a), shapes(b)))
-  val maxDistance: (Array[Byte], Array[Byte]) => Option[Double] =
-    (a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) None else Some(Relate.maxDistanceMeters(shapes(a), shapes(b)))
-  val dwithin: (Array[Byte], Array[Byte], Double) => Option[Boolean] =
-    (a: Array[Byte], b: Array[Byte], m: Double) =>
-      if (a == null || b == null) None else Some(Relate.dwithin(shapes(a), shapes(b), m))
-
-  val intersects: (Array[Byte], Array[Byte]) => Option[Boolean] =
-    (a: Array[Byte], b: Array[Byte]) => {
-      if (a == null || b == null) None
-      // covering prefilter from the stored tags — no geometry decode when
-      // coverings are disjoint (reference: s2_binary_index_ops.cpp:450-461)
-      else if (GeoCodec.isEmptyBlob(a) || GeoCodec.isEmptyBlob(b)) Some(false)
-      else if (!Covering.unionsIntersect(GeoCodec.coveringOf(a), GeoCodec.coveringOf(b))) Some(false)
-      else Some(Relate.intersects(shapes(a), shapes(b)))
-    }
-  val contains: (Array[Byte], Array[Byte]) => Option[Boolean] =
-    (a: Array[Byte], b: Array[Byte]) => {
-      if (a == null || b == null) None
-      else if (GeoCodec.isEmptyBlob(a) || GeoCodec.isEmptyBlob(b)) Some(false)
-      else Some(Relate.contains(shapes(a), shapes(b)))
-    }
-  val equalsGeog: (Array[Byte], Array[Byte]) => Option[Boolean] =
-    (a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) None else Some(Relate.equalsGeog(shapes(a), shapes(b)))
-  val mayIntersect: (Array[Byte], Array[Byte]) => Option[Boolean] =
-    (a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) None
-      else Some(!GeoCodec.isEmptyBlob(a) && !GeoCodec.isEmptyBlob(b) &&
-        Covering.unionsIntersect(GeoCodec.coveringOf(a), GeoCodec.coveringOf(b)))
 
   /** Overlay prefilter from the STORED blob coverings — skips the per-row
     * re-cover of both operands inside Overlay (empty blobs don't matter:
@@ -207,44 +75,20 @@ object S2Functions {
   // for the inline blob-prefilter covering (GeoCodec.encode)
   val covering: Array[Byte] => Array[Long] =
     (b: Array[Byte]) => if (b == null) null else RegionCoverer.cover(GeoCodec.decode(b))
-  val coveringFixedLevel: (Array[Byte], Int) => Array[Long] =
-    (b: Array[Byte], lvl: Int) =>
-      if (b == null) null else RegionCoverer.coverFixedLevel(GeoCodec.decode(b), lvl)
-  /** Fused covering + ring-`r` probe set (dwithin join left side); one UDF
-    * call so the catalyst rewrite needs no UDF-in-UDF nesting. */
-  val coveringFixedLevelWithRing: (Array[Byte], Int, Int) => Array[Long] =
-    (b: Array[Byte], lvl: Int, ring: Int) =>
-      if (b == null) null
-      else cellsWithNeighborsRing(RegionCoverer.coverFixedLevel(GeoCodec.decode(b), lvl), ring)
-
-  /** Ring-1 form (8-neighborhood), the offset-0 default. */
-  val coveringFixedLevelWithNeighbors: (Array[Byte], Int) => Array[Long] =
-    (b: Array[Byte], lvl: Int) => coveringFixedLevelWithRing(b, lvl, 1)
 
   // ---- cell ops (pure long math; no geometry decode)
-  val cellFromLonLat: (Double, Double) => Long =
-    (lon: Double, lat: Double) => S2CellId.fromLonLatDegrees(lon, lat)
   val cellFromWkb: Array[Byte] => Option[Long] =
     (b: Array[Byte]) => if (b == null) None else Some(Wkb.cellFromWkb(b))
   val arbitraryCellFromWkb: Array[Byte] => Option[Long] =
     (b: Array[Byte]) => if (b == null) None else Some(Wkb.arbitraryCellFromWkb(b))
-  val cellToken: Long => String = (id: Long) => S2CellId.toToken(id)
   val cellFromToken: String => Option[Long] =
     (s: String) => if (s == null) None else Some(S2CellId.fromToken(s))
-  val cellLevel: Long => Int = (id: Long) => if (S2CellId.isValid(id)) S2CellId.level(id) else -1
-  val cellContains: (Long, Long) => Boolean = (a: Long, b: Long) => S2CellId.contains(a, b)
   val cellIntersects: (Long, Long) => Boolean = (a: Long, b: Long) => S2CellId.intersects(a, b)
   val cellChild: (Long, Int) => Long = (id: Long, k: Int) => S2CellId.childChecked(id, k)
-  val cellParent: (Long, Int) => Long = (id: Long, lvl: Int) => S2CellId.parentChecked(id, lvl)
   val cellEdgeNeighbor: (Long, Int) => Long =
     (id: Long, k: Int) =>
       if (!S2CellId.isValid(id) || k < 0 || k > 3) S2CellId.Sentinel
       else S2CellId.edgeNeighbors(id)(k)
-  val cellRangeMin: Long => Long =
-    (id: Long) => if (S2CellId.isValid(id)) S2CellId.rangeMin(id) else S2CellId.Sentinel
-  val cellRangeMax: Long => Long =
-    (id: Long) => if (S2CellId.isValid(id)) S2CellId.rangeMax(id) else S2CellId.Sentinel
-  val cellSortKey: Long => Long = (id: Long) => S2CellId.sortKey(id)
   val cellDebug: Long => String = (id: Long) => S2CellId.toDebugString(id)
   val cellAllNeighbors: Long => Array[Long] =
     (id: Long) => if (S2CellId.isValid(id)) S2CellId.allNeighbors(id) else Array.empty[Long]
@@ -290,129 +134,12 @@ object S2Functions {
         res
       }
 
-  /** 8-neighborhood probe set (ring 1) — kept as the common-case surface. */
-  val cellsWithNeighbors: Array[Long] => Array[Long] =
-    (ids: Array[Long]) => cellsWithNeighborsRing(ids, 1)
   val cellFromDebug: String => Option[Long] =
     (s: String) => if (s == null) None else Some(S2CellId.fromDebugString(s))
   val cellVertex: (Long, Int) => Array[Byte] =
     (id: Long, k: Int) =>
       if (!S2CellId.isValid(id) || k < 0 || k > 3) GeoCodec.encode(Geography.emptyPoint)
       else GeoCodec.encode(Geography.Points(Vector(S2CellId.vertices(id)(k))))
-
-  // ---- casts (reference cast graph, SURVEY §1.4; explicit functions here)
-  val cellCenterToGeog: Long => Array[Byte] =
-    (id: Long) => GeoCodec.encode(Geography.CellCenter(id))
-  val cellToGeog: Long => Array[Byte] =
-    (id: Long) =>
-      if (!S2CellId.isValid(id)) GeoCodec.encode(Geography.Polygons(Vector.empty))
-      else GeoCodec.encode(Geography.Polygons(Vector(Vector(S2CellId.vertices(id).toVector))))
-  val geogToCellCenter: Array[Byte] => Option[Long] =
-    (b: Array[Byte]) => {
-      if (b == null) None
-      else if (GeoCodec.isEmptyBlob(b)) Some(S2CellId.Sentinel)
-      else if (GeoCodec.kindOf(b) == GeoCodec.KindCellCenter) Some(GeoCodec.cellCenterIdOf(b))
-      else S2Measure.singlePoint(GeoCodec.decode(b)) match {
-        case Some(p) => Some(S2CellId.fromPoint(p.x, p.y, p.z))
-        case None => throw new IllegalArgumentException(
-          "Can't convert geography that is not empty nor a single point to S2_CELL_CENTER")
-      }
-    }
-  val cellUnionToGeog: Array[Long] => Array[Byte] =
-    (ids: Array[Long]) => {
-      if (ids == null) null
-      else {
-        val valid = ids.filter(S2CellId.isValid)
-        if (valid.isEmpty) GeoCodec.encode(Geography.Polygons(Vector.empty))
-        else GeoCodec.encode(Geography.Polygons(
-          valid.toVector.map(id => Vector(S2CellId.vertices(id).toVector))))
-      }
-    }
-  val cellUnionNormalize: Array[Long] => Array[Long] =
-    (ids: Array[Long]) => if (ids == null) null else Covering.normalize(ids)
-  /** Typed LIST(BIGINT) -> S2_CELL_UNION cast: per-cell validation with the
-    * reference's error message, then S2CellUnion-style normalization
-    * (reference: src/s2_cell_ops.cpp:95-132, 1054-1061). */
-  val cellUnionFromList: Array[Long] => Array[Long] =
-    (ids: Array[Long]) =>
-      if (ids == null) null
-      else {
-        var i = 0
-        while (i < ids.length) {
-          if (!S2CellId.isValid(ids(i)))
-            throw new IllegalArgumentException(
-              s"Cell not valid <${S2CellId.toDebugString(ids(i))}>")
-          i += 1
-        }
-        Covering.normalize(ids)
-      }
-
-  /** Point constructor (BigQuery ST_GEOGPOINT analogue; the reference reaches
-    * points via WKT or cell casts — this is the Spark-friendly direct path). */
-  val geogPoint: (Double, Double) => Array[Byte] =
-    (lon: Double, lat: Double) => GeoCodec.encode(Geography.point(lon, lat))
-
-  // ------------------------------------------------------------ column DSL
-
-  object S2 {
-    val s2_geogfromtext = udf(geogFromText)
-    val s2_geogfromtext_novalidate = udf(geogFromTextNoValidate)
-    val s2_geogfromwkb = udf(geogFromWkb)
-    val s2_geogfromwkb_novalidate = udf(geogFromWkbNoValidate)
-    val s2_astext = udf(asText)
-    val s2_format = udf(format)
-    val s2_aswkb = udf(asWkb)
-    val s2_prepare = udf(prepare)
-    val s2_isempty = udf(isEmpty)
-    val s2_is_valid = udf(isValid)
-    val s2_is_valid_reason = udf(isValidReason)
-    val s2_area = udf(area)
-    val s2_perimeter = udf(perimeter)
-    val s2_length = udf(length)
-    val s2_x = udf(x)
-    val s2_y = udf(y)
-    val s2_dimension = udf(dimension)
-    val s2_num_points = udf(numPoints)
-    val s2_distance = udf(distance)
-    val s2_max_distance = udf(maxDistance)
-    val s2_dwithin = udf(dwithin)
-    val s2_intersects = udf(intersects)
-    val s2_contains = udf(contains)
-    val s2_equals = udf(equalsGeog)
-    val s2_mayintersect = udf(mayIntersect)
-    val s2_covering = udf(covering)
-    val s2_covering_fixed_level = udf(coveringFixedLevel)
-    val s2_cellfromlonlat = udf(cellFromLonLat)
-    val s2_cellfromwkb = udf(cellFromWkb)
-    val s2_arbitrarycellfromwkb = udf(arbitraryCellFromWkb)
-    val s2_cell_token = udf(cellToken)
-    val s2_cell_from_token = udf(cellFromToken)
-    val s2_cell_level = udf(cellLevel)
-    val s2_cell_contains = udf(cellContains)
-    val s2_cell_intersects = udf(cellIntersects)
-    val s2_cell_child = udf(cellChild)
-    val s2_cell_parent = udf(cellParent)
-    val s2_cell_edge_neighbor = udf(cellEdgeNeighbor)
-    val s2_cell_all_neighbors = udf(cellAllNeighbors)
-    val s2_cells_with_neighbors = udf(cellsWithNeighbors)
-    val s2_cells_with_ring = udf(cellsWithNeighborsRing)
-    val s2_cell_range_min = udf(cellRangeMin)
-    val s2_cell_range_max = udf(cellRangeMax)
-    val s2_cell_sortkey = udf(cellSortKey)
-    val s2_cell_vertex = udf(cellVertex)
-    val s2_cellcenter_to_geog = udf(cellCenterToGeog)
-    val s2_cell_to_geog = udf(cellToGeog)
-    val s2_geog_to_cellcenter = udf(geogToCellCenter)
-    val s2_cellunion_to_geog = udf(cellUnionToGeog)
-    val s2_cellunion_normalize = udf(cellUnionNormalize)
-    val s2_geogpoint = udf(geogPoint)
-
-    // convenience appliers
-    def geogfromtext(c: Column): Column = s2_geogfromtext(c)
-    def astext(c: Column): Column = s2_astext(c)
-    def point(lon: Column, lat: Column): Column = s2_geogpoint(lon, lat)
-    def intersectsCol(a: Column, b: Column): Column = s2_intersects(a, b)
-  }
 
   private val registeredSessions =
     java.util.Collections.newSetFromMap(
@@ -424,67 +151,35 @@ object S2Functions {
   def ensureRegistered(spark: SparkSession): Unit =
     if (registeredSessions.add(spark)) register(spark)
 
-  /** Register every function under its reference-parity SQL name. */
+  /** Register every function under its reference-parity SQL name: the
+    * UDFs above, then the native expressions. The two name sets are
+    * disjoint. */
   def register(spark: SparkSession): Unit = {
     val r = spark.udf
     r.register("s2_geogfromtext", geogFromText)
     r.register("s2_geogfromtext_novalidate", geogFromTextNoValidate)
     r.register("s2_geogfromwkb", geogFromWkb)
     r.register("s2_geogfromwkb_novalidate", geogFromWkbNoValidate)
-    r.register("s2_astext", asText)
-    r.register("s2_format", format)
     r.register("s2_aswkb", asWkb)
     r.register("s2_prepare", prepare)
-    r.register("s2_isempty", isEmpty)
-    r.register("s2_is_valid", isValid)
     r.register("s2_is_valid_reason", isValidReason)
-    r.register("s2_area", area)
-    r.register("s2_perimeter", perimeter)
-    r.register("s2_length", length)
-    r.register("s2_x", x)
-    r.register("s2_y", y)
-    r.register("s2_dimension", dimension)
-    r.register("s2_num_points", numPoints)
-    r.register("s2_distance", distance)
-    r.register("s2_max_distance", maxDistance)
-    r.register("s2_dwithin", dwithin)
-    r.register("s2_intersects", intersects)
-    r.register("s2_contains", contains)
-    r.register("s2_equals", equalsGeog)
-    r.register("s2_mayintersect", mayIntersect)
     r.register("s2_intersection", intersection)
     r.register("s2_difference", difference)
     r.register("s2_union", unionGeog)
     r.register("s2_covering", covering)
-    r.register("s2_covering_fixed_level", coveringFixedLevel)
-    r.register("s2_cellfromlonlat", cellFromLonLat)
     r.register("s2_cellfromwkb", cellFromWkb)
     r.register("s2_arbitrarycellfromwkb", arbitraryCellFromWkb)
-    r.register("s2_cell_token", cellToken)
     r.register("s2_cell_from_token", cellFromToken)
-    r.register("s2_cell_level", cellLevel)
-    r.register("s2_cell_contains", cellContains)
     r.register("s2_cell_intersects", cellIntersects)
     r.register("s2_cell_child", cellChild)
-    r.register("s2_cell_parent", cellParent)
     r.register("s2_cell_edge_neighbor", cellEdgeNeighbor)
-    r.register("s2_cell_range_min", cellRangeMin)
-    r.register("s2_cell_range_max", cellRangeMax)
-    r.register("s2_cell_sortkey", cellSortKey)
     r.register("s2_cell_debug", cellDebug)
     r.register("s2_cell_all_neighbors", cellAllNeighbors)
     r.register("s2_cell_from_debug", cellFromDebug)
     r.register("s2_cell_vertex", cellVertex)
-    r.register("s2_cellcenter_to_geog", cellCenterToGeog)
-    r.register("s2_cell_to_geog", cellToGeog)
-    r.register("s2_geog_to_cellcenter", geogToCellCenter)
-    r.register("s2_cellunion_to_geog", cellUnionToGeog)
-    r.register("s2_cellunion_normalize", cellUnionNormalize)
-    r.register("s2_cellunion_from_list", cellUnionFromList)
-    r.register("s2_geogpoint", geogPoint)
-    // hot functions: override the UDFs with native codegen expressions on
-    // the SQL surface (cell math + geography predicates/constructors; the
-    // latter also enforce the reference's constant-argument contracts)
+    // native codegen expressions (cell math, casts, geography predicates,
+    // measures, accessors and constructors; the geography builders also
+    // enforce the reference's constant-argument contracts)
     CellExpressions.register(spark)
     GeogExpressions.register(spark)
     ()

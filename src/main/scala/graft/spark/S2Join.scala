@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
-import S2Functions.S2
-
 /**
  * Spatial join helpers (SURVEY §2.8): the scalable default is the
  * cover-then-refine equi-join — explode a fixed-level covering on both
@@ -72,7 +70,7 @@ object S2Join {
   def broadcastIntersects(small: DataFrame, geogS: String,
                           large: DataFrame, geogL: String): DataFrame = {
     S2Functions.ensureRegistered(small.sparkSession)
-    val prepped = small.withColumn(geogS, S2.s2_prepare(col(geogS)))
+    val prepped = small.withColumn(geogS, call_function("s2_prepare", col(geogS)))
     large.join(broadcast(prepped), call_function("s2_intersects", col(geogS), col(geogL)))
   }
 
@@ -110,8 +108,10 @@ object S2Join {
   /** Spatially cluster a dataframe by cell key for co-located storage /
     * pruned scans (reference "Great for sorting!" s2_cell_ops.cpp:287-290). */
   def clusterByCell(df: DataFrame, geogCol: String, level: Int): DataFrame = {
+    S2Functions.ensureRegistered(df.sparkSession)
+    val center = call_function("s2_geog_to_cellcenter", col(geogCol))
     val withKey = df.withColumn("__cell",
-      S2.s2_cell_sortkey(S2.s2_cell_parent(S2.s2_geog_to_cellcenter(col(geogCol)), lit(level))))
+      call_function("s2_cell_sortkey", call_function("s2_cell_parent", center, lit(level))))
     withKey.repartitionByRange(col("__cell")).sortWithinPartitions("__cell")
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.spark.{S2Functions, S2Join, SpatialJoinRewrite}
-import graft.spark.S2Functions.S2
 
 /**
  * Stream-static spatial enrichment: tag each streaming point event with

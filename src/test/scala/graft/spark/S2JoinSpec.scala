@@ -31,7 +31,7 @@ class S2JoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(11)
     // random point coverings at random levels, rings 1/2/4 — the native
-    // expression (ArrayData in/out) must reproduce the UDF kernel exactly,
+    // expression (ArrayData in/out) must reproduce the kernel exactly,
     // order included (the join explodes these into its candidate space)
     val cases = (1 to 200).map { _ =>
       val lon = rnd.nextDouble() * 360 - 180
@@ -169,7 +169,7 @@ class S2JoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tdf = cities.toDF("city", "geog")
     val a = S2Join.contains(cdf, "cgeog", tdf, "geog", level = 4)
       .select("country", "city").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val b = tdf.join(broadcast(cdf), S2Functions.S2.s2_contains($"cgeog", $"geog"))
+    val b = tdf.join(broadcast(cdf), call_function("s2_contains", $"cgeog", $"geog"))
       .select("country", "city").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(a === b)
   }
