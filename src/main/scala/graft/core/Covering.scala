@@ -3,144 +3,24 @@ package graft.core
 import scala.collection.mutable.ArrayBuffer
 
 /**
- * Region coverings: approximate a geography by a normalized union of S2
- * cells (SURVEY.md §2.6; reference: src/s2_bounds.cpp:19-144 — semantics).
+ * Cell-union algebra (SURVEY.md §2.6): normalization, the may-intersect
+ * test of two normalized unions, and the face cells.
  *
- * The default covering (maxCells = 8, the S2RegionCoverer default) is the
- * prefilter stored inline in every encoded GEOGRAPHY; the fixed-level
- * covering is the partition/join-key generator for cover-then-refine joins
- * at scale — it intentionally has no cell cap.
+ * Every covering is built by the one region coverer, `RegionCoverer`: the
+ * default covering (maxCells = 8) that `GeoCodec.encode` writes inline in
+ * every GEOGRAPHY blob and `s2_covering` returns, and the fixed-level
+ * covering of `s2_covering_fixed_level` and the cover-then-refine joins.
  */
 object Covering {
-  final val DefaultMaxCells = 8
-
-  /** Normalized default covering. Empty geography -> empty array. */
-  def cover(g: Geography, maxCells: Int = DefaultMaxCells): Array[Long] = g match {
-    case Geography.CellCenter(id) =>
-      if (S2CellId.isValid(id)) Array(id) else Array.empty
-    case Geography.Points(ps) if ps.nonEmpty =>
-      normalize(ps.map(p => S2CellId.fromPoint(p.x, p.y, p.z)).toArray, maxCells)
-    case _ =>
-      val shapes = new GeoShapes(g)
-      if (shapes.isEmpty) Array.empty
-      else coverShapes(shapes, maxCells)
-  }
-
-  private def coverShapes(shapes: GeoShapes, maxCells: Int): Array[Long] = {
-    // Greedy largest-first subdivision, deterministic.
-    implicit val ord: Ordering[Long] = (a: Long, b: Long) => {
-      val la = S2CellId.level(a); val lb = S2CellId.level(b)
-      if (la != lb) la - lb else S2CellId.compareUnsigned(a, b)
-    }
-    var queue = scala.collection.immutable.SortedSet.empty[Long]
-    val result = ArrayBuffer.empty[Long]
-    var f = 0
-    while (f < 6) {
-      val id = faceCell(f)
-      if (mayIntersect(id, shapes)) queue += id
-      f += 1
-    }
-    var done = false
-    while (!done && queue.nonEmpty) {
-      if (queue.size + result.size >= maxCells) {
-        result ++= queue
-        done = true
-      } else {
-        val id = queue.head
-        queue -= id
-        val lvl = S2CellId.level(id)
-        if (lvl == S2CellId.MaxLevel || containedInRegion(id, shapes)) result += id
-        else {
-          val kids = new ArrayBuffer[Long](4)
-          var k = 0
-          while (k < 4) {
-            val c = S2CellId.child(id, k)
-            if (mayIntersect(c, shapes)) kids += c
-            k += 1
-          }
-          if (kids.isEmpty) () // spurious parent intersection; drop
-          else if (result.size + queue.size + kids.size > maxCells) result += id
-          else queue ++= kids
-        }
-      }
-    }
-    normalize(result.toArray, maxCells)
-  }
-
+  /** The level-0 cell of face `f` (0..5). */
   @inline def faceCell(f: Int): Long = {
     val leaf = (f.toLong << (S2CellId.PosBits - 1)) * 2 + 1
     S2CellId.parent(leaf, 0)
   }
 
-  /** Conservative cell-vs-geometry intersection test. */
-  def mayIntersect(cellId: Long, shapes: GeoShapes): Boolean = {
-    // any geometry point inside the cell (exact, via leaf containment)
-    var i = 0
-    while (i < shapes.points.size) {
-      val p = shapes.points(i)
-      if (S2CellId.contains(cellId, S2CellId.fromPoint(p.x, p.y, p.z))) return true
-      i += 1
-    }
-    val hasEdges = shapes.hasLines || shapes.hasPolygons
-    if (!hasEdges) return false
-    // any geometry vertex inside the cell
-    var vertexInside = false
-    shapes.foreachEdge { (p, _) =>
-      if (S2CellId.contains(cellId, S2CellId.fromPoint(p.x, p.y, p.z))) { vertexInside = true; false }
-      else true
-    }
-    if (vertexInside) return true
-    val cv = S2CellId.vertices(cellId)
-    // any cell vertex inside a polygon
-    if (shapes.hasPolygons) {
-      var k = 0
-      while (k < 4) {
-        if (shapes.polygonContains(cv(k))) return true
-        k += 1
-      }
-    }
-    // any geometry edge crossing a cell edge
-    var crosses = false
-    shapes.foreachEdge { (p1, p2) =>
-      var k = 0
-      while (k < 4 && !crosses) {
-        val s = S2Pred.crossingSign(p1, p2, cv(k), cv((k + 1) % 4))
-        if (s >= 0) crosses = true
-        k += 1
-      }
-      !crosses
-    }
-    crosses
-  }
-
-  /** True if the cell is entirely inside the region (polygons only). */
-  private def containedInRegion(cellId: Long, shapes: GeoShapes): Boolean = {
-    if (!shapes.hasPolygons) return false
-    val cv = S2CellId.vertices(cellId)
-    var k = 0
-    while (k < 4) {
-      if (!shapes.polygonContains(cv(k))) return false
-      k += 1
-    }
-    // no geometry vertex strictly inside the cell, no edge crossing
-    var breached = false
-    shapes.foreachEdge { (p1, p2) =>
-      if (S2CellId.contains(cellId, S2CellId.fromPoint(p1.x, p1.y, p1.z))) { breached = true; false }
-      else {
-        var k2 = 0
-        while (k2 < 4 && !breached) {
-          if (S2Pred.crossingSign(p1, p2, cv(k2), cv((k2 + 1) % 4)) >= 0) breached = true
-          k2 += 1
-        }
-        !breached
-      }
-    }
-    !breached
-  }
-
   /** S2CellUnion-style normalization: unsigned sort, drop contained cells,
     * merge complete sibling quads (reference: s2_cell_ops.cpp:122). */
-  def normalize(ids0: Array[Long], maxCells: Int = Int.MaxValue): Array[Long] = {
+  def normalize(ids0: Array[Long]): Array[Long] = {
     val ids = ids0.filter(S2CellId.isValid)
     val sorted = ids.map(S2CellId.sortKey) // unsigned order via sign flip
     java.util.Arrays.sort(sorted)
@@ -171,28 +51,6 @@ object Covering {
         }
         out += id
       }
-      i += 1
-    }
-    // If above the cap, coarsen by replacing with parents until it fits.
-    var res = out.toArray
-    var guard = 0
-    while (res.length > maxCells && guard < 64) {
-      res = normalizeOnce(res.map(id => if (S2CellId.level(id) > 0) S2CellId.parent(id) else id))
-      guard += 1
-    }
-    res
-  }
-
-  private def normalizeOnce(ids: Array[Long]): Array[Long] = normalize(ids, Int.MaxValue)
-
-  private def sortUnsignedDistinct(ids: Array[Long]): Array[Long] = {
-    val keys = ids.map(S2CellId.sortKey)
-    java.util.Arrays.sort(keys)
-    val out = ArrayBuffer.empty[Long]
-    var i = 0
-    while (i < keys.length) {
-      val id = S2CellId.sortKey(keys(i))
-      if (out.isEmpty || out.last != id) out += id
       i += 1
     }
     out.toArray

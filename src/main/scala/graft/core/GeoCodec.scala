@@ -14,8 +14,12 @@ import Geography._
  *   payload (kind-specific)
  *
  * - The 4-byte tag answers isempty/dimension/kind without decoding.
- * - The inline covering drives the may-intersect prefilter and the
- *   cover-then-refine join without decoding geometry.
+ * - The inline covering is the S2RegionCoverer covering of
+ *   `RegionCoverer.cover`, the one coverer, as in the reference encoder
+ *   (s2_geography_serde.hpp:43). It drives the may-intersect prefilter and
+ *   the cover-then-refine join without decoding geometry. Blobs written
+ *   by the earlier greedy coverer carry a different but still valid
+ *   covering, and decode and compare as before.
  * - CELL_CENTER payload is a single 8-byte cell id (12-byte points).
  */
 object GeoCodec {
@@ -65,7 +69,7 @@ object GeoCodec {
       case _: Polygons => KindPolygon
       case _: Collection => KindCollection
     }
-    val covering: Array[Long] = if (g.isEmpty) Array.empty else Covering.cover(g)
+    val covering = RegionCoverer.cover(g)
     val coveringSize = Math.min(covering.length, 255)
     val payload = encodePayload(g)
     val buf = ByteBuffer.allocate(4 + 8 * coveringSize + payload.length)

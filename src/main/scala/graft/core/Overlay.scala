@@ -33,11 +33,8 @@ object Overlay {
 
   private def empty: Geography = Collection(Vector.empty)
 
-  private def disjointCoverings(a: Geography, b: Geography): Boolean = {
-    val ca = Covering.cover(a)
-    val cb = Covering.cover(b)
-    !Covering.unionsIntersect(ca, cb)
-  }
+  private def disjointCoverings(a: Geography, b: Geography): Boolean =
+    !Covering.unionsIntersect(RegionCoverer.cover(a), RegionCoverer.cover(b))
 
   /** `disjointHint`: caller already knows whether the coverings are
     * disjoint (the blob codec stores each geography's covering — reusing it

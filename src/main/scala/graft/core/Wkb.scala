@@ -31,6 +31,10 @@ object Wkb {
     * the executor. */
   private final val MaxDepth = 64
 
+  /** Fewest bytes a member geometry of a multi or collection takes: byte
+    * order, type and a count (a point takes more). */
+  private final val MinMemberBytes = 9
+
   // --------------------------------------------------------------- writer
 
   def write(g: Geography): Array[Byte] = {
@@ -135,6 +139,19 @@ object Wkb {
     (code % 1000) | (extra << 8)
   }
 
+  /** Reads an element count. A negative count, or one whose elements (at
+    * least `minBytes` each) cannot fit in the rest of the blob, is a typed
+    * error, not a silently empty geometry or a read past the end. */
+  private def readCount(buf: ByteBuffer, minBytes: Int): Int = {
+    val n = buf.getInt()
+    if (n < 0 || n.toLong * minBytes > buf.remaining())
+      throw WkbParseException(s"WKB count $n does not fit the ${buf.remaining()} bytes left")
+    n
+  }
+
+  /** Bytes of one coordinate: lng, lat and `extra` Z/M ordinates. */
+  @inline private def coordBytes(extra: Int): Int = 16 + 8 * extra
+
   private def skipOrdinates(buf: ByteBuffer, extra: Int): Unit = {
     var i = 0
     while (i < extra) { buf.getDouble(); i += 1 }
@@ -157,14 +174,14 @@ object Wkb {
         if (lng.isNaN || lat.isNaN) emptyPoint
         else Points(Vector(S2Point.fromLatLngDegrees(lat, lng)))
       case TLine =>
-        val n = buf.getInt()
+        val n = readCount(buf, coordBytes(extra))
         if (n == 0) Polylines(Vector.empty)
         else Polylines(Vector(readCoords(buf, n, extra)))
       case TPolygon =>
         val g = readPolygonBody(buf, extra)
         if (g.isEmpty) Polygons(Vector.empty) else Polygons(Vector(g))
       case TMultiPoint =>
-        val n = buf.getInt()
+        val n = readCount(buf, MinMemberBytes)
         val pts = Vector.newBuilder[S2Point]
         var i = 0
         while (i < n) {
@@ -176,7 +193,7 @@ object Wkb {
         }
         Points(pts.result())
       case TMultiLine =>
-        val n = buf.getInt()
+        val n = readCount(buf, MinMemberBytes)
         val ls = Vector.newBuilder[Vector[S2Point]]
         var i = 0
         while (i < n) {
@@ -188,7 +205,7 @@ object Wkb {
         }
         Polylines(ls.result())
       case TMultiPolygon =>
-        val n = buf.getInt()
+        val n = readCount(buf, MinMemberBytes)
         val gs = Vector.newBuilder[Vector[Vector[S2Point]]]
         var i = 0
         while (i < n) {
@@ -200,7 +217,7 @@ object Wkb {
         }
         Polygons(gs.result())
       case TCollection =>
-        val n = buf.getInt()
+        val n = readCount(buf, MinMemberBytes)
         val items = Vector.newBuilder[Geography]
         var i = 0
         while (i < n) { items += readGeom(buf, depth + 1); i += 1 }
@@ -222,11 +239,11 @@ object Wkb {
   }
 
   private def readPolygonBody(buf: ByteBuffer, extra: Int): Vector[Vector[S2Point]] = {
-    val nRings = buf.getInt()
+    val nRings = readCount(buf, 4)
     val rings = Vector.newBuilder[Vector[S2Point]]
     var i = 0
     while (i < nRings) {
-      val n = buf.getInt()
+      val n = readCount(buf, coordBytes(extra))
       val pts = readCoords(buf, n, extra)
       val ring = if (pts.size > 1 && pts.head == pts.last) pts.dropRight(1) else pts
       rings += ring
@@ -280,44 +297,33 @@ object Wkb {
     (header & 0xff) match {
       case TPoint =>
         visitNext()
-      case TMultiPoint =>
-        val n = buf.getInt()
-        var i = 0
-        while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
-        true
-      case TCollection =>
-        val n = buf.getInt()
-        var i = 0
-        while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
-        true
       case TLine =>
+        val n = readCount(buf, coordBytes(extra))
         if (pointsOnly) {
-          val n = buf.getInt()
           if (n > 0) throw WkbParseException("Can't parse WKB with non-point input to S2_CELL_CENTER")
           true
         } else {
-          val n = buf.getInt()
           var i = 0
           while (i < n) { if (!visitNext()) return false; i += 1 }
           true
         }
       case TPolygon =>
-        val nRings = buf.getInt()
+        val nRings = readCount(buf, 4)
         if (pointsOnly) {
           if (nRings > 0) throw WkbParseException("Can't parse WKB with non-point input to S2_CELL_CENTER")
           true
         } else {
           var r = 0
           while (r < nRings) {
-            val n = buf.getInt()
+            val n = readCount(buf, coordBytes(extra))
             var i = 0
             while (i < n) { if (!visitNext()) return false; i += 1 }
             r += 1
           }
           true
         }
-      case TMultiLine | TMultiPolygon =>
-        val n = buf.getInt()
+      case TMultiPoint | TMultiLine | TMultiPolygon | TCollection =>
+        val n = readCount(buf, MinMemberBytes)
         var i = 0
         while (i < n) { if (!scanPoints(buf, visit, pointsOnly, depth + 1)) return false; i += 1 }
         true

@@ -70,9 +70,9 @@ object S2Functions {
       if (a == null || b == null) null
       else GeoCodec.encode(Overlay.union(GeoCodec.decode(a), GeoCodec.decode(b)))
 
-  // public s2_covering uses real S2RegionCoverer semantics (matches the
-  // reference's exact cell goldens); the cheap greedy coverer stays internal
-  // for the inline blob-prefilter covering (GeoCodec.encode)
+  // s2_covering re-covers the decoded geometry with RegionCoverer (the
+  // reference's exact cell goldens) rather than reading the inline
+  // covering, which blobs written by the earlier greedy coverer differ in
   val covering: Array[Byte] => Array[Long] =
     (b: Array[Byte]) => if (b == null) null else RegionCoverer.cover(GeoCodec.decode(b))
 

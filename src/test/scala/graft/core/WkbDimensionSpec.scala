@@ -1,30 +1,13 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
 import org.scalatest.funsuite.AnyFunSuite
+
+import WkbBytes._
 
 /** Z, M and ZM WKB (ISO type offsets 1000/2000/3000 and the EWKB
   * 0x80000000/0x40000000 flags) decodes to its 2-D geography: the extra
   * ordinates are read and dropped. Goldens are hand-computed 2-D WKT. */
 class WkbDimensionSpec extends AnyFunSuite {
-
-  /** WKB writer for the spec: `parts` are type words, counts and
-    * coordinate tuples, in stream order. */
-  private def wkb(order: ByteOrder)(parts: Any*): Array[Byte] = {
-    val buf = ByteBuffer.allocate(1024).order(order)
-    val byteOrder: Byte = if (order == ByteOrder.LITTLE_ENDIAN) 1 else 0
-    parts.foreach {
-      case ("type", t: Int) => buf.put(byteOrder); buf.putInt(t)
-      case n: Int => buf.putInt(n)
-      case c: Seq[_] => c.foreach(v => buf.putDouble(v.asInstanceOf[Double]))
-    }
-    java.util.Arrays.copyOf(buf.array(), buf.position())
-  }
-  private def le(parts: Any*) = wkb(ByteOrder.LITTLE_ENDIAN)(parts: _*)
-  private def be(parts: Any*) = wkb(ByteOrder.BIG_ENDIAN)(parts: _*)
-  private def t(code: Int) = ("type", code)
-  private def c(xs: Double*): Seq[Double] = xs
-
   // both sides take the same lat/lng -> unit-vector path, so goldens
   // compare exactly (the text of a decoded vertex may differ in its last ulp)
   private def text(bytes: Array[Byte]): String = Wkt.write(Wkb.read(bytes))

@@ -3,10 +3,13 @@ package graft.core
 import java.nio.{ByteBuffer, ByteOrder}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hostile WKB (deeply nested collections, truncated blobs, counts past
-  * the end of the data) gives a geography or a typed WkbParseException
-  * from every reader: never a raw JVM exception, and never a fatal Error
-  * such as StackOverflowError. */
+import WkbBytes.{c, le, t}
+
+/** Hostile WKB (deeply nested collections, truncated or corrupted blobs,
+  * negative counts, counts past the end of the data) gives a geography or
+  * a typed WkbParseException from every reader: never a raw JVM exception
+  * or a silently empty geometry, and never a fatal Error such as
+  * StackOverflowError. */
 class WkbHostileSpec extends AnyFunSuite {
 
   private val readers: Seq[(String, Array[Byte] => Any)] = Seq(
@@ -82,5 +85,60 @@ class WkbHostileSpec extends AnyFunSuite {
     readers.filter(_._1 != "arbitraryCellFromWkb").foreach { case (name, f) =>
       assert(outcome(name, bytes, f).isLeft, s"$name accepted a LINESTRING of ${Int.MaxValue} points")
     }
+  }
+
+  test("a negative count is a typed error, not an empty geometry") {
+    val cases = (2 to 7).map(geomType => s"type $geomType with count -1" -> le(t(geomType), -1)) :+
+      ("a ring of -3 points" -> le(t(3), 1, -3, c(0, 0), c(1, 0), c(0, 1)))
+    val accepted = for ((what, bytes) <- cases; (name, f) <- readers if outcome(name, bytes, f).isRight)
+      yield s"$name: $what"
+    assert(accepted === Nil)
+  }
+
+  test("a count whose elements cannot fit the rest of the blob is a typed error") {
+    // 3 points of 24 bytes (Z) announced, 2 present: fits if the Z were ignored
+    val zLine = le(t(1002), 3, c(0, 0, 1), c(1, 1, 1), c(2, 2, 1))
+    val short = java.util.Arrays.copyOf(zLine, zLine.length - 24)
+    readers.foreach { case (name, f) =>
+      assert(outcome(name, short, f).isLeft, s"$name accepted 3 Z points in the bytes of 2")
+    }
+    val hugeCollection = le(t(7), Int.MaxValue, t(1), c(1, 2))
+    readers.foreach { case (name, f) =>
+      assert(outcome(name, hugeCollection, f).isLeft, s"$name accepted ${Int.MaxValue} members")
+    }
+  }
+
+  /** Samples for the mutation fuzz: 2-D, Z, M and ZM; ISO and EWKB; every
+    * multi type and a nested collection. */
+  private val fuzzSamples: Seq[Array[Byte]] = Seq(
+    Wkb.write(Wkt.read("POINT (-64 45)")),
+    Wkb.write(Wkt.read("MULTIPOINT ((-64 45), (-64 46), (10 20))")),
+    Wkb.write(Wkt.read("MULTILINESTRING ((0 0, 1 1), (5 5, 6 7, 8 8))")),
+    Wkb.write(Wkt.read("MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 2 4, 4 4, 4 2, 2 2))," +
+      " ((20 20, 30 20, 30 30, 20 20)))")),
+    le(t(1001), c(10, 20, 5)),
+    le(t(3002), 3, c(0, 0, 1, 2), c(1, 1, 3, 4), c(2, 2, 5, 6)),
+    le(t(2003), 1, 4, c(0, 0, 1), c(10, 0, 2), c(0, 10, 3), c(0, 0, 1)),
+    le(t(0x80000000 | 6), 1, t(0x80000000 | 3), 1, 4, c(0, 0, 1), c(5, 0, 1), c(0, 5, 1),
+      c(0, 0, 1)),
+    le(t(7), 3, t(1001), c(1, 2, 9), t(2), 2, c(0, 0), c(3, 3),
+      t(1007), 1, t(1004), 2, t(1001), c(5, 6, 7), t(1001), c(8, 9, 10)))
+
+  test("WKB mutation fuzz: every prefix and seeded byte corruptions give a value or a typed error") {
+    val start = System.nanoTime()
+    fuzzSamples.zipWithIndex.foreach { case (full, k) =>
+      assert(outcome("read", full, b => Wkb.read(b)).isRight, s"sample $k does not read")
+      (0 until full.length).foreach { n =>
+        val prefix = java.util.Arrays.copyOf(full, n)
+        readers.foreach { case (name, f) => outcome(s"$name of sample $k cut to $n", prefix, f) }
+      }
+    }
+    val rng = new scala.util.Random(20261018L)
+    for ((full, k) <- fuzzSamples.zipWithIndex; _ <- 1 to 400) {
+      val bytes = full.clone()
+      bytes(rng.nextInt(bytes.length)) = rng.nextInt(256).toByte
+      readers.foreach { case (name, f) => outcome(s"$name of corrupted sample $k", bytes, f) }
+    }
+    assert(System.nanoTime() - start < 30L * 1000 * 1000 * 1000, "fuzz took over 30 s")
   }
 }
