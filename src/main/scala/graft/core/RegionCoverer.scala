@@ -17,52 +17,91 @@ import scala.collection.mutable
  *   (`s2_covering_fixed_level`, the cover-then-refine join keys).
  *
  * Both test cells with one exact classifier built once per geography, so
- * coverings are deterministic. `Covering` holds the cell-union algebra.
+ * coverings are deterministic; its `SphereCap` bounds only skip tests whose
+ * answer they know. `Covering` holds the cell-union algebra.
  */
 object RegionCoverer {
   final val DefaultMaxCells = 8
   final val MaxLevel = 30
 
-  private final val Disjoint = 0
-  private final val Partial = 1
-  private final val Inside = 2
+  private[core] final val Disjoint = 0
+  private[core] final val Partial = 1
+  private[core] final val Inside = 2
+
+  /** Builds the cell classifier of shapes with bounding cap (center, radius). */
+  private[core] type Classify = (GeoShapes, S2Point, Double) => Long => Int
+
+  private[core] val bounded: Classify = (s, c, r) => new Classifier(s, c, r).classify
 
   /** Classifies cells against one geography: Disjoint (nothing in common),
     * Inside (within the closed interior of its polygons) or Partial. Vertex
-    * leaf ids are computed and sorted once, so "a vertex lies in the cell"
-    * is one binary search; the boundary test is one pass of crossingSign
-    * over the edges against the cell's 4 edges; when neither hits, one cell
-    * vertex decides whether the whole cell lies inside the polygons. */
-  private final class Classifier(shapes: GeoShapes) {
-    // ring vertices and edges bound the polygons; points and lines only meet cells
-    private val ringLeaves = sortedLeaves(v => shapes.foreachRingEdge { (p, _) => v(p); true })
-    private val otherLeaves =
-      sortedLeaves { v => shapes.points.foreach(v); shapes.lines.foreach(_.foreach(v)) }
-    private val (ringA, ringB) = edges(shapes.foreachRingEdge)
-    private val (lineA, lineB) = edges(shapes.foreachLineEdge)
+    * leaf ids are sorted once, so "a vertex lies in the cell" is one binary
+    * search; the boundary test runs crossingSign of the edges against the
+    * cell's 4 edges, skipping edges whose `EdgeCaps` cap misses the cell's;
+    * when neither hits, cell vertex cv(0) decides Inside by a parity walk:
+    * each ring group's parity at `center` is computed once and flipped by
+    * the ring edges, whose caps reach it, crossing center->cv(0). The
+    * region's cap (`capOf`) holds the region when its radius is < π/2 and
+    * the polygons do not hold -center; a cell outside it is Disjoint at once.
+    * Guard: the caps of edges on a cell plane (`SphereCap.onCellPlane`) are
+    * whole; a geography with such an edge, or whose center lies on a ring
+    * edge's great circle, gets no region cap and no walk, and Inside is
+    * `polygonContains`. Answers equal a full scan of every edge. */
+  private final class Classifier(shapes: GeoShapes, center: S2Point, radius: Double) {
+    // ring edges, with their ring group, bound the polygons; points and lines only meet cells
+    private val (ringA, ringB, ringGroup) = {
+      val es = for ((group, gi) <- shapes.loops.zipWithIndex; loop <- group; v = loop.vertices; i <- v.indices)
+        yield (v(i), v((i + 1) % v.length), gi)
+      (es.map(_._1).toArray, es.map(_._2).toArray, es.map(_._3).toArray)
+    }
+    private val (lineA, lineB) = {
+      val es = for (l <- shapes.lines; i <- 0 until l.size - 1) yield (l(i), l(i + 1))
+      (es.map(_._1).toArray, es.map(_._2).toArray)
+    }
+    private val ringLeaves = sortedLeaves(ringA)
+    private val otherLeaves = sortedLeaves(shapes.points ++ shapes.lines.flatten)
+    private val ringCaps = new EdgeCaps(ringA, ringB)
+    private val lineCaps = new EdgeCaps(lineA, lineB)
+    private val hasRings = ringA.length > 0
+    private val region: SphereCap = // null when it may not hold the region
+      if (ringCaps.anyGuarded || lineCaps.anyGuarded || radius >= Math.PI / 2 ||
+        (hasRings && shapes.polygonContains(-center))) null
+      else SphereCap(center.x, center.y, center.z, Math.cos(radius), Math.sin(radius))
+    private val centerParity: Array[Boolean] = // null when the walk is off
+      if (region == null || !hasRings ||
+        ringA.indices.exists(i => S2Pred.collinearExact(ringA(i), ringB(i), center))) null
+      else shapes.loops.map(_.foldLeft(false)(_ ^ _.contains(center))).toArray
 
     def classify(cell: Long): Int = {
+      val cv = S2CellId.vertices(cell)
+      val cap = SphereCap.cell(cv)
+      if (region != null && !region.meets(cap)) return Disjoint
       val lo = S2CellId.sortKey(S2CellId.rangeMin(cell))
       val hi = S2CellId.sortKey(S2CellId.rangeMax(cell))
-      val cv = S2CellId.vertices(cell)
-      if (anyIn(ringLeaves, lo, hi) || anyCrossing(ringA, ringB, cv)) Partial
-      else if (ringA.length > 0 && shapes.polygonContains(cv(0))) Inside
-      else if (anyIn(otherLeaves, lo, hi) || anyCrossing(lineA, lineB, cv)) Partial
+      if (anyIn(ringLeaves, lo, hi) || anyCrossing(ringA, ringB, ringCaps, cv, cap)) Partial
+      else if (hasRings && inside(cv(0))) Inside
+      else if (anyIn(otherLeaves, lo, hi) || anyCrossing(lineA, lineB, lineCaps, cv, cap)) Partial
       else Disjoint
     }
 
-    /** Leaf ids of the visited vertices as sorted sort keys. */
-    private def sortedLeaves(each: (S2Point => Unit) => Unit): Array[Long] = {
-      val b = mutable.ArrayBuilder.make[Long]
-      each(p => b += S2CellId.sortKey(S2CellId.fromPoint(p.x, p.y, p.z)))
-      val keys = b.result(); java.util.Arrays.sort(keys); keys
+    /** `polygonContains(p)` for a p on no ring edge. */
+    private def inside(p: S2Point): Boolean = {
+      val seg = if (centerParity == null) SphereCap.Whole else SphereCap.arc(center, p)
+      if (seg.isWhole) return shapes.polygonContains(p)
+      val parity = centerParity.clone()
+      var i = 0
+      while (i < ringA.length) {
+        if (ringCaps.meets(i, seg) && S2Pred.edgeOrVertexCrossing(center, p, ringA(i), ringB(i)))
+          parity(ringGroup(i)) = !parity(ringGroup(i))
+        i += 1
+      }
+      parity.contains(true)
     }
 
-    private def edges(each: ((S2Point, S2Point) => Boolean) => Boolean) = {
-      val a = mutable.ArrayBuilder.make[S2Point]
-      val b = mutable.ArrayBuilder.make[S2Point]
-      each { (p, q) => a += p; b += q; true }
-      (a.result(), b.result())
+    /** Leaf ids of the vertices as sorted sort keys. */
+    private def sortedLeaves(vs: Iterable[S2Point]): Array[Long] = {
+      val keys = vs.iterator.map(p => S2CellId.sortKey(S2CellId.fromPoint(p.x, p.y, p.z))).toArray
+      java.util.Arrays.sort(keys); keys
     }
 
     /** Is some key within [lo, hi]? */
@@ -71,14 +110,18 @@ object RegionCoverer {
       i >= 0 || (-i - 1 < keys.length && keys(-i - 1) <= hi)
     }
 
-    /** Does some edge (a(i), b(i)) cross or touch an edge of the cell? */
-    private def anyCrossing(a: Array[S2Point], b: Array[S2Point], cv: Array[S2Point]): Boolean = {
+    /** Does some edge (a(i), b(i)) whose cap meets the cell's cross or touch
+      * an edge of the cell? */
+    private def anyCrossing(a: Array[S2Point], b: Array[S2Point], caps: EdgeCaps,
+                            cv: Array[S2Point], cap: SphereCap): Boolean = {
       var i = 0
       while (i < a.length) {
-        var k = 0
-        while (k < 4) {
-          if (S2Pred.crossingSign(a(i), b(i), cv(k), cv((k + 1) & 3)) >= 0) return true
-          k += 1
+        if (caps.meets(i, cap)) {
+          var k = 0
+          while (k < 4) {
+            if (S2Pred.crossingSign(a(i), b(i), cv(k), cv((k + 1) & 3)) >= 0) return true
+            k += 1
+          }
         }
         i += 1
       }
@@ -87,13 +130,14 @@ object RegionCoverer {
   }
 
   private final class Candidate(val cellId: Long, val isTerminal: Boolean) {
-    var children: List[Candidate] = Nil
+    var children: Array[Candidate] = Array.empty
+    var priority = 0L
   }
 
-  /** Bounding cap of the region: center + max chord radius over vertices
-    * (the S2LatLngRect::GetCapBound "mid cap" flavor — adequate for
-    * seeding; the expansion loop corrects any slack). */
-  private def capOf(shapes: GeoShapes): (S2Point, Double) = {
+  /** Bounding cap of the vertices: center + max angle to a vertex (the
+    * S2LatLngRect::GetCapBound "mid cap" flavor). It seeds `cover`, whose
+    * expansion loop corrects any slack, and bounds the classifier. */
+  private[core] def capOf(shapes: GeoShapes): (S2Point, Double) = {
     var sx = 0.0; var sy = 0.0; var sz = 0.0
     shapes.g.foreachVertex { p => sx += p.x; sy += p.y; sz += p.z }
     val c0 = S2Point(sx, sy, sz)
@@ -136,7 +180,10 @@ object RegionCoverer {
   }
 
   /** Default covering: at most maxCells cells, any levels. */
-  def cover(g: Geography, maxCells: Int = DefaultMaxCells): Array[Long] = {
+  def cover(g: Geography, maxCells: Int = DefaultMaxCells): Array[Long] = cover(g, maxCells, bounded)
+
+  /** `cover` with the classifier that `classify` builds. */
+  private[core] def cover(g: Geography, maxCells: Int, classify: Classify): Array[Long] = {
     g match {
       case Geography.CellCenter(id) =>
         return if (S2CellId.isValid(id)) Array(id) else Array.empty
@@ -146,15 +193,16 @@ object RegionCoverer {
     }
     val shapes = new GeoShapes(g)
     if (shapes.isEmpty) return Array.empty
-    val cls = new Classifier(shapes)
+    val (center, radius) = capOf(shapes)
+    val cls = classify(shapes, center, radius)
 
     val result = mutable.ArrayBuffer[Long]()
     // priority: expand coarsest first; among equals, fewest children, then
     // fewest terminal children (public S2RegionCoverer heuristic)
-    val pq = mutable.PriorityQueue.empty[(Long, Candidate)](
-      Ordering.by[(Long, Candidate), Long](_._1).reverse)
+    val pq = mutable.PriorityQueue.empty[Candidate](
+      (a: Candidate, b: Candidate) => java.lang.Long.compare(b.priority, a.priority))
 
-    def newCandidate(cellId: Long): Candidate = cls.classify(cellId) match {
+    def newCandidate(cellId: Long): Candidate = cls(cellId) match {
       case Disjoint => null
       case c => new Candidate(cellId, c == Inside || S2CellId.level(cellId) == MaxLevel)
     }
@@ -163,18 +211,17 @@ object RegionCoverer {
       if (c == null) ()
       else if (c.isTerminal) result += c.cellId
       else { // expand one level
-        val kids = (0 until 4).map(k => newCandidate(S2CellId.child(c.cellId, k))).filter(_ != null)
+        val kids = Array.tabulate(4)(k => newCandidate(S2CellId.child(c.cellId, k))).filter(_ != null)
         val numTerm = kids.count(_.isTerminal)
         if (numTerm == 4) result += c.cellId // all four children terminal -> emit the parent
         else if (kids.nonEmpty) {
-          c.children = kids.toList
-          val lvl = S2CellId.level(c.cellId).toLong
-          pq.enqueue(((((lvl << 2) + kids.size) << 2) + numTerm, c))
+          c.children = kids
+          c.priority = (((S2CellId.level(c.cellId).toLong << 2) + kids.length) << 2) + numTerm
+          pq.enqueue(c)
         }
       }
 
     // --- seeding: small covering of the bounding cap
-    val (center, radius) = capOf(shapes)
     // clamp to MaxLevel - 1 (as C++ S2RegionCoverer does for the initial
     // candidates): at level 30 vertexNeighbors' ijSize(31) shift wraps
     // around and all four seeds collapse to the single center leaf
@@ -185,9 +232,9 @@ object RegionCoverer {
     seeds.foreach(id => addCandidate(newCandidate(id)))
 
     while (pq.nonEmpty) {
-      val (_, cand) = pq.dequeue()
+      val cand = pq.dequeue()
       // expand while there is room, else emit the cell itself
-      if (result.size + pq.size + cand.children.size <= maxCells)
+      if (result.size + pq.size + cand.children.length <= maxCells)
         cand.children.foreach(addCandidate)
       else result += cand.cellId
     }
@@ -197,7 +244,10 @@ object RegionCoverer {
   /** Fixed-level covering: every cell at `level` intersecting the region
     * (reference: s2_bounds.cpp:57-104; min_level = max_level = level), in
     * cell id order. Every descendant of an Inside cell is emitted untested. */
-  def coverFixedLevel(g: Geography, level: Int): Array[Long] = {
+  def coverFixedLevel(g: Geography, level: Int): Array[Long] = coverFixedLevel(g, level, bounded)
+
+  /** `coverFixedLevel` with the classifier that `classify` builds. */
+  private[core] def coverFixedLevel(g: Geography, level: Int, classify: Classify): Array[Long] = {
     g match {
       case c: Geography.CellCenter =>
         return if (c.isEmpty) Array.empty else Array(S2CellId.parent(c.cellId, level))
@@ -207,10 +257,11 @@ object RegionCoverer {
     }
     val shapes = new GeoShapes(g)
     if (shapes.isEmpty) return Array.empty
-    val cls = new Classifier(shapes)
+    val (center, radius) = capOf(shapes)
+    val cls = classify(shapes, center, radius)
     val out = mutable.ArrayBuilder.make[Long]
     val step = S2CellId.lsbForLevel(level)
-    def recurse(cellId: Long): Unit = cls.classify(cellId) match {
+    def recurse(cellId: Long): Unit = cls(cellId) match {
       case Disjoint => ()
       case Inside =>
         // the level-`level` descendants, first to last in id order

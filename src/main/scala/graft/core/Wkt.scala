@@ -253,29 +253,28 @@ object Validation {
 
   /** Self/cross-ring crossing-edge detection (reference validation catches
     * crossing edges — docs/function-reference.md:222-225; the exact text is
-    * not pinned by tests, the S2-style "Edge i crosses edge j" is used). */
-  private def findCrossingEdges(p: Geography.Polygons): Option[String] = {
-    val edges = scala.collection.mutable.ArrayBuffer[(S2Point, S2Point, Int, Int)]()
-    var ringIdx = 0
-    for (ring <- p.allRings) {
-      var i = 0
-      while (i < ring.size) {
-        edges += ((ring(i), ring((i + 1) % ring.size), ringIdx, i))
-        i += 1
-      }
-      ringIdx += 1
+    * not pinned by tests, the S2-style "Edge i crosses edge j" is used).
+    * Pairs whose `EdgeCaps` are apart cannot cross and are not tested. */
+  private[core] def findCrossingEdges(p: Geography.Polygons): Option[String] = {
+    val rings = p.allRings
+    val n = rings.map(_.size).sum
+    val a = new Array[S2Point](n); val b = new Array[S2Point](n)
+    val ringOf = new Array[Int](n); val indexOf = new Array[Int](n)
+    var e = 0
+    for (r <- rings.indices; ring = rings(r); i <- ring.indices) {
+      a(e) = ring(i); b(e) = ring((i + 1) % ring.size); ringOf(e) = r; indexOf(e) = i
+      e += 1
     }
+    val caps = new EdgeCaps(a, b)
     var i = 0
-    while (i < edges.size) {
+    while (i < n) {
       var j = i + 1
-      while (j < edges.size) {
-        val (a1, a2, ra, ia) = edges(i)
-        val (b1, b2, rb, ib) = edges(j)
+      while (j < n) {
         // skip adjacent edges of the same ring (share a vertex by design)
-        val adjacent = ra == rb &&
-          (a2 == b1 || b2 == a1 || a1 == b1 || a2 == b2)
-        if (!adjacent && S2Pred.crossingSign(a1, a2, b1, b2) > 0)
-          return Some(s"Edge $ia crosses edge $ib")
+        if (caps.meets(i, j) && !(ringOf(i) == ringOf(j) &&
+            (b(i) == a(j) || b(j) == a(i) || a(i) == a(j) || b(i) == b(j))) &&
+            S2Pred.crossingSign(a(i), b(i), a(j), b(j)) > 0)
+          return Some(s"Edge ${indexOf(i)} crosses edge ${indexOf(j)}")
         j += 1
       }
       i += 1
