@@ -159,7 +159,9 @@ object RegionCoverer {
   /** The cells at `level` sharing the closest vertex of `leaf`'s level-cell
     * (public S2CellId::AppendVertexNeighbors semantics). */
   private def vertexNeighbors(leaf: Long, level: Int): Array[Long] = {
-    val (face, i, j, _) = S2CellId.toFaceIJOrientation(leaf)
+    val face = S2CellId.face(leaf)
+    val ij = S2CellId.leafIJ(leaf)
+    val i = S2CellId.packedI(ij); val j = S2CellId.packedJ(ij)
     val halfSize = S2CellId.ijSize(level + 1)
     val size = halfSize << 1
     val maxSize = S2CellId.ijSize(0)

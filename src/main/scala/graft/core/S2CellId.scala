@@ -161,13 +161,13 @@ object S2CellId {
     n * 2 + 1
   }
 
-  /** Decode face,i,j (+ orientation of the lowest level) from a cell id.
-    * Returns (face, i, j, orientation). i,j are coordinates of the leaf cell
-    * at the cell's min corner (same convention as S2). */
-  def toFaceIJOrientation(id: Long): (Int, Int, Int, Int) = {
+  /** Decode i,j from a cell id, packed as `i << 32 | j` so the decode
+    * allocates nothing (read back with [[packedI]] and [[packedJ]]; the
+    * face is [[face]]). i,j are coordinates of a leaf cell inside the cell;
+    * mask with `-ijSize(level)` for the min corner (same convention as S2). */
+  private[core] def leafIJ(id: Long): Long = {
     var i = 0; var j = 0
-    val f = face(id)
-    var bits = f & SwapMask
+    var bits = face(id) & SwapMask
     var k = 7
     while (k >= 0) {
       val nbits = if (k == 7) MaxLevel - 7 * LookupBits else LookupBits
@@ -178,12 +178,11 @@ object S2CellId {
       bits &= (SwapMask | InvertMask)
       k -= 1
     }
-    // Non-leaf cells at odd levels need the swap-mask correction: the
-    // Hilbert curve orientation alternates per level (public S2 scheme;
-    // C++ applies bits ^= kSwapMask when lsb & 0x1111111111111110 != 0).
-    if ((lsb(id) & 0x1111111111111110L) != 0L) bits ^= SwapMask
-    (f, i, j, bits)
+    (i.toLong << 32) | j
   }
+
+  @inline private[core] def packedI(p: Long): Int = (p >>> 32).toInt
+  @inline private[core] def packedJ(p: Long): Int = p.toInt
 
   // ------------------------------------------------- sphere <-> cell
 
@@ -211,19 +210,19 @@ object S2CellId {
   /** Center of the cell as a unit vector. Center si/ti = 2*iMin + sizeIJ on
     * the doubled [0, 2^31] grid (same convention as S2's GetCenterSiTi). */
   def toPoint(id: Long): S2Point = {
-    val (f, i0, j0, _) = toFaceIJOrientation(id)
+    val ij = leafIJ(id)
     val sizeIJ = ijSize(level(id))
-    // toFaceIJOrientation yields an interior leaf for non-leaf cells; mask
+    // leafIJ yields an interior leaf for non-leaf cells; mask
     // down to the min corner before computing the center.
-    val i = i0 & -sizeIJ
-    val j = j0 & -sizeIJ
+    val i = packedI(ij) & -sizeIJ
+    val j = packedJ(ij) & -sizeIJ
     val si = 2L * i + sizeIJ
     val ti = 2L * j + sizeIJ
     val s = si.toDouble / (2.0 * MaxSize)
     val t = ti.toDouble / (2.0 * MaxSize)
     val u = S2Proj.stToUV(s)
     val v = S2Proj.stToUV(t)
-    S2Proj.faceUVtoXYZ(f, u, v).normalize
+    S2Proj.faceUVtoUnit(face(id), u, v)
   }
 
   def toLatLngDegrees(id: Long): (Double, Double) = {
@@ -233,12 +232,15 @@ object S2CellId {
 
   @inline def ijSize(lvl: Int): Int = 1 << (MaxLevel - lvl)
 
-  /** The four corner vertices of the cell (CCW order), as unit vectors. */
+  /** The four corner vertices of the cell (CCW order), as unit vectors.
+    * The region coverer classifies every candidate cell by them, so the
+    * decode allocates nothing and each vertex is built once. */
   def vertices(id: Long): Array[S2Point] = {
-    val (f, i0, j0, _) = toFaceIJOrientation(id)
+    val f = face(id)
+    val ij = leafIJ(id)
     val sz = ijSize(level(id))
-    val i = i0 & -sz
-    val j = j0 & -sz
+    val i = packedI(ij) & -sz
+    val j = packedJ(ij) & -sz
     val sLo = i.toDouble / MaxSize
     val sHi = (i + sz).toDouble / MaxSize
     val tLo = j.toDouble / MaxSize
@@ -247,10 +249,10 @@ object S2CellId {
     val vLo = S2Proj.stToUV(tLo); val vHi = S2Proj.stToUV(tHi)
     // CCW order starting from (uLo, vLo) — matches S2Cell::GetVertex.
     Array(
-      S2Proj.faceUVtoXYZ(f, uLo, vLo).normalize,
-      S2Proj.faceUVtoXYZ(f, uHi, vLo).normalize,
-      S2Proj.faceUVtoXYZ(f, uHi, vHi).normalize,
-      S2Proj.faceUVtoXYZ(f, uLo, vHi).normalize
+      S2Proj.faceUVtoUnit(f, uLo, vLo),
+      S2Proj.faceUVtoUnit(f, uHi, vLo),
+      S2Proj.faceUVtoUnit(f, uHi, vHi),
+      S2Proj.faceUVtoUnit(f, uLo, vHi)
     )
   }
 
@@ -260,7 +262,9 @@ object S2CellId {
   def edgeNeighbors(id: Long): Array[Long] = {
     val lvl = level(id)
     val sz = ijSize(lvl)
-    val (f, i, j, _) = toFaceIJOrientation(id)
+    val f = face(id)
+    val ij = leafIJ(id)
+    val i = packedI(ij); val j = packedJ(ij)
     Array(
       parent(fromFaceIJSame(f, i, j - sz, j - sz >= 0), lvl),
       parent(fromFaceIJSame(f, i + sz, j, i + sz < MaxSize), lvl),
@@ -277,7 +281,9 @@ object S2CellId {
   def allNeighbors(id: Long): Array[Long] = {
     val lvl = level(id)
     val sz = ijSize(lvl)
-    val (f, i, j, _) = toFaceIJOrientation(id)
+    val f = face(id)
+    val ij = leafIJ(id)
+    val i = packedI(ij); val j = packedJ(ij)
     val out = new scala.collection.mutable.ArrayBuffer[Long](8)
     var di = -1
     while (di <= 1) {

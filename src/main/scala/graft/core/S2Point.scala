@@ -78,6 +78,22 @@ object S2Proj {
     case _ => S2Point(v, u, -1)
   }
 
+  /** `faceUVtoXYZ(face, u, v).normalize`, bit for bit (same coordinates,
+    * same operation order), with one allocation instead of two. */
+  private[core] def faceUVtoUnit(face: Int, u: Double, v: Double): S2Point = {
+    var x = 0.0; var y = 0.0; var z = 0.0
+    face match {
+      case 0 => x = 1; y = u; z = v
+      case 1 => x = -u; y = 1; z = v
+      case 2 => x = -u; y = -v; z = 1
+      case 3 => x = -1; y = -v; z = -u
+      case 4 => x = v; y = -1; z = -u
+      case _ => x = v; y = u; z = -1
+    }
+    val n = Math.sqrt(x * x + y * y + z * z)
+    S2Point(x / n, y / n, z / n)
+  }
+
   /** Quadratic projection (S2_QUADRATIC_PROJECTION), the S2 default. */
   @inline def uvToST(u: Double): Double =
     if (u >= 0) 0.5 * Math.sqrt(1 + 3 * u) else 1 - 0.5 * Math.sqrt(1 - 3 * u)

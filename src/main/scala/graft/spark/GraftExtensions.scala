@@ -59,31 +59,50 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
   private val MaxHeuristicDwithinOffset = 2
   private val KeysPerPartition = 2
 
+  /** Sizes at or above 1 PB are sentinels, not measurements. */
+  private val UnknownBytes = BigInt(1) << 50
+
   /** Global S2 cell count at a level: 6 * 4^level. */
   private def cellsAtLevel(level: Int): BigInt = BigInt(6) << (2 * level)
 
   /** Row-count estimate for one join side. Uses rowCount stats when the
     * session provides them (CBO, Range, analyzed tables); otherwise each
-    * LEAF's scan bytes over its schema row width. Leaf sizeInBytes are real
-    * file sizes — unlike join-OUTPUT sizeInBytes (child-size products) and
-    * unknown-plan sentinels (Long.MaxValue), the r5 failure modes — and
-    * any implausible (≥1 PB) leaf marks the side unknown rather than
-    * poisoning the estimate. None = unknown. */
+    * LEAF's row count, else its scan bytes over its schema row width. Leaf
+    * sizeInBytes are real file sizes — unlike join-OUTPUT sizeInBytes
+    * (child-size products) and unknown-plan sentinels (Long.MaxValue), the
+    * r5 failure modes — and a leaf with no row count and an implausible
+    * (≥1 PB) size marks the side unknown rather than poisoning the
+    * estimate. A row count is read before the size, so a leaf with an
+    * exact count and the unknown-size default (the [[S2Data]] tables) is
+    * known. None = unknown. */
   def estimatedRows(plan: LogicalPlan): Option[BigInt] =
     try {
       plan.stats.rowCount.orElse {
         val perLeaf = plan.collectLeaves().map { leaf =>
-          val bytes = leaf.stats.sizeInBytes
-          if (bytes < 0 || bytes >= (BigInt(1) << 50)) scala.None
-          else leaf.stats.rowCount.orElse {
+          val stats = leaf.stats
+          stats.rowCount.orElse {
+            val bytes = stats.sizeInBytes
             val rowWidth = 8L + leaf.output.map(_.dataType.defaultSize).sum
-            Some(bytes / rowWidth)
+            if (bytes < 0 || bytes >= UnknownBytes) scala.None
+            else Some(bytes / rowWidth)
           }
         }
         if (perLeaf.isEmpty || perLeaf.exists(_.isEmpty)) scala.None
         else Some(perLeaf.flatten.max)
       }
     } catch { case _: Throwable => scala.None }
+
+  /** A side whose size the planner does not know: it reports the
+    * unknown-size default (or another implausible ≥1 PB figure). */
+  private def unknownSize(plan: LogicalPlan): Boolean =
+    try plan.stats.sizeInBytes >= UnknownBytes catch { case _: Throwable => true }
+
+  /** A side hint that keeps the side out of any broadcast, unless the user
+    * already picked a strategy for it. */
+  private def noBroadcast(h: Option[HintInfo]): Option[HintInfo] = h match {
+    case Some(info) if info.strategy.isDefined => h
+    case _ => Some(h.getOrElse(HintInfo()).copy(strategy = Some(NO_BROADCAST_HASH)))
+  }
 
   /** Shuffle-key target for the heuristic: the shuffle partition count is
     * the one cluster-profile signal every deployment tunes (local[32] runs
@@ -243,13 +262,19 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
    * Each qualifying row pair survives on exactly ONE cell, so the rewrite
    * preserves inner-join multiplicity bit-for-bit (duplicate rows, rows
    * differing only in null placement, map-typed columns — nothing is hashed
-   * or grouped) and needs no dedupe shuffle. Null geographies cover nothing
-   * and drop out of the explode, matching the null-predicate semantics of
-   * the plan being replaced.
+   * or grouped) and needs no dedupe shuffle. Null geographies cover nothing:
+   * their one null cell never matches in the cell join, matching the
+   * null-predicate semantics of the plan being replaced.
    *
-   * For dwithin the left side's cells are expanded to the full
-   * 8-neighborhood at a level whose min cell width exceeds the radius, so
-   * every within-radius pair shares a probe cell.
+   * For dwithin one side's cells are expanded to their neighbour ring at a
+   * level whose min cell width exceeds the radius, so every within-radius
+   * pair shares a probe cell. The ring goes on the side with strictly fewer
+   * estimated rows, the left when either estimate is unknown.
+   *
+   * Each side's covering (and, for dwithin, its point vector) is computed
+   * once per input row, in the Project under the explode, and so is the
+   * geography expression that feeds it: no optimizer rule copies them into
+   * a filter below that Project (see `covered` and the refine condition).
    */
   private def rewrite(j: Join, spatial: Expression, others: Seq[Expression],
                       geogL: Expression, geogR: Expression, meters: Option[Double],
@@ -259,6 +284,11 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     val level = meters.fold(explicitLevel.getOrElse(coveringLevel(conf, left, right)))(m =>
       Math.min(S2Join.levelForDistance(m) + offset, 30))
     val ring = 1 << offset
+    // the ring relation is symmetric (crossing r rings of cells takes more
+    // than r·minWidth from either end), so the ring may go on either side;
+    // on the smaller one it multiplies fewer rows ((2·ring+1)² cells each)
+    val ringRight = meters.isDefined &&
+      estimatedRows(right).exists(r => estimatedRows(left).exists(r < _))
 
     def covered(child: LogicalPlan, geog: Expression, side: String,
                 withNeighbors: Boolean, withXyz: Boolean)
@@ -274,18 +304,32 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
         if (withXyz) Some(Alias(GeogExpressions.S2PointXyzExpr(geog), s"__${side}_xyz")())
         else scala.None
       val tagged = Project(child.output ++ (covAlias +: xyzAlias.toSeq), child)
-      val cellAttr = AttributeReference(s"__${side}_cell", LongType, nullable = false)()
+      // an OUTER explode: a null or empty covering yields one null cell,
+      // which the inner cell join drops. InferFiltersFromGenerate gives an
+      // inner explode of an attribute a `size(cov) > 0 AND isnotnull(cov)`
+      // filter, and filter pushdown substitutes the aliases into it below
+      // this Project, recomputing the covering and the geography per row
+      val cellAttr = AttributeReference(s"__${side}_cell", LongType)()
       val gen = Generate(Explode(covAlias.toAttribute), unrequiredChildIndex = Nil,
-        outer = false, qualifier = None, generatorOutput = Seq(cellAttr), child = tagged)
+        outer = true, qualifier = None, generatorOutput = Seq(cellAttr), child = tagged)
       (gen, covAlias.toAttribute, cellAttr, xyzAlias.map(_.toAttribute))
     }
 
-    val (lPlan, lCov, lCell, lXyz) =
-      covered(left, geogL, "l", withNeighbors = meters.isDefined, withXyz = meters.isDefined)
-    val (rPlan, rCov, rCell, rXyz) =
-      covered(right, geogR, "r", withNeighbors = false, withXyz = meters.isDefined)
+    val (lPlan, lCov, lCell, lXyz) = covered(left, geogL, "l",
+      withNeighbors = meters.isDefined && !ringRight, withXyz = meters.isDefined)
+    val (rPlan, rCov, rCell, rXyz) = covered(right, geogR, "r",
+      withNeighbors = ringRight, withXyz = meters.isDefined)
 
-    val cellJoin = Join(lPlan, rPlan, Inner, Some(EqualTo(lCell, rCell)), j.hint)
+    // with no size for either side the planner broadcasts neither, and AQE
+    // would broadcast whichever side's map stage ends first: the same join
+    // flips plans from run to run, and the winner can be the blob-heavy
+    // side (the countries' level-4 explode is 6.3 MB, the cities' 28 KB).
+    // Such a join stays a shuffle join
+    val hint =
+      if (unknownSize(left) && unknownSize(right)) JoinHint(
+        noBroadcast(j.hint.leftHint), noBroadcast(j.hint.rightHint))
+      else j.hint
+    val cellJoin = Join(lPlan, rPlan, Inner, Some(EqualTo(lCell, rCell)), hint)
     cellJoin.setTagValue(RewrittenTag, true)
     // evaluation-order discipline: the optimizer reorders bare conjuncts
     // when it folds filters into a join condition, so the cheap
@@ -293,7 +337,10 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     // symmetric self-join's refine count) run first inside an If the
     // optimizer cannot split or reorder, then the exact spatial predicate
     // (same per-candidate work as the replaced plan), then the array
-    // reporting condition on surviving pairs only
+    // reporting condition on surviving pairs only. The If also keeps the
+    // null-intolerant predicate from being a top-level conjunct, from
+    // which InferFiltersFromConstraints would push an isnotnull(geog)
+    // filter, and with it a second geography evaluation, under each side
     //
     // dwithin refines through the chord-band tree (bit-identical to the
     // matched s2_dwithin — see GeogExpressions.dwithinXyzTree)
@@ -308,7 +355,7 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
       EqualTo(Size(rCov), Literal(1)),
       Or(EqualTo(Size(lCov), Literal(1)),
         EqualTo(lCell, ArrayMin(ArrayIntersect(lCov, rCov)))))
-    val spatialThenReport = And(refineSpatial, smallestCommonCell)
+    val spatialThenReport = If(refineSpatial, smallestCommonCell, Literal.FalseLiteral)
     val refineCond = others.reduceOption(And) match {
       case Some(cheap) => If(cheap, spatialThenReport, Literal.FalseLiteral)
       case scala.None => spatialThenReport

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core.{GeoCodec, Wkt}
@@ -12,8 +12,14 @@ import graft.core.{GeoCodec, Wkt}
  * the extension; data at /root/reference/data/ cities.tsv + countries.tsv).
  *
  * Spark-first shape: DataFrame factories over classpath TSV resources.
- * The frames are tiny (243 cities / 177 countries) — exactly the
- * broadcast-side of the flagship spatial join (reference README.md:14-19).
+ * Each table is split into `min(rows, defaultParallelism)` partitions in
+ * TSV row order, so a join that streams it (the flagship spatial join,
+ * reference README.md:14-19) runs its refine on every core. The leaf
+ * carries its exact row count (243 cities / 177 countries), which the
+ * cover-then-refine join reads to place the dwithin neighbour ring, but
+ * no size: a blob-sized estimate would make the tables broadcast
+ * candidates, and a broadcast covering explode copies the full geography
+ * blob into every exploded row.
  */
 object S2Data {
   private case class RawRow(cols: Array[String])
@@ -41,21 +47,25 @@ object S2Data {
     StructField("continent", StringType, nullable = false),
     StructField("geog", BinaryType, nullable = false)))
 
-  /** 243 rows: name, population, geog (POINT). */
-  def cities(spark: SparkSession): DataFrame = {
-    val rows = cityRows.map { case (n, p, wkt) =>
-      Row(n, p, GeoCodec.encode(Wkt.read(wkt)))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), citySchema)
+  /** `rows` over `min(rows, defaultParallelism)` partitions, in order,
+    * with the row count in the leaf statistics and the size left unknown. */
+  private def table(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val slices = math.max(1, math.min(rows.size, spark.sparkContext.defaultParallelism))
+    GraftShim.withRowCount(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), schema), rows.size)
   }
 
+  /** 243 rows: name, population, geog (POINT). */
+  def cities(spark: SparkSession): DataFrame =
+    table(spark, cityRows.map { case (n, p, wkt) =>
+      Row(n, p, GeoCodec.encode(Wkt.read(wkt)))
+    }, citySchema)
+
   /** 177 rows: name, continent, geog (POLYGON / MULTIPOLYGON). */
-  def countries(spark: SparkSession): DataFrame = {
-    val rows = countryRows.map { case (n, c, wkt) =>
+  def countries(spark: SparkSession): DataFrame =
+    table(spark, countryRows.map { case (n, c, wkt) =>
       Row(n, c, GeoCodec.encode(Wkt.read(wkt)))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), countrySchema)
-  }
+    }, countrySchema)
 
   /** Scalar lookup; unknown name errors with the reference's message
     * (reference: src/s2_data.cpp:182-184, data.test:8-11). */

@@ -76,9 +76,12 @@ object S2Join {
 
   /**
    * Distance join: pairs within `meters`. The covering level is chosen so
-   * a cell diagonal comfortably exceeds `meters`, then each left cell
-   * probes its own cell plus its neighbor ring (covers the `meters`
-   * buffer), refined by exact s2_dwithin semantics. `pairFilter` is a
+   * a cell's minimum width exceeds `meters`, then one side's cells are
+   * widened to their neighbour ring (covers the `meters` buffer) and
+   * joined with the other side's own cells, refined by exact s2_dwithin
+   * semantics. The ring goes on the side with fewer estimated rows (the
+   * left when either estimate is unknown); the relation is symmetric, so
+   * the result does not depend on the side. `pairFilter` is a
    * cheap pair prefilter (e.g. `id_a < id_b`) evaluated before the refine.
    *
    * The refine runs through the chord-band fast path

@@ -2,9 +2,13 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.{GeoCodec, Wkt}
 
 class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -262,5 +266,159 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       } finally spark.conf.unset(key)
     }
+  }
+
+  /** "left" or "right": the side of the cell join whose covering carries
+    * the dwithin neighbour ring. */
+  private def ringSide(plan: LogicalPlan): String = {
+    def hasRing(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[GeogExpressions.S2CoveringFixedLevelWithRingExpr])))
+    val sides = plan.collect { case j: Join if hasRing(j) =>
+      (hasRing(j.left), hasRing(j.right)) }
+    sides match {
+      case Seq((true, false)) => "left"
+      case Seq((false, true)) => "right"
+      case other => fail(s"ring covering placement: $other")
+    }
+  }
+
+  test("dwithin puts the neighbour ring on the side with fewer estimated rows") {
+    // Range reports exact row counts
+    def ranged(n: Long, id: String, g: String) = spark.range(n).select(col("id").as(id),
+      expr("s2_geogpoint(CAST(id % 360 AS DOUBLE) - 180.0, 0.0)").as(g))
+    val big = ranged(1000, "ia", "ga")
+    val small = ranged(10, "ib", "gb")
+    assert(ringSide(S2Join.dwithin(big, "ga", small, "gb", 50000.0)
+      .queryExecution.analyzed) === "right")
+    assert(ringSide(S2Join.dwithin(small, "gb", big, "ga", 50000.0)
+      .queryExecution.analyzed) === "left")
+    // the SQL surface plans through the same rule
+    big.createOrReplaceTempView("ring_big")
+    small.createOrReplaceTempView("ring_small")
+    assert(ringSide(spark.sql(
+      "SELECT ia, ib FROM ring_big JOIN ring_small ON s2_dwithin(ga, gb, 50000.0)")
+      .queryExecution.optimizedPlan) === "right")
+    // an unknown estimate (an RDD without statistics) keeps the ring left,
+    // even against a smaller known side
+    val unknown = spark.createDataFrame(spark.sparkContext.parallelize(
+        big.collect().toSeq, 2), big.schema)
+    assert(SpatialJoinRewrite.estimatedRows(unknown.queryExecution.analyzed).isEmpty)
+    assert(ringSide(S2Join.dwithin(unknown, "ga", small, "gb", 50000.0)
+      .queryExecution.analyzed) === "left")
+  }
+
+  test("dwithin equals the kernel brute force with the ring on either side") {
+    val rnd = new scala.util.Random(7)
+    val corner = math.toDegrees(math.atan(1 / math.sqrt(2))) // cube-face corner latitude
+    // cube-face corner cells (7 neighbours), both poles, the antimeridian
+    val centres = Seq((45.0, corner), (-135.0, -corner), (135.0, corner),
+      (0.0, 90.0), (120.0, -90.0), (179.9, 10.0), (-179.9, -5.0))
+    def jittered(n: Int): Seq[Array[Byte]] = Seq.fill(n) {
+      val (lon, lat) = centres(rnd.nextInt(centres.size))
+      val la = math.max(-90.0, math.min(90.0, lat + (rnd.nextDouble() - 0.5)))
+      val lo = lon + (rnd.nextDouble() - 0.5)
+      S2Native.geogPoint(if (lo > 180) lo - 360 else if (lo < -180) lo + 360 else lo, la)
+    } ++ centres.take(n.min(centres.size)).map { case (lo, la) => S2Native.geogPoint(lo, la) }
+    val polygons = Seq(
+      s"POLYGON ((44.6 ${corner - 0.4}, 45.4 ${corner - 0.4}, 45.4 ${corner + 0.4}, " +
+        s"44.6 ${corner + 0.4}, 44.6 ${corner - 0.4}))",
+      "POLYGON ((179.7 9.7, -179.8 9.7, -179.8 10.3, 179.7 10.3, 179.7 9.7))")
+      .map(w => GeoCodec.encode(Wkt.read(w)))
+    val many = jittered(120)
+    val few = jittered(25) ++ polygons
+    val meters = 40000.0
+    def frame(gs: Seq[Array[Byte]], id: String, g: String): DataFrame = {
+      val s = spark; import s.implicits._
+      gs.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF(id, g)
+    }
+    def brute(a: Seq[Array[Byte]], b: Seq[Array[Byte]]): Seq[(Long, Long)] =
+      (for { (ga, i) <- a.zipWithIndex; (gb, k) <- b.zipWithIndex
+             if S2Native.dwithin(ga, gb, meters) } yield (i.toLong, k.toLong)).sorted
+    val cases = Seq(("right", many, few), ("left", few, many))
+    for (offset <- Seq("0", "1", "2"); (side, a, b) <- cases) {
+      spark.conf.set(SpatialJoinRewrite.DwithinLevelOffsetConf, offset)
+      try {
+        val df = S2Join.dwithin(frame(a, "ia", "ga"), "ga", frame(b, "ib", "gb"), "gb", meters)
+        assert(ringSide(df.queryExecution.analyzed) === side, s"offset $offset")
+        val got = df.select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+        val want = brute(a, b)
+        assert(want.size > a.size, s"offset $offset: too few pairs to test")
+        assert(got === want, s"offset $offset, ring $side")
+      } finally spark.conf.unset(SpatialJoinRewrite.DwithinLevelOffsetConf)
+    }
+  }
+
+  test("S2Data tables: split per core in TSV order, exact row count, no size") {
+    val cores = spark.sparkContext.defaultParallelism
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    for ((df, rows, resource) <- Seq((S2Data.cities(spark), 243, "/graft/cities.tsv"),
+                                     (S2Data.countries(spark), 177, "/graft/countries.tsv"))) {
+      assert(df.rdd.getNumPartitions === math.min(rows, cores), resource)
+      val src = scala.io.Source.fromInputStream(getClass.getResourceAsStream(resource), "UTF-8")
+      val names = try src.getLines().drop(1).map(_.split('\t')(0)).toList finally src.close()
+      assert(df.collect().map(_.getString(0)).toSeq === names)
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+      assert(leaves.map(_.stats.rowCount) === Seq(Some(BigInt(rows))), resource)
+      // not broadcast candidates, bare or under the covering Project
+      for (plan <- Seq(df.queryExecution.optimizedPlan,
+                       df.select(col("name"), expr("s2_covering(geog)")).queryExecution.optimizedPlan))
+        assert(plan.stats.sizeInBytes > threshold, s"$resource: ${plan.stats}")
+    }
+  }
+
+  test("the cover-then-refine join evaluates each row's geography and covering once") {
+    val sc = spark.sparkContext
+    val pointCalls = sc.longAccumulator("counted_point")
+    val prepareCalls = sc.longAccumulator("counted_prepare")
+    spark.udf.register("counted_point", (lon: Double, lat: Double) => {
+      pointCalls.add(1); S2Native.geogPoint(lon, lat)
+    })
+    spark.udf.register("counted_prepare", (g: Array[Byte]) => {
+      prepareCalls.add(1); GeoCodec.prepare(g)
+    })
+    val n = 3000L
+    val points = spark.range(n).select(col("id"),
+      expr("counted_point((id * 137.50776) % 360.0 - 180.0, (id * 0.0617) % 140.0 - 70.0)")
+        .as("pgeog"))
+    val countries = S2Data.countries(spark)
+      .select(col("name"), expr("counted_prepare(geog)").as("geog"))
+    val cities = S2Data.cities(spark).select(col("name").as("city"), col("geog").as("cgeog"))
+    // a geography recomputed in a filter under the covering Project shows
+    // as extra UDF calls; coverings() counts the covering expressions left
+    // in the executed plan (one Project per side)
+    def coverings(df: DataFrame): Int =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(p => p)
+        .flatMap(_.expressions).map(_.collect {
+          case e: GeogExpressions.S2CoveringFixedLevelExpr => e
+          case e: GeogExpressions.S2CoveringFixedLevelWithRingExpr => e
+        }.size).sum
+    def counted(df: DataFrame): (Seq[String], Long, Long) = {
+      pointCalls.reset(); prepareCalls.reset()
+      val got = rows(df)
+      (got, pointCalls.value, prepareCalls.value)
+    }
+
+    // reference answers by plain functions, no cell join
+    val pipWant = rows(S2Join.broadcastIntersects(S2Data.countries(spark), "geog",
+        spark.range(n).select(col("id"),
+          expr("s2_geogpoint((id * 137.50776) % 360.0 - 180.0, (id * 0.0617) % 140.0 - 70.0)")
+            .as("pgeog")), "pgeog")
+      .groupBy("name").count())
+    val pip = S2Join.intersects(points, "pgeog", countries, "geog").groupBy("name").count()
+    val (pipGot, pipPoints, pipPrepares) = counted(pip)
+    assert(pipGot === pipWant)
+    assert(pipGot.nonEmpty)
+    assert(pipPoints === n)
+    assert(pipPrepares === 177L)
+    assert(coverings(pip) === 2)
+
+    val within = S2Join.dwithin(points, "pgeog", cities, "cgeog", 200000.0)
+      .select(col("id"), col("city"))
+    val (withinGot, withinPoints, _) = counted(within)
+    assert(withinPoints === n)
+    assert(coverings(within) === 2)
+    val brute = rows(points.crossJoin(cities)
+      .where(expr("s2_dwithin(pgeog, cgeog, 200000.0)")).select(col("id"), col("city")))
+    assert(withinGot.nonEmpty && withinGot === brute)
   }
 }
