@@ -16,7 +16,6 @@ final case class LatLngRect(latLo: Double, latHi: Double, lngLo: Double, lngHi: 
   def latEmpty: Boolean = latLo > latHi
   def lngEmpty: Boolean = lngLo - lngHi == 2 * Math.PI // [Pi, -Pi]
   def lngInverted: Boolean = lngLo > lngHi
-  def lngFull: Boolean = lngHi - lngLo == 2 * Math.PI
   def isEmpty: Boolean = latEmpty
 
   def lngContains(p: Double): Boolean =

@@ -43,9 +43,8 @@ object RegionCoverer {
     * the ring edges, whose caps reach it, crossing center->cv(0). The
     * region's cap (`capOf`) holds the region when its radius is < π/2 and
     * the polygons do not hold -center; a cell outside it is Disjoint at once.
-    * Guard: the caps of edges on a cell plane (`SphereCap.onCellPlane`) are
-    * whole; a geography with such an edge, or whose center lies on a ring
-    * edge's great circle, gets no region cap and no walk, and Inside is
+    * A degenerate or near-antipodal edge has a whole cap (`EdgeCaps`); a
+    * geography with one gets no region cap and no walk, and Inside is
     * `polygonContains`. Answers equal a full scan of every edge. */
   private final class Classifier(shapes: GeoShapes, center: S2Point, radius: Double) {
     // ring edges, with their ring group, bound the polygons; points and lines only meet cells
@@ -68,8 +67,7 @@ object RegionCoverer {
         (hasRings && shapes.polygonContains(-center))) null
       else SphereCap(center.x, center.y, center.z, Math.cos(radius), Math.sin(radius))
     private val centerParity: Array[Boolean] = // null when the walk is off
-      if (region == null || !hasRings ||
-        ringA.indices.exists(i => S2Pred.collinearExact(ringA(i), ringB(i), center))) null
+      if (region == null || !hasRings) null
       else shapes.loops.map(_.foldLeft(false)(_ ^ _.contains(center))).toArray
 
     def classify(cell: Long): Int = {

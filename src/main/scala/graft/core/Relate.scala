@@ -223,13 +223,6 @@ object Relate {
   private def pointIntersects(p: S2Point, other: GeoShapes): Boolean =
     other.hasPoint(p) || other.onAnyLine(p) || (other.hasPolygons && other.polygonContains(p))
 
-  /** For crossingSign == 0: do the edges actually share a point? */
-  private def edgesTouch(a: S2Point, b: S2Point, c: S2Point, d: S2Point): Boolean = {
-    if (a == c || a == d || b == c || b == d) return true
-    S2Pred.pointOnEdge(c, a, b) || S2Pred.pointOnEdge(d, a, b) ||
-      S2Pred.pointOnEdge(a, c, d) || S2Pred.pointOnEdge(b, c, d)
-  }
-
   /** a contains b (a ⊇ b), CLOSED model. Polygon content of b must sit in
     * a's polygons; line content of b is covered by the union of a's polygon
     * interiors and a's exactly-collinear edge sub-arcs (exact interval

@@ -26,9 +26,6 @@ final case class S2Point(x: Double, y: Double, z: Double) {
   def lngRadians: Double = Math.atan2(y, x)
   def latDegrees: Double = S2Point.rad2deg(latRadians)
   def lngDegrees: Double = S2Point.rad2deg(lngRadians)
-
-  def approxEquals(o: S2Point, tol: Double = 1e-15): Boolean =
-    angle(o) <= tol
 }
 
 object S2Point {

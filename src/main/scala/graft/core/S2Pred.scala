@@ -1,67 +1,83 @@
 package graft.core
 
 /**
- * Robust-ish spherical orientation predicates and edge-crossing tests —
- * the kernel under every spatial predicate (SURVEY.md §2.4).
+ * Exact spherical orientation predicates and edge-crossing tests — the
+ * kernel under every spatial predicate (SURVEY.md §2.4).
  *
- * Sign() follows the S2 design: fast triple product with an error bound,
- * falling back to extended precision, with a deterministic lexicographic
- * tie-break (simplified symbolic perturbation) so results are never 0 for
- * distinct points.
+ * `sign` is S2's `s2pred::Sign` (s2predicates.cc): a triple product with an
+ * error bound, then the exact determinant in `BigDecimal`, and when that is
+ * exactly 0 the symbolic perturbation of `ExactSign` /
+ * `SymbolicallyPerturbedSign` (Simulation of Simplicity, Edelsbrunner &
+ * Mücke 1990). Every point gets an infinitesimal perturbation, larger for
+ * lexicographically smaller points, so the sign is never 0 for distinct
+ * points and stays consistent: swapping two arguments flips it, and
+ * exactly collinear, disjoint arcs never cross.
  */
 object S2Pred {
+  import java.math.BigDecimal
+
   /** Max rounding error of the triple product for unit-ish vectors. */
   private val MaxDetError = 1.8274e-15
 
-  /** Sign of det(a, b, c) == (a x b) . c : +1 if c is left of edge a->b. */
+  /** Sign of det(a, b, c) == (a x b) . c : +1 if c is left of edge a->b;
+    * 0 only when two of the points are equal. */
   def sign(a: S2Point, b: S2Point, c: S2Point): Int = {
     val det = a.cross(b).dot(c)
     if (det > MaxDetError) 1
     else if (det < -MaxDetError) -1
-    else expensiveSign(a, b, c)
+    else if (a == b || b == c || a == c) 0
+    else exactSign(a, b, c)
   }
 
-  private def expensiveSign(a: S2Point, b: S2Point, c: S2Point): Int = {
-    // Exact evaluation with BigDecimal (doubles are exactly representable).
-    val det = exactDet(a, b, c)
-    val s = det.signum
-    if (s != 0) s
-    else {
-      // True degeneracy (collinear through the sphere center). Deterministic
-      // symbolic tie-break on lexicographic order, mirroring the *spirit* of
-      // S2's symbolic perturbation: equal points -> 0, else consistent ±1.
-      if (a == b || b == c || a == c) 0
-      else {
-        // Order the triple canonically; an odd permutation flips the sign.
-        val pts = Array((a, 0), (b, 1), (c, 2)).sortBy { case (p, _) => (p.x, p.y, p.z) }
-        val parity = permutationParity(pts.map(_._2))
-        if (parity) 1 else -1
-      }
-    }
+  /** A vector with exact coordinates (every double is a `BigDecimal`). */
+  private type Exact = Array[BigDecimal]
+
+  private def exact(p: S2Point): Exact = Array(new BigDecimal(p.x), new BigDecimal(p.y), new BigDecimal(p.z))
+
+  private def cross(b: Exact, c: Exact): Exact = Array(
+    b(1).multiply(c(2)).subtract(b(2).multiply(c(1))),
+    b(2).multiply(c(0)).subtract(b(0).multiply(c(2))),
+    b(0).multiply(c(1)).subtract(b(1).multiply(c(0))))
+
+  private def dot(a: Exact, v: Exact): BigDecimal =
+    a(0).multiply(v(0)).add(a(1).multiply(v(1))).add(a(2).multiply(v(2)))
+
+  @inline private def lexLess(p: S2Point, q: S2Point): Boolean =
+    p.x < q.x || (p.x == q.x && (p.y < q.y || (p.y == q.y && p.z < q.z)))
+
+  /** S2's ExactSign for three distinct points: sort them lexicographically
+    * by (x, y, z), keeping the sign of the permutation, and take the exact
+    * det = a . (b x c), perturbed when it is 0. */
+  private def exactSign(p: S2Point, q: S2Point, r: S2Point): Int = {
+    var a = p; var b = q; var c = r; var perm = 1
+    if (lexLess(b, a)) { val t = a; a = b; b = t; perm = -perm }
+    if (lexLess(c, b)) { val t = b; b = c; c = t; perm = -perm }
+    if (lexLess(b, a)) { val t = a; a = b; b = t; perm = -perm }
+    val xa = exact(a); val xb = exact(b); val xc = exact(c)
+    val bc = cross(xb, xc)
+    val det = dot(xa, bc).signum
+    perm * (if (det != 0) det else perturbedSign(xa, xb, xc, bc))
   }
 
-  private def permutationParity(idx: Array[Int]): Boolean = {
-    var swaps = 0
-    val a = idx.clone()
-    var i = 0
-    while (i < a.length) {
-      while (a(i) != i) { val t = a(a(i)); a(a(i)) = a(i); a(i) = t; swaps += 1 }
-      i += 1
-    }
-    swaps % 2 == 0
-  }
-
-  private def exactDet(a: S2Point, b: S2Point, c: S2Point): java.math.BigDecimal = {
-    import java.math.BigDecimal
-    def bd(d: Double) = new BigDecimal(d)
-    val bx = bd(b.x); val by = bd(b.y); val bz = bd(b.z)
-    val cx = bd(c.x); val cy = bd(c.y); val cz = bd(c.z)
-    val ax = bd(a.x); val ay = bd(a.y); val az = bd(a.z)
-    // (a x b) . c expanded
-    val t1 = ay.multiply(bz).subtract(az.multiply(by)).multiply(cx)
-    val t2 = az.multiply(bx).subtract(ax.multiply(bz)).multiply(cy)
-    val t3 = ax.multiply(by).subtract(ay.multiply(bx)).multiply(cz)
-    t1.add(t2).add(t3)
+  /** S2's SymbolicallyPerturbedSign for a < b < c with det(a, b, c) exactly
+    * 0: the sign of the first non-zero coefficient of the perturbed
+    * determinant, largest perturbation first. The first three are b x c,
+    * so points on one coordinate plane resolve without new products. */
+  private def perturbedSign(a: Exact, b: Exact, c: Exact, bc: Exact): Int = {
+    lazy val ca = cross(c, a)
+    var s = bc(2).signum
+    if (s == 0) s = bc(1).signum
+    if (s == 0) s = bc(0).signum
+    if (s == 0) s = ca(2).signum
+    if (s == 0) s = c(0).signum
+    if (s == 0) s = -c(1).signum
+    if (s == 0) s = ca(1).signum
+    if (s == 0) s = c(2).signum
+    if (s == 0) s = cross(a, b)(2).signum
+    if (s == 0) s = -b(0).signum
+    if (s == 0) s = b(1).signum
+    if (s == 0) s = a(0).signum
+    if (s == 0) 1 else s
   }
 
   /** Deterministic unit vector orthogonal to a (S2::Ortho-style). */
@@ -126,17 +142,13 @@ object S2Pred {
   val Origin: S2Point =
     S2Point(0.0045676207723, 0.9987317298375, 0.0502392510902).normalize
 
-  /** True if point p is exactly on the closed edge ab (endpoints included). */
   /** Non-perturbed collinearity: the exact determinant det(a, b, c) is
     * EXACTLY zero (c lies on the great circle through a and b). Unlike
-    * sign(), no symbolic tie-break — used for collinear arc-interval
+    * sign(), no symbolic perturbation — used for collinear arc-interval
     * overlap (line-in-line containment), where the perturbed model would
     * declare every interior point "off" the edge. */
-  def collinearExact(a: S2Point, b: S2Point, c: S2Point): Boolean = {
-    val det = a.cross(b).dot(c)
-    if (Math.abs(det) > MaxDetError) false
-    else exactDet(a, b, c).signum == 0
-  }
+  def collinearExact(a: S2Point, b: S2Point, c: S2Point): Boolean =
+    Math.abs(a.cross(b).dot(c)) <= MaxDetError && dot(exact(a), cross(exact(b), exact(c))).signum == 0
 
   /** Tolerant near-collinearity: c within ~1e-12 rad of the great circle
     * through a and b. Rounded lon/lat->XYZ coordinates put nominally
@@ -150,6 +162,7 @@ object S2Pred {
     nn < 1e-30 || Math.abs(c.dot(n)) / nn <= 1e-12
   }
 
+  /** True if point p is exactly on the closed edge ab (endpoints included). */
   def pointOnEdge(p: S2Point, a: S2Point, b: S2Point): Boolean = {
     if (p == a || p == b) return true
     if (sign(a, b, p) != 0) return false

@@ -27,32 +27,32 @@ private[core] object SphereCap {
   }
 
   /** The cap of a cell from its 4 vertices (a cell is convex and smaller
-    * than a hemisphere). */
+    * than a hemisphere): the normalized vertex sum, the least cos and the
+    * largest sin to a vertex. Allocates only the cap. */
   def cell(cv: Array[S2Point]): SphereCap = {
-    val c = (cv(0) + cv(1) + cv(2) + cv(3)).normalize
-    var cos = 1.0; var sin = 0.0
-    cv.foreach { v => cos = Math.min(cos, c.dot(v)); sin = Math.max(sin, c.cross(v).norm) }
-    SphereCap(c.x, c.y, c.z, cos, sin)
-  }
-
-  /** Is p on a plane that carries cell edges at every level: a coordinate
-    * exactly 0 (through the face centres) or two of exactly equal magnitude
-    * (the face boundaries)? `S2Pred.sign`'s tie-break can report crossings
-    * of disjoint, exactly collinear arcs there, which no cap rules out. */
-  def onCellPlane(p: S2Point): Boolean = {
-    val ax = Math.abs(p.x); val ay = Math.abs(p.y); val az = Math.abs(p.z)
-    ax == 0 || ay == 0 || az == 0 || ax == ay || ay == az || ax == az
+    val sx = cv(0).x + cv(1).x + cv(2).x + cv(3).x
+    val sy = cv(0).y + cv(1).y + cv(2).y + cv(3).y
+    val sz = cv(0).z + cv(1).z + cv(2).z + cv(3).z
+    val n = Math.sqrt(sx * sx + sy * sy + sz * sz)
+    val x = sx / n; val y = sy / n; val z = sz / n
+    var cos = 1.0; var sin = 0.0; var k = 0
+    while (k < 4) {
+      val v = cv(k)
+      cos = Math.min(cos, x * v.x + y * v.y + z * v.z)
+      val px = y * v.z - z * v.y; val py = z * v.x - x * v.z; val pz = x * v.y - y * v.x
+      sin = Math.max(sin, Math.sqrt(px * px + py * py + pz * pz))
+      k += 1
+    }
+    SphereCap(x, y, z, cos, sin)
   }
 }
 
-/** Caps of the edges (a(i), b(i)), stored flat. A guarded edge gets the
-  * whole sphere: degenerate (a == b, which `crossingSign` reports as
-  * touching everything), near antipodal, or with an endpoint on a cell
-  * plane. */
+/** Caps of the edges (a(i), b(i)), stored flat. A degenerate edge (a == b,
+  * which `crossingSign` reports as touching everything) or a near-antipodal
+  * one gets the whole sphere. */
 private[core] final class EdgeCaps(a: Array[S2Point], b: Array[S2Point]) {
   private val caps = Array.tabulate(a.length) { i =>
-    if (a(i) == b(i) || SphereCap.onCellPlane(a(i)) || SphereCap.onCellPlane(b(i))) SphereCap.Whole
-    else SphereCap.arc(a(i), b(i))
+    if (a(i) == b(i)) SphereCap.Whole else SphereCap.arc(a(i), b(i))
   }
   private val (cx, cy, cz) = (caps.map(_.x), caps.map(_.y), caps.map(_.z))
   private val (cos, sin) = (caps.map(_.cos), caps.map(_.sin))

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`FullScanClassifier`) on every cell of a face-down recursion, and the
   * coverings it drives equal the full-scan-driven ones. The degenerate
   * fixtures put vertices and edges on the planes that carry cell edges,
-  * where the cap guard must keep every edge test. */
+  * where `S2Pred.sign` meets exact zeros. */
 class ClassifierOracleSpec extends AnyFunSuite {
   import CoveringFixtures._
   import RegionCoverer.Partial
@@ -23,6 +23,11 @@ class ClassifierOracleSpec extends AnyFunSuite {
   }
 
   private val cellLons = Seq(15.0, 75.0, 135.0, -165.0, -105.0, -45.0)
+
+  /** Two boxes sharing an edge on the equator, mirrored across it: the
+    * vertex sum cancels to z == 0 exactly, so `capOf`'s centre lies on the
+    * shared edge and on its great circle. */
+  private val centreOnEdge = "MULTIPOLYGON (((0 0, 5 0, 5 5, 0 5, 0 0)), ((0 0, 0 -5, 5 -5, 5 0, 0 0)))"
 
   private def cellPolygon(id: Long) = Geography.Polygons(Vector(Vector(S2CellId.vertices(id).toVector)))
 
@@ -43,7 +48,8 @@ class ClassifierOracleSpec extends AnyFunSuite {
     "LINESTRING (0 0, 90 0, 179 0)",
     "MULTIPOINT ((0 0), (180 0))",
     "GEOMETRYCOLLECTION (POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0)), " +
-      "LINESTRING (-5 0, 20 0), POINT (0 -3), MULTIPOINT ((90 0), (0 90)))"
+      "LINESTRING (-5 0, 20 0), POINT (0 -3), MULTIPOINT ((90 0), (0 90)))",
+    centreOnEdge
   ).map(w => w -> Wkt.read(w)) ++ Seq(
     "north pole cap" -> Geography.Polygons(Vector(Vector(parallel(80, cellLons, eastward = true)))),
     "north pole cap, reversed" -> Geography.Polygons(Vector(Vector(parallel(80, cellLons, eastward = false)))),
@@ -116,6 +122,16 @@ class ClassifierOracleSpec extends AnyFunSuite {
 
   test("per-cell classification equals the full scan: cities, lines and collections to level 8") {
     compareAll(cities ++ others, 8)
+  }
+
+  test("a degenerate fixture's capOf centre lies on a ring edge's great circle") {
+    val shapes = new GeoShapes(Wkt.read(centreOnEdge))
+    val (center, _) = RegionCoverer.capOf(shapes)
+    val onCircle = shapes.loops.flatten.exists { l =>
+      val v = l.vertices
+      v.indices.exists(i => S2Pred.collinearExact(v(i), v((i + 1) % v.length), center))
+    }
+    assert(onCircle, center)
   }
 
   test("per-cell classification equals the full scan: degenerate fixtures to level 8") {
