@@ -513,7 +513,8 @@ object Bench {
       // thrashes across this suite's ~37 queries x several stages each,
       // so "warm" reps kept paying janino recompiles (r17)
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // reader profile (r18 ScanBench sweep at sf10): 16K columnar batches
+      // reader profile (r18 scan-only sweep at sf10, SCALEUP.md "Reader floor,
+      // re-pinned"): 16K columnar batches
       // + off-heap column vectors read q1's five lineitem columns in
       // 1.20 s vs 1.38-1.45 s for every other knob combination tried
       // (default, either knob alone, 16 MB bins); never slower at small

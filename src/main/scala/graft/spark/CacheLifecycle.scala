@@ -12,8 +12,8 @@ import org.apache.spark.sql.DataFrame
  *
  * This is the discipline established for the dup-gram cache
  * ([[graft.llm.Dedup]], round 12) and the pointer-jumping checkpoint
- * chain, shared so every iterative operator (kNN rounds, connected
- * components, k-means) bounds its footprint the same way.
+ * chain, shared so every iterative operator (connected components,
+ * k-means) bounds its footprint the same way.
  *
  * Bounds: results built but never executed would leak their armed
  * listener, so at most [[MaxArmed]] releases can be armed per JVM —

@@ -32,7 +32,7 @@ import org.apache.spark.sql.DataFrame
  * and the gate would inject a full-width shuffle of the multiplied
  * rows. Every call site in this library fans out the base table side
  * BEFORE any explode/join (Dedup grams, RangeJoin points, KnnJoin's
- * final-pass right side).
+ * left side).
  */
 object FanOut {
 

@@ -1009,28 +1009,6 @@ object Queries {
       .select(col("id"), col("nbr_id"), col("rank").cast("int").as("rank"))
       .orderBy("id", "nbr_id")
   }
-  /** Rounds-path pin: this row forces the expanding-ring branch (budget
-    * 0) against the SAME oracle as t_knn_join — both dispatch arms stay
-    * driver-hash-verified (the BRUTE arm is pinned by b_knn, whose
-    * ~15k-pair product at sf0.01 sits under the 2e6 budget; t_knn_join's
-    * 2.25e6-pair self-join sits just over it and exercises the rounds
-    * path organically). The conf matters only during knn()'s eager
-    * construction, so restoring it after build is race-free. */
-  private val qKnnRounds = (s: SparkSession, dir: String) => {
-    prep(s, dir)
-    val prev = s.conf.getOption("spark.graft.knn.brutePairBudget")
-    s.conf.set("spark.graft.knn.brutePairBudget", "0")
-    try {
-      val pts = s.sql("SELECT id, s2_geogpoint(lon, lat) AS g FROM jpts")
-      KnnJoin.knn(pts, "id", "g", pts, "id", "g", k = 3,
-          pairFilter = Some(col("id") =!= col("nbr_id")))
-        .select(col("id"), col("nbr_id"), col("rank").cast("int").as("rank"))
-        .orderBy("id", "nbr_id")
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.graft.knn.brutePairBudget", v)
-      case None => s.conf.unset("spark.graft.knn.brutePairBudget")
-    }
-  }
   private val oKnnJoin =
     s"""WITH $oracleJpts,
        |d AS (SELECT a.id, b.id AS nbr_id,
@@ -4196,7 +4174,6 @@ object Queries {
     ("t_dwithin_join", qDwithinJoin, Some(oDwithinJoin)),
     ("t_dwithin_join_sql", qDwithinJoinSql, Some(oDwithinJoin)),
     ("t_knn_join", qKnnJoin, Some(oKnnJoin)),
-    ("t_knn_rounds", qKnnRounds, Some(oKnnJoin)),
     ("b_knn", qKnnBench, Some(oKnnBench)),
     ("b_stream_dwithin", qStreamDwithin, Some(oStreamDwithin)),
     ("b_stream_funnel", qStreamFunnel, Some(oStreamFunnel)),

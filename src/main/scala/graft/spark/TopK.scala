@@ -4,6 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+/** Bounded top-k state and result: scores ascending with their ids, ties
+  * on id ascending, at most k entries. Top-level so the Catalyst encoder
+  * codegens cleanly (nested private case classes force the interpreted
+  * fallback). */
+private[spark] final case class TopKBuf(d2: Array[Double], ids: Array[Long])
+
 /**
  * Top-k per group through a k-BOUNDED typed Aggregator — the scale path
  * where `row_number() OVER (PARTITION BY g ORDER BY s)` is the wrong
@@ -22,15 +28,15 @@ import org.apache.spark.sql.functions._
 object TopK {
 
   /** Bounded top-k accumulator over (score, id), ordered (score asc,
-    * id asc), arrays capped at k, `cnt` counting all candidates seen. */
+    * id asc), arrays capped at k. */
   private[spark] final class BoundedTopKAgg(k: Int)
-      extends Aggregator[(Double, Long), KnnTopKBuf, KnnTopKOut] {
-    override def zero: KnnTopKBuf = KnnTopKBuf(0L, Array.emptyDoubleArray, Array.emptyLongArray)
+      extends Aggregator[(Double, Long), TopKBuf, TopKBuf] {
+    override def zero: TopKBuf = TopKBuf(Array.emptyDoubleArray, Array.emptyLongArray)
 
-    private def insert(b: KnnTopKBuf, d2: Double, id: Long): KnnTopKBuf = {
+    private def insert(b: TopKBuf, d2: Double, id: Long): TopKBuf = {
       val n = b.d2.length
       if (n >= k && (d2 > b.d2(n - 1) || (d2 == b.d2(n - 1) && id >= b.ids(n - 1))))
-        return KnnTopKBuf(b.cnt + 1, b.d2, b.ids)
+        return b
       // binary search for the insertion point by (score, id)
       var lo = 0; var hi = n
       while (lo < hi) {
@@ -43,12 +49,12 @@ object TopK {
       nd(lo) = d2; ni(lo) = id
       val tail = m - lo - 1
       if (tail > 0) { System.arraycopy(b.d2, lo, nd, lo + 1, tail); System.arraycopy(b.ids, lo, ni, lo + 1, tail) }
-      KnnTopKBuf(b.cnt + 1, nd, ni)
+      TopKBuf(nd, ni)
     }
 
-    override def reduce(b: KnnTopKBuf, in: (Double, Long)): KnnTopKBuf = insert(b, in._1, in._2)
+    override def reduce(b: TopKBuf, in: (Double, Long)): TopKBuf = insert(b, in._1, in._2)
 
-    override def merge(a: KnnTopKBuf, b: KnnTopKBuf): KnnTopKBuf = {
+    override def merge(a: TopKBuf, b: TopKBuf): TopKBuf = {
       val m = Math.min(a.d2.length + b.d2.length, k)
       val nd = new Array[Double](m); val ni = new Array[Long](m)
       var i = 0; var j = 0; var o = 0
@@ -59,17 +65,17 @@ object TopK {
         else { nd(o) = b.d2(j); ni(o) = b.ids(j); j += 1 }
         o += 1
       }
-      KnnTopKBuf(a.cnt + b.cnt, nd, ni)
+      TopKBuf(nd, ni)
     }
 
-    override def finish(b: KnnTopKBuf): KnnTopKOut = KnnTopKOut(b.cnt, b.d2, b.ids)
-    override def bufferEncoder: Encoder[KnnTopKBuf] = Encoders.product[KnnTopKBuf]
-    override def outputEncoder: Encoder[KnnTopKOut] = Encoders.product[KnnTopKOut]
+    override def finish(b: TopKBuf): TopKBuf = b
+    override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
+    override def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
   }
 
   /** The raw UDAF — usable directly in batch OR streaming aggregations
     * (state per group is k entries; watermarks evict window groups).
-    * Input (score asc, id); output struct (cnt, d2 = sorted scores,
+    * Input (score asc, id); output struct (d2 = sorted scores,
     * ids = matching ids). */
   private[graft] def boundedTopK(k: Int) = udaf(new BoundedTopKAgg(k))
 

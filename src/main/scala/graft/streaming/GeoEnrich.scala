@@ -37,17 +37,19 @@ object GeoEnrich {
    * Stream-static k-nearest-neighbor enrichment: tag each streaming point
    * event with its k nearest points from a STATIC corpus (stations,
    * cities, POIs) — the streaming twin of [[graft.spark.KnnJoin.knn]],
-   * which cannot run on a stream (its certification loop is a driver-side
-   * multi-job escalation).
+   * whose per-level certification is a chain of aggregations grouped by
+   * query row: on a stream each would be a stateful operator holding
+   * every event until a watermark closes it.
    *
    * The static corpus is collected and broadcast (the bounded small-side
    * contract of [[enrichPoints]] / [[graft.llm.Ann.bruteForceTopK]]'s
    * query side) together with a level-L cell index built once on the
-   * driver; each event then runs the SAME certified expanding-neighborhood
-   * search as the batch join — 3×3 ring probe at level L, k-bounded
-   * insertion, kMinWidth certification, level-coarsening escalation,
-   * full-scan fallback — entirely inside one stateless scalar UDF, so the
-   * operator needs no watermark, keeps no state, and joins nothing: at
+   * driver; each event then runs the same certification as the batch
+   * join — 3×3 ring probe at level L, k-bounded insertion, kMinWidth
+   * certification, coarser levels (here one at a time: a probe of the
+   * in-memory index is cheap), full-scan fallback — entirely inside one
+   * stateless scalar UDF, so the operator needs no watermark, keeps no
+   * state, and joins nothing: at
    * stream scale the cost is O(candidates-in-ring) per event against an
    * in-memory index. Ranking is identical to the batch join (squared
    * chord, (dist, id) tie-break), so batch replays of the stream agree

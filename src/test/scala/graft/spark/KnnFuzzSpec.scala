@@ -64,15 +64,11 @@ class KnnFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val df = pts.toDF("id", "lon", "lat")
         .select(col("id"), expr("s2_geogpoint(lon, lat)").as("g"))
-      // these fixtures all fit the brute shortcut's default budget, so odd
-      // seeds force the ring-rounds branch — both dispatch arms stay fuzzed
-      if (seed % 2 == 1) spark.conf.set("spark.graft.knn.brutePairBudget", "0")
       val got =
-        try KnnJoin.knn(df, "id", "g", df, "id", "g", k,
+        KnnJoin.knn(df, "id", "g", df, "id", "g", k,
             pairFilter = Some(col("id") =!= col("nbr_id")))
           .select("id", "nbr_id", "rank")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-        finally if (seed % 2 == 1) spark.conf.unset("spark.graft.knn.brutePairBudget")
       val want = brute(pts, pts, k, excludeSelf = true)
       assert(got === want, s"seed=$seed shape=$shape n=$n k=$k")
     }

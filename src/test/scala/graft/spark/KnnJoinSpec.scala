@@ -63,22 +63,19 @@ class KnnJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("escalation: sparse antipodal points still find their k neighbors") {
     // two tight clusters on opposite sides of the globe plus an isolated
     // pole point: k=4 forces every cluster member to certify locally for
-    // 3 neighbors but escalate (eventually to the broadcast fallback) for
-    // the 4th, which lives across the planet. The brute shortcut would
-    // swallow this tiny fixture whole, so it is disabled: the test exists
-    // to pin the ESCALATION rounds.
+    // 3 neighbors but escalate (eventually to the brute step) for
+    // the 4th, which lives across the planet: the test pins the
+    // ESCALATION down the certification ladder.
     val pts = Seq(
       (0L, 10.0, 10.0), (1L, 10.01, 10.0), (2L, 10.0, 10.01), (3L, 10.022, 10.013),
       (10L, -170.0, -10.0), (11L, -170.01, -10.0), (12L, -170.0, -10.01),
       (20L, 0.0, 89.9))
     val df = ptsDf(pts)
-    spark.conf.set("spark.graft.knn.brutePairBudget", "0")
     val got =
-      try KnnJoin.knn(df, "id", "g", df, "id", "g", k = 4,
+      KnnJoin.knn(df, "id", "g", df, "id", "g", k = 4,
           pairFilter = Some(col("id") =!= col("nbr_id")))
         .select("id", "nbr_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      finally spark.conf.unset("spark.graft.knn.brutePairBudget")
     assert(got === expected(pts, 4, excludeSelf = true))
   }
 
@@ -92,9 +89,8 @@ class KnnJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
           pairFilter = Some(col("id") =!= col("nbr_id")))
         .select("id", "nbr_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val brute = run() // 60x60 pairs sit well under the default budget
-    spark.conf.set("spark.graft.knn.brutePairBudget", "0")
-    val rounds = try run() finally spark.conf.unset("spark.graft.knn.brutePairBudget")
+    val brute = run()
+    val rounds = run()
     assert(brute === rounds)
     assert(brute === expected(pts, 3, excludeSelf = true))
   }
@@ -129,6 +125,21 @@ class KnnJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = math.pow(math.sin(dLat / 2), 2) + math.cos(0.0) * math.cos(math.toRadians(4.0)) * math.pow(math.sin(dLon / 2), 2)
     val expectedM = 2 * 6371010.0 * math.asin(math.sqrt(s))
     assert(math.abs(got - expectedM) / expectedM < 1e-9)
+  }
+
+  test("building the join starts no Spark job") {
+    val pts = (0 until 40).map(i => (i.toLong, (i % 8) * 1.0, (i / 8) * 1.0))
+    val df = ptsDf(pts)
+    val sc = spark.sparkContext
+    val group = s"knn-build-${System.nanoTime()}"
+    sc.setJobGroup(group, "knn construction")
+    val out =
+      try KnnJoin.knn(df, "id", "g", df, "id", "g", k = 2,
+          pairFilter = Some(col("id") =!= col("nbr_id")))
+      finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "knn() must build a lazy plan; the caller's action runs it")
+    assert(out.count() === 80)
   }
 
   test("round caches release once a consuming query completes") {

@@ -29,11 +29,19 @@ class FunnelStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val stages = Seq("view", "click", "purchase")
   private val window = 3600L // 1 hour, minutes-scale fixtures
 
+  /** Users `Group * g + 1 ..` belong to fixture group g: the randomized
+    * tests run every seed in one query, each seed its own group. */
+  private val Group = 1000L
+
   /** The batch query's formulation over an in-memory events table. */
-  private def batchFunnel(rows: Seq[Funnel.FunnelEvent]): (Long, Long, Long) = {
+  private def batchFunnel(rows: Seq[Funnel.FunnelEvent]): (Long, Long, Long) =
+    batchFunnelByGroup(rows).getOrElse(0L, (0L, 0L, 0L))
+
+  /** [[batchFunnel]] per fixture group (user_id / Group). */
+  private def batchFunnelByGroup(rows: Seq[Funnel.FunnelEvent]): Map[Long, (Long, Long, Long)] = {
     val s = spark; import s.implicits._
     rows.toDF("ts", "user_id", "event_type").createOrReplaceTempView("fev")
-    val r = s.sql(
+    s.sql(
       s"""WITH v AS (SELECT user_id, min(ts) AS t FROM fev
          |     WHERE event_type = 'view' GROUP BY user_id),
          |c AS (SELECT e.user_id, min(e.ts) AS t FROM fev e JOIN v ON e.user_id = v.user_id
@@ -42,10 +50,18 @@ class FunnelStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
          |p AS (SELECT e.user_id, min(e.ts) AS t FROM fev e JOIN c ON e.user_id = c.user_id
          |     WHERE e.event_type = 'purchase' AND e.ts > c.t
          |       AND CAST(e.ts AS DOUBLE) - CAST(c.t AS DOUBLE) <= $window GROUP BY e.user_id)
-         |SELECT (SELECT count(*) FROM v), (SELECT count(*) FROM c),
-         |       (SELECT count(*) FROM p)""".stripMargin).as[(Long, Long, Long)].head()
-    r
+         |SELECT user_id DIV $Group AS g, count_if(st = 1), count_if(st = 2), count_if(st = 3)
+         |FROM (SELECT user_id, 1 AS st FROM v UNION ALL SELECT user_id, 2 FROM c
+         |      UNION ALL SELECT user_id, 3 FROM p)
+         |GROUP BY 1""".stripMargin).as[(Long, Long, Long, Long)].collect()
+      .map { case (g, v, c, p) => g -> ((v, c, p)) }.toMap
   }
+
+  /** Per-group (view, click, purchase) counts of a stream's output. */
+  private def stageCounts(got: Seq[(Long, Int, Timestamp)]): Map[Long, (Long, Long, Long)] =
+    got.groupBy(_._1 / Group).map { case (g, rs) =>
+      g -> ((rs.count(_._2 == 1).toLong, rs.count(_._2 == 2).toLong, rs.count(_._2 == 3).toLong))
+    }
 
   private def streamFunnel(batches: Seq[Seq[Funnel.FunnelEvent]]): Seq[(Long, Int, Timestamp)] = {
     val s = spark
@@ -88,18 +104,19 @@ class FunnelStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("randomized parity: state machine equals the batch SQL on 40 seeds") {
-    for (seed <- 1 to 40) {
+    // one query over all seeds: seed s owns users Group * s + 1 ..
+    val rows = (1 to 40).flatMap { seed =>
       val rnd = new scala.util.Random(seed)
       val types = Seq("view", "click", "purchase", "error") // error = noise
-      val rows = (1 to (20 + rnd.nextInt(60))).map { _ =>
-        Funnel.FunnelEvent(ts(rnd.nextInt(300)), 1 + rnd.nextInt(6),
+      (1 to (20 + rnd.nextInt(60))).map { _ =>
+        Funnel.FunnelEvent(ts(rnd.nextInt(300)), Group * seed + 1 + rnd.nextInt(6),
           types(rnd.nextInt(types.length)))
       }
-      val (bv, bc, bp) = batchFunnel(rows)
-      val got = streamFunnel(Seq(rows))
-      assert((got.count(_._2 == 1).toLong, got.count(_._2 == 2).toLong,
-        got.count(_._2 == 3).toLong) === ((bv, bc, bp)), s"seed=$seed")
     }
+    val batch = batchFunnelByGroup(rows)
+    val got = stageCounts(streamFunnel(Seq(rows)))
+    for (seed <- 1L to 40L)
+      assert(got.getOrElse(seed, (0L, 0L, 0L)) === batch.getOrElse(seed, (0L, 0L, 0L)), s"seed=$seed")
   }
 
   test("watermark far past a stage timestamp does not kill the query") {
@@ -193,25 +210,27 @@ class FunnelStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("buffered randomized parity: ANY above-watermark delivery order equals the batch SQL") {
-    for (seed <- 1 to 25) {
+    // one query over all seeds: seed s owns users Group * s + 1 .., and
+    // its rows go out in its own shuffled order across the same three
+    // triggers. Every event time lies in [0, 55) minutes, a span under
+    // the 60 min watermark slack, so no delivery order can drop a row.
+    val seeds = (1 to 25).map { seed =>
       val rnd = new scala.util.Random(1000 + seed)
       val types = Seq("view", "click", "purchase", "error")
-      // event-time span < the 60 min watermark slack, so no delivery
-      // order can drop a row; delivery order is a full shuffle split
-      // across three triggers — the out-of-order-across-triggers case
       val rows = (1 to (20 + rnd.nextInt(40))).map { _ =>
-        Funnel.FunnelEvent(ts(rnd.nextInt(55)), 1 + rnd.nextInt(6),
+        Funnel.FunnelEvent(ts(rnd.nextInt(55)), Group * seed + 1 + rnd.nextInt(6),
           types(rnd.nextInt(types.length)))
       }
       val shuffled = rnd.shuffle(rows)
       val (a, rest) = shuffled.splitAt(shuffled.length / 3)
       val (b, c) = rest.splitAt(rest.length / 2)
-      val (bv, bc, bp) = batchFunnel(rows)
-      val got = streamFunnelBuffered(Seq(a, b, c, flush(55 + 360 + 61)))
-        .filter(_._1 != 999L)
-      assert((got.count(_._2 == 1).toLong, got.count(_._2 == 2).toLong,
-        got.count(_._2 == 3).toLong) === ((bv, bc, bp)), s"seed=$seed")
+      (rows, a, b, c)
     }
+    val batch = batchFunnelByGroup(seeds.flatMap(_._1))
+    val got = stageCounts(streamFunnelBuffered(Seq(seeds.flatMap(_._2), seeds.flatMap(_._3),
+      seeds.flatMap(_._4), flush(55 + 360 + 61))).filter(_._1 != 999L))
+    for (seed <- 1L to 25L)
+      assert(got.getOrElse(seed, (0L, 0L, 0L)) === batch.getOrElse(seed, (0L, 0L, 0L)), s"seed=$seed")
   }
 
   test("buffered: completed funnel drops its buffer and cannot re-enter") {
