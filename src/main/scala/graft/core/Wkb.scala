@@ -37,78 +37,106 @@ object Wkb {
 
   // --------------------------------------------------------------- writer
 
+  /** ISO WKB, little-endian. A sizing pass over the same structure as the
+    * write pass fixes the length, so the bytes go straight into one array
+    * of that size. */
   def write(g: Geography): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(64)
-    writeGeom(out, g)
-    out.toByteArray
+    val buf = ByteBuffer.allocate(sizeOf(g)).order(ByteOrder.LITTLE_ENDIAN)
+    writeGeom(buf, g)
+    buf.array()
   }
 
-  private def writeHeader(out: java.io.ByteArrayOutputStream, geomType: Int): Unit = {
-    out.write(1) // little-endian
-    writeInt(out, geomType)
+  private final val HeaderBytes = 5
+  private final val CoordBytes = 16
+
+  // the rings, lines and groups the writer emits: empty ones are dropped
+  private def lines(ls: Vector[Vector[S2Point]]) = ls.filter(_.nonEmpty)
+  private def groups(p: Polygons) = p.ringGroups.filter(_.exists(_.nonEmpty))
+
+  private def sizeOf(g: Geography): Int = g match {
+    case _: CellCenter => HeaderBytes + CoordBytes
+    case Points(ps) =>
+      if (ps.size <= 1) HeaderBytes + CoordBytes
+      else HeaderBytes + 4 + ps.size * (HeaderBytes + CoordBytes)
+    case Polylines(ls0) =>
+      val ls = lines(ls0)
+      if (ls.isEmpty) HeaderBytes + 4
+      else if (ls.size == 1) HeaderBytes + 4 + ls.head.size * CoordBytes
+      else HeaderBytes + 4 + ls.map(l => HeaderBytes + 4 + l.size * CoordBytes).sum
+    case p: Polygons =>
+      val gs = groups(p)
+      if (gs.isEmpty) HeaderBytes + 4
+      else if (gs.size == 1) polygonSize(gs.head)
+      else HeaderBytes + 4 + gs.map(polygonSize).sum
+    case Collection(items) => HeaderBytes + 4 + items.map(sizeOf).sum
   }
 
-  private def writeInt(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
+  private def polygonSize(rings: Vector[Vector[S2Point]]): Int =
+    HeaderBytes + 4 + lines(rings).map(r => 4 + (r.size + 1) * CoordBytes).sum
+
+  private def writeHeader(out: ByteBuffer, geomType: Int): Unit = {
+    out.put(1: Byte) // little-endian
+    out.putInt(geomType)
   }
 
-  private def writeDouble(out: java.io.ByteArrayOutputStream, v: Double): Unit = {
-    val bits = java.lang.Double.doubleToLongBits(v)
-    var i = 0
-    while (i < 8) { out.write(((bits >> (8 * i)) & 0xff).toInt); i += 1 }
-  }
+  // doubleToLongBits, not the raw bits: every NaN is written as the one
+  // canonical NaN
+  private def writeDouble(out: ByteBuffer, v: Double): Unit =
+    out.putLong(java.lang.Double.doubleToLongBits(v))
 
-  private def writeCoord(out: java.io.ByteArrayOutputStream, p: S2Point): Unit = {
+  private def writeCoord(out: ByteBuffer, p: S2Point): Unit = {
     val lat = p.latDegrees
     val lng = if (Math.abs(lat) == 90.0) 0.0 else p.lngDegrees
     writeDouble(out, lng); writeDouble(out, lat)
   }
 
-  private def writeGeom(out: java.io.ByteArrayOutputStream, g: Geography): Unit = g match {
+  private def writeEmptyPoint(out: ByteBuffer): Unit = {
+    // ISO: POINT EMPTY -> NaN coords
+    writeHeader(out, TPoint); writeDouble(out, Double.NaN); writeDouble(out, Double.NaN)
+  }
+
+  private def writeGeom(out: ByteBuffer, g: Geography): Unit = g match {
     case c: CellCenter =>
-      if (c.isEmpty) { writeHeader(out, TPoint); writeDouble(out, Double.NaN); writeDouble(out, Double.NaN) }
+      if (c.isEmpty) writeEmptyPoint(out)
       else { writeHeader(out, TPoint); writeCoord(out, c.point) }
     case Points(ps) =>
-      if (ps.isEmpty) {
-        // ISO: POINT EMPTY -> NaN coords
-        writeHeader(out, TPoint); writeDouble(out, Double.NaN); writeDouble(out, Double.NaN)
-      } else if (ps.size == 1) {
+      if (ps.isEmpty) writeEmptyPoint(out)
+      else if (ps.size == 1) {
         writeHeader(out, TPoint); writeCoord(out, ps.head)
       } else {
-        writeHeader(out, TMultiPoint); writeInt(out, ps.size)
+        writeHeader(out, TMultiPoint); out.putInt(ps.size)
         ps.foreach { p => writeHeader(out, TPoint); writeCoord(out, p) }
       }
     case Polylines(ls0) =>
-      val ls = ls0.filter(_.nonEmpty)
-      if (ls.isEmpty) { writeHeader(out, TLine); writeInt(out, 0) }
+      val ls = lines(ls0)
+      if (ls.isEmpty) { writeHeader(out, TLine); out.putInt(0) }
       else if (ls.size == 1) {
-        writeHeader(out, TLine); writeInt(out, ls.head.size)
+        writeHeader(out, TLine); out.putInt(ls.head.size)
         ls.head.foreach(writeCoord(out, _))
       } else {
-        writeHeader(out, TMultiLine); writeInt(out, ls.size)
+        writeHeader(out, TMultiLine); out.putInt(ls.size)
         ls.foreach { l =>
-          writeHeader(out, TLine); writeInt(out, l.size); l.foreach(writeCoord(out, _))
+          writeHeader(out, TLine); out.putInt(l.size); l.foreach(writeCoord(out, _))
         }
       }
     case p: Polygons =>
-      val gs = p.ringGroups.filter(_.exists(_.nonEmpty))
-      if (gs.isEmpty) { writeHeader(out, TPolygon); writeInt(out, 0) }
+      val gs = groups(p)
+      if (gs.isEmpty) { writeHeader(out, TPolygon); out.putInt(0) }
       else if (gs.size == 1) writePolygon(out, gs.head)
       else {
-        writeHeader(out, TMultiPolygon); writeInt(out, gs.size)
+        writeHeader(out, TMultiPolygon); out.putInt(gs.size)
         gs.foreach(writePolygon(out, _))
       }
     case Collection(items) =>
-      writeHeader(out, TCollection); writeInt(out, items.size)
+      writeHeader(out, TCollection); out.putInt(items.size)
       items.foreach(writeGeom(out, _))
   }
 
-  private def writePolygon(out: java.io.ByteArrayOutputStream, rings: Vector[Vector[S2Point]]): Unit = {
-    val rs = rings.filter(_.nonEmpty)
-    writeHeader(out, TPolygon); writeInt(out, rs.size)
+  private def writePolygon(out: ByteBuffer, rings: Vector[Vector[S2Point]]): Unit = {
+    val rs = lines(rings)
+    writeHeader(out, TPolygon); out.putInt(rs.size)
     rs.foreach { r =>
-      writeInt(out, r.size + 1)
+      out.putInt(r.size + 1)
       r.foreach(writeCoord(out, _))
       writeCoord(out, r.head) // close the ring
     }

@@ -560,7 +560,12 @@ object Dedup {
       // grams feeds BOTH the dup-owner aggregate and the join-back probe
       // (same plan subtree → Spark's ReuseExchange materializes it once),
       // so the gram MD5 pass runs ONCE and the join sees two sides
-      // already co-partitioned on gh — zero further exchanges. Strictly
+      // already co-partitioned on gh — zero further exchanges. The
+      // subtrees are the same only if both consumers read the same
+      // columns: column pruning would cut the aggregate's copy down to
+      // (id, gh), and two differently pruned copies each ran the MD5 pass
+      // and the shuffle. Hence the aggregate's always-true guard on n_tok
+      // and pos (both are non-null, n_tok >= n > 0, pos >= 0). Strictly
       // less shuffle volume than the partial-agg form below (one gram
       // pass through the wire instead of gram partials + gram probes),
       // which only pays off while "all grams" is small — exactly the
@@ -568,9 +573,10 @@ object Dedup {
       val grams = docGrams
         .select(col(idCol), col("n_tok"), posexplode(col("__ghs")).as(Seq("pos", "gh")))
         .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("gh"))
+      val owner = when(col("n_tok") > 0 && col("pos") >= 0, col(idCol))
       val dupOwners = grams
         .groupBy(col("gh"))
-        .agg(min(col(idCol)).as("__keep"), max(col(idCol)).as("__mx"))
+        .agg(min(owner).as("__keep"), max(owner).as("__mx"))
         .where(col("__keep") =!= col("__mx"))
         .drop("__mx")
       grams.join(dupOwners.hint("SHUFFLE_HASH"), "gh")

@@ -38,9 +38,12 @@ object FanOut {
 
   /** `df` repartitioned round-robin to the session's shuffle parallelism
     * when its optimizer size estimate is under the gate; `df` unchanged
-    * otherwise. Branch-shared consumers of the result reuse the single
-    * exchange (Spark's ReuseExchange), so a fanned-out frame read by two
-    * plan branches still shuffles once. */
+    * otherwise. Two consumers of the result share one exchange only when
+    * Catalyst plans them as identical subtrees (Spark's ReuseExchange):
+    * it may plan them as copies that differ (a rename alias kept in one,
+    * self-join deduplication rewriting another), and then each copy
+    * shuffles. An operator that counts on the reuse asserts it in a plan
+    * spec. */
   def small(df: DataFrame): DataFrame =
     if (!isSmall(df)) df
     else df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)

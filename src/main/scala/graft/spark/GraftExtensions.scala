@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftShim, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -160,6 +160,22 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
                                    left: LogicalPlan, right: LogicalPlan): Int =
     levelSetting(sqlConf, DwithinLevelOffsetConf, 6)
       .getOrElse(defaultDwithinOffset(sqlConf, baseLevel, left, right))
+
+  /** The equi-join key of a cell join: `c ^ (c >>> 32)`, the cell id with
+    * its high word folded into its low one. The fold is a bijection, so a
+    * join on it matches exactly the pairs the raw cell id matches, whatever
+    * mix of levels the cells come from. A level-L cell id ends in a 1 bit
+    * and 60 − 2L zeros, so a coarse cell's low word is one constant, and
+    * Spark's long-keyed hash relation (`LongToUnsafeRowMap`), whose slot
+    * multiplies the key by a 32-bit constant, gathers such keys into long
+    * probe chains. The raw cell stays for everything else (the
+    * smallest-common-cell check). */
+  private[graft] def cellJoinKey(cell: Expression): Expression =
+    BitwiseXor(cell, ShiftRightUnsigned(cell, Literal(32)))
+
+  /** [[cellJoinKey]] for DataFrame code. */
+  private[graft] def cellJoinKey(cell: Column): Column =
+    GraftShim.column(cellJoinKey(GraftShim.expression(cell)))
 
   /** Marks a join this rule already produced, so later optimizer
     * iterations never re-match the refine filter once it gets pushed into
@@ -329,7 +345,8 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
       if (unknownSize(left) && unknownSize(right)) JoinHint(
         noBroadcast(j.hint.leftHint), noBroadcast(j.hint.rightHint))
       else j.hint
-    val cellJoin = Join(lPlan, rPlan, Inner, Some(EqualTo(lCell, rCell)), hint)
+    val cellJoin = Join(lPlan, rPlan, Inner,
+      Some(EqualTo(cellJoinKey(lCell), cellJoinKey(rCell))), hint)
     cellJoin.setTagValue(RewrittenTag, true)
     // evaluation-order discipline: the optimizer reorders bare conjuncts
     // when it folds filters into a join condition, so the cheap

@@ -27,7 +27,8 @@ import graft.core.S2EdgeDist
  *  2. Step at level l of the [[ladder]] (L, L-3, …, ≥ 1): each pending
  *     left point probes the 3×3 cell neighborhood of its level-l cell
  *     (`s2_cells_with_ring`, ring 1), left-outer-joins the index on the
- *     cell key (AQE picks the join strategy and splits skewed metro cells),
+ *     cell ([[SpatialJoinRewrite.cellJoinKey]]; AQE picks the join strategy
+ *     and splits skewed metro cells),
  *     and reduces candidates through a k-BOUNDED typed Aggregator —
  *     map-side partial aggregation keeps per-group state at k entries, so
  *     an ultra-dense cell contributes k candidates per map task, never its
@@ -117,7 +118,7 @@ object KnnJoin {
     // level, so every step joins this one index and matches only its own
     val index = keyed(right, idR, geogR, "__rc30", "__rxyz")
       .select(col(idR).as("nbr_id"), col("__rxyz"), explode(array((levels :+ 0).map(l =>
-        call_function("s2_cell_parent", col("__rc30"), lit(l))): _*)).as("__cell"))
+        call_function("s2_cell_parent", col("__rc30"), lit(l))): _*)).as("__icell"))
     val ok = col("nbr_id").isNotNull && pairFilter.getOrElse(lit(true))
     // one step: rows still pending probe `cells`; a certified row probes
     // only its own leaf cell, which equals no coarser cell, so it passes
@@ -127,7 +128,8 @@ object KnnJoin {
     def probe(rows: DataFrame, cells: Column): DataFrame =
       rows.withColumn("__cell",
           explode(when(col("__done").isNull, cells).otherwise(array(col("__lc30")))))
-        .join(index, Seq("__cell"), "left_outer")
+        .join(index, SpatialJoinRewrite.cellJoinKey(col("__cell")) ===
+          SpatialJoinRewrite.cellJoinKey(col("__icell")), "left_outer")
         .groupBy(col(idL))
         // one left row per id: max carries its keys and any earlier top-k
         .agg(max(struct(col("__lc30"), col("__lxyz"), col("__done"))).as("__row"),

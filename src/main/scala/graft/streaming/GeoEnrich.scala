@@ -209,7 +209,13 @@ object GeoEnrich {
       col("__lxyz"), col("__rxyz"), col("__lpt"), col("__rpt"), lit(meters))
     // when() locks evaluation order: cheap pair filter before the refine
     val guarded = pairFilter.fold(refine)(pf => when(pf, refine).otherwise(lit(false)))
-    l.join(r, col("__lcell") === col("__rcell") && timeRange && guarded)
+    // a batch join matches on the spread cell key; a stream keeps the raw
+    // cell, the key its join state (and any checkpoint of it) is held by
+    val onCell =
+      if (left.isStreaming || right.isStreaming) col("__lcell") === col("__rcell")
+      else SpatialJoinRewrite.cellJoinKey(col("__lcell")) ===
+        SpatialJoinRewrite.cellJoinKey(col("__rcell"))
+    l.join(r, onCell && timeRange && guarded)
       .drop("__lpt", "__lxyz", "__lcell", "__rpt", "__rxyz", "__rcell")
   }
 }

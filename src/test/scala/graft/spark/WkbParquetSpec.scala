@@ -2,7 +2,11 @@ package graft.spark
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +28,31 @@ class WkbParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Job ids `body` starts, read back through a job group. */
+  private def jobsOf[T](body: => T): (T, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"wkb-parquet-${System.nanoTime()}"
+    sc.setJobGroup(group, "counted")
+    val out = try body finally sc.clearJobGroup()
+    (out, sc.statusTracker.getJobIdsForGroup(group).toSeq)
+  }
+
+  /** (footer `geo` entry, row count) of every part file under `dir`. */
+  private def footers(dir: String): Seq[(Option[String], Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    GeoParquet.partFiles(root.getFileSystem(conf), root).toSeq.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try (Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get("geo")),
+        reader.getRecordCount)
+      finally reader.close()
+    }
+  }
+
+  /** Names, types and nullability: what a schema says apart from metadata. */
+  private def shape(s: StructType): Seq[(String, String, Boolean)] =
+    s.fields.toSeq.map(f => (f.name, f.dataType.sql, f.nullable))
 
   test("countries WKB survives a parquet round trip, including areas") {
     val dir = Files.createTempDirectory("graft_wkb").toString
@@ -79,7 +108,7 @@ class WkbParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(geo.get.contains("\"encoding\":\"WKB\""))
     assert(geo.get.contains("\"edges\":\"spherical\""))
 
-    // the byte-for-byte row-group append preserved the data exactly
+    // the rows read back through plain spark.read.parquet are the rows written
     val back = spark.read.parquet(out)
     back.createOrReplaceTempView("geo_back")
     val rows = spark.sql(
@@ -120,6 +149,76 @@ class WkbParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.write.parquet(plainOut)
     val plain = GeoParquet.readGeoParquet(spark, plainOut)
     assert(plain.schema("geometry").metadata.json === "{}")
+  }
+
+  test("writeGeoParquet is one Spark job, and every part file carries the footer") {
+    val dir = Files.createTempDirectory("graft_geopq_one").toString
+    val out = s"$dir/countries_geo.parquet"
+    val df = spark.sql(
+      """SELECT name, s2_aswkb(geog) AS geometry, s2_area(geog) AS area
+        |FROM s2_data_countries""".stripMargin)
+    val (_, jobs) = jobsOf(GeoParquet.writeGeoParquet(df, out, "geometry"))
+    assert(jobs.size === 1, s"the write and its footers must be one job, saw jobs $jobs")
+    val parts = footers(out)
+    assert(parts.size > 1, "expected a multi-file write")
+    assert(parts.forall(_._1.contains(GeoParquet.geoMetadataJson("geometry"))),
+      s"every part file must carry the geo footer: $parts")
+    assert(parts.map(_._2).sum === 177)
+    val files = new java.io.File(out).listFiles().map(_.getName)
+    assert(!files.exists(n => n.contains(".geo-tmp") || n.contains(".geo-bak")), files.mkString(","))
+    // plain parquet reads back the very rows written
+    def rows(d: DataFrame) = d.collect().map(r =>
+      (r.getString(0), r.getAs[Array[Byte]](1).toSeq, r.getDouble(2))).sortBy(_._1).toSeq
+    assert(rows(spark.read.parquet(out)) === rows(df))
+
+    // an empty frame is written as one file, and that file carries it too
+    val empty = s"$dir/empty_geo.parquet"
+    GeoParquet.writeGeoParquet(df.where("false"), empty, "geometry")
+    assert(footers(empty) === Seq((Some(GeoParquet.geoMetadataJson("geometry")), 0L)))
+    assert(GeoParquet.readGeoParquet(spark, empty).count() === 0)
+  }
+
+  test("building readGeoParquet starts no job, and its schema is spark.read.parquet's") {
+    val dir = Files.createTempDirectory("graft_geopq_schema").toString
+    val cities = spark.sql(
+      """SELECT name, population, s2_aswkb(geog) AS geometry,
+        | s2_cell_token(s2_cell_parent(s2_geog_to_cellcenter(geog), 0)) AS face,
+        | s2_cell_token(s2_cell_parent(s2_geog_to_cellcenter(geog), 2)) AS cell_l2
+        |FROM s2_data_cities""".stripMargin)
+    val flat = s"$dir/flat"
+    GeoParquet.writeGeoParquet(cities, flat, "geometry")
+    val byFace = s"$dir/by_face"
+    cities.write.partitionBy("face").parquet(byFace)
+    GeoParquet.stampGeoMetadata(spark, byFace, "geometry")
+    val byCell = s"$dir/by_cell"
+    cities.write.partitionBy("cell_l2").parquet(byCell)
+    GeoParquet.stampGeoMetadata(spark, byCell, "geometry")
+    val plain = s"$dir/plain"
+    cities.write.parquet(plain)
+    // a layout of more leaf directories than
+    // spark.sql.sources.parallelPartitionDiscovery.threshold (32) is
+    // listed by a Spark job in any parquet reader, so only the layouts
+    // Spark lists on the driver are held to "no job"
+    for ((layout, path, listedOnDriver) <- Seq(("flat", flat, true),
+        ("partitionBy face", byFace, true), ("no footer", plain, true),
+        ("partitionBy level-2 cell", byCell, false))) {
+      val (back, jobs) = jobsOf(GeoParquet.readGeoParquet(spark, path))
+      if (listedOnDriver) assert(jobs.isEmpty, s"$layout: building the reader started jobs $jobs")
+      assert(shape(back.schema) === shape(spark.read.parquet(path).schema), layout)
+      assert(back.count() === 243, layout)
+    }
+
+    // schema merging reads every footer: the reader leaves it to Spark
+    val merged = s"$dir/merged"
+    cities.select("name", "geometry").write.parquet(s"$merged/part=1")
+    cities.select("name", "population").write.parquet(s"$merged/part=2")
+    GeoParquet.stampGeoMetadata(spark, merged, "geometry")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val want = spark.read.parquet(merged).schema
+      assert(Set("geometry", "population").subsetOf(want.fieldNames.toSet))
+      assert(shape(GeoParquet.readGeoParquet(spark, merged).schema) === shape(want))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
   }
 
   test("geo footer stamp reaches part files inside partitionBy subdirectories") {
