@@ -3,17 +3,16 @@ package graft.core
 import scala.collection.mutable
 
 /**
- * Planar-graph polygon overlay — the robust core behind s2_intersection /
+ * Planar-graph polygon overlay — the one engine behind s2_intersection /
  * s2_difference / s2_union on polygon inputs (reference semantics:
  * src/s2_binary_index_ops.cpp:157-448, whose S2BooleanOperation gets its
  * degenerate-input robustness from S2Builder snap rounding).
  *
- * The Weiler-Atherton ring-pair traversal in [[PolyClip]] is exact for
- * cleanly crossing / disjoint boundaries but corrupts pieces when a
- * vertex lands ulp-NEAR the other ring's edge (the crossing-node pairing
- * sees an odd count). This engine removes that failure class the way
- * S2BooleanOperation does — make near-incidences EXACT, then operate on
- * a planar subdivision where edges meet only at shared endpoints:
+ * A ring-pair traversal corrupts pieces when a vertex lands ulp-NEAR the
+ * other ring's edge (the crossing-node pairing sees an odd count). This
+ * engine removes that failure class the way S2BooleanOperation does —
+ * make near-incidences EXACT, then operate on a planar subdivision where
+ * edges meet only at shared endpoints:
  *
  *   1. SNAP-ALIGN (~[[SnapTol]] = 1e-12 rad ≈ 6 µm): merge cross-input
  *      vertex pairs within tolerance to one canonical point, and reroute
@@ -34,14 +33,25 @@ import scala.collection.mutable
  *      source ring (keeps corner-touching rings separate), then any
  *      unused successor.
  *
+ * A side with no ring of 3 or more vertices, or whose rings all collapse
+ * once snapped onto the other side's vertices, is the empty region:
+ * A ∩ ∅ = ∅, A \ ∅ = A, ∅ \ A = ∅, A ∪ ∅ = A.
+ *
  * All three ops are selected from ONE subdivision, which makes the
  * self-check nearly free: |A∩B|+|A\B| must equal |A|, |A∩B|+|B\A| = |B|,
- * and |A∪B| = |A|+|B|-|A∩B|. Any violation (or a stitching failure)
- * returns None and the caller falls back to the legacy exact clipper —
- * robustness never regresses below the r5-r7 behavior.
+ * and |A∪B| = |A|+|B|-|A∩B|. A violation, a stitching failure or any
+ * other exception inside the overlay throws [[OverlayException]] naming
+ * the stage; no partial or approximate answer is returned.
  */
 object PolyOverlay {
-  import PolyClip.{Group, Ring}
+  type Ring = Vector[S2Point]
+
+  /** One polygon piece: region = shell minus holes. Region = union of
+    * disjoint groups (boundaries may touch along seams — exact point set). */
+  final case class Group(shell: Ring, holes: Vector[Ring])
+
+  /** An overlay that cannot be completed: the message names the stage. */
+  final case class OverlayException(msg: String) extends RuntimeException(msg)
 
   /** Base snap-alignment tolerance in radians (~6 µm on Earth): generous
     * for ulp-scale degeneracy, far below any real-data feature size. */
@@ -84,12 +94,9 @@ object PolyOverlay {
     else Math.max(SnapTol, Math.min(2.5 * maxD, SnapCap))
   }
 
-  def intersect(a: Vector[Group], b: Vector[Group]): Option[Vector[Group]] =
-    run(a, b).map(_.and)
-  def union(a: Vector[Group], b: Vector[Group]): Option[Vector[Group]] =
-    run(a, b).map(_.or)
-  def diff(a: Vector[Group], b: Vector[Group]): Option[Vector[Group]] =
-    run(a, b).map(_.minus)
+  def intersect(a: Vector[Group], b: Vector[Group]): Vector[Group] = run(a, b).and
+  def union(a: Vector[Group], b: Vector[Group]): Vector[Group] = run(a, b).or
+  def diff(a: Vector[Group], b: Vector[Group]): Vector[Group] = run(a, b).minus
 
   private final case class Results(and: Vector[Group], or: Vector[Group],
                                    minus: Vector[Group])
@@ -98,10 +105,16 @@ object PolyOverlay {
     * global ring index (source-qualified) used for stitch preference. */
   private final case class DEdge(u: S2Point, v: S2Point, ring: Int)
 
-  private def run(a: Vector[Group], b: Vector[Group]): Option[Results] =
-    try runImpl(a, b) catch { case _: Exception => None }
+  private def run(a: Vector[Group], b: Vector[Group]): Results =
+    try runImpl(a, b) catch {
+      case e: OverlayException => throw e
+      case e: Exception => throw OverlayException(s"polygon overlay failed: $e").initCause(e)
+    }
 
-  private def runImpl(aIn: Vector[Group], bIn: Vector[Group]): Option[Results] = {
+  /** Results when B is the empty region. */
+  private def withEmptyB(a: Vector[Group]): Results = Results(Vector.empty, a, a)
+
+  private def runImpl(aIn: Vector[Group], bIn: Vector[Group]): Results = {
     // ---- region-left ring chains (shells as stored small-side = CCW;
     // holes reversed), with each ring's GROUP id — containment of a point
     // in the region is per-group (inside the shell AND inside every
@@ -109,14 +122,16 @@ object PolyOverlay {
     // orientation-aware loops is wrong as soon as a group has a hole
     def leftRings(gs: Vector[Group]): Vector[(Ring, Int)] = gs.zipWithIndex.flatMap {
       case (g, gi) =>
-        val rs = PolyClip.normRing(g.shell) +: g.holes.map(h => PolyClip.normRing(h).reverse)
+        val rs = normRing(g.shell) +: g.holes.map(h => normRing(h).reverse)
         rs.filter(_.size >= 3).map(r => (r, gi))
     }
     val aPairs = leftRings(aIn)
     val bPairs = leftRings(bIn)
     val aRings0 = aPairs.map(_._1)
     val bRings0 = bPairs.map(_._1)
-    if (aRings0.isEmpty || bRings0.isEmpty) return None
+    // a side with no ring of 3 or more vertices is the empty region
+    if (aRings0.isEmpty) return Results(Vector.empty, bIn, Vector.empty)
+    if (bRings0.isEmpty) return withEmptyB(aIn)
 
     // adaptive snap radius: clears the observed degeneracy band (see
     // [[workingTol]]); SnapTol on clean inputs
@@ -141,7 +156,7 @@ object PolyOverlay {
     val bKept = bPairs.map { case (r, gi) => (canonChain(r), gi) }.filter(_._1.size >= 3)
     val bRings = bKept.map(_._1)
     val bGroupOf: Vector[Int] = bKept.map(_._2)
-    if (bRings.isEmpty) return None
+    if (bRings.isEmpty) return withEmptyB(aIn) // B collapsed onto A's vertices
     val bVerts: Vector[S2Point] = bRings.flatten.distinct
 
     // ---- 2. subdivision: per-edge cut lists
@@ -183,10 +198,10 @@ object PolyOverlay {
       for (bi <- bRings.indices; rb = bRings(bi); j <- rb.indices) {
         val b1 = rb(j); val b2 = rb((j + 1) % rb.size)
         // near-collinear pairs are shared arcs (subdivided identically by
-        // step 2a), never transversal crossings — same guard as PolyClip
+        // step 2a), never transversal crossings
         if (S2Pred.crossingSign(a1, a2, b1, b2) > 0 &&
             !(nearLine(a1, a2, b1) && nearLine(a1, a2, b2))) {
-          val p = canonPoint(PolyClip.intersectionPoint(a1, a2, b1, b2),
+          val p = canonPoint(intersectionPoint(a1, a2, b1, b2),
             Seq(a1, a2, b1, b2))
           if (p != a1 && p != a2) aCuts(ai)(i) += p
           if (p != b1 && p != b2) bCuts(bi)(j) += p
@@ -253,26 +268,14 @@ object PolyOverlay {
       }
     }
 
-    val dbg = sys.env.contains("GRAFT_OVERLAY_DEBUG")
-    def fmtE(e: DEdge): String = {
-      def f(p: S2Point) = f"(${p.lngDegrees}%.12g ${p.latDegrees}%.12g)"
-      s"ring${e.ring} ${f(e.u)}->${f(e.v)}"
-    }
-    val andG = stitch(andSel.toVector, tol).getOrElse {
-      if (dbg) System.err.println(s"[polyoverlay] AND stitch failed (${andSel.size} edges):\n  " +
-        andSel.map(fmtE).mkString("\n  "))
-      return None }
-    val orG = stitch(orSel.toVector, tol).getOrElse {
-      if (dbg) System.err.println(s"[polyoverlay] OR stitch failed (${orSel.size} edges)")
-      return None }
-    val minusG = stitch(minusSel.toVector, tol).getOrElse {
-      if (dbg) System.err.println(s"[polyoverlay] MINUS stitch failed (${minusSel.size} edges)")
-      return None }
+    val andG = stitch("AND", andSel.toVector, tol)
+    val orG = stitch("OR", orSel.toVector, tol)
+    val minusG = stitch("MINUS", minusSel.toVector, tol)
 
     // ---- self-check: exact area algebra on the snapped geometry
-    def regionArea(gs: Vector[Group]): Double = gs.map(PolyClip.groupArea).sum
-    val aArea = aIn.map(PolyClip.groupArea).sum
-    val bArea = bIn.map(PolyClip.groupArea).sum
+    def regionArea(gs: Vector[Group]): Double = gs.map(groupArea).sum
+    val aArea = regionArea(aIn)
+    val bArea = regionArea(bIn)
     val i = regionArea(andG); val u = regionArea(orG); val m = regionArea(minusG)
     // gross-corruption tripwire, not an exactness proof: sliver-laden
     // outputs carry curvature-area noise ~eps/edge_len at tiny edges, so
@@ -281,19 +284,17 @@ object PolyOverlay {
     val areaTol = Math.max(1e-10, 1e-7 * (aArea + bArea))
     val ok = Math.abs(i + m - aArea) <= areaTol &&
       Math.abs(u - (aArea + bArea - i)) <= areaTol
-    if (!ok) {
-      if (dbg) System.err.println(
-        s"[polyoverlay] area check failed: i=$i u=$u m=$m aArea=$aArea bArea=$bArea tol=$areaTol")
-      None
-    } else Some(Results(andG, orG, minusG))
+    if (!ok) throw OverlayException(s"polygon overlay area self-check failed: " +
+      s"|A∩B|=$i |A∪B|=$u |A\\B|=$m |A|=$aArea |B|=$bArea tol=$areaTol")
+    Results(andG, orG, minusG)
   }
 
   /** Stitch directed boundary edges into rings: prefer closing the ring,
     * then continuing on the same source ring (keeps corner-touching rings
     * separate instead of producing a figure-eight), then any unused
-    * successor. None on a dangling boundary. */
-  private def stitch(edges: Vector[DEdge], tol: Double = SnapTol): Option[Vector[Group]] = {
-    if (edges.isEmpty) return Some(Vector.empty)
+    * successor. A dangling boundary throws, naming the `op` stitched. */
+  private def stitch(op: String, edges: Vector[DEdge], tol: Double): Vector[Group] = {
+    if (edges.isEmpty) return Vector.empty
     val bySrc = mutable.HashMap[S2Point, mutable.ArrayBuffer[Int]]()
     for (i <- edges.indices)
       bySrc.getOrElseUpdate(edges(i).u, mutable.ArrayBuffer.empty) += i
@@ -312,7 +313,8 @@ object PolyOverlay {
         else {
           val cands = bySrc.getOrElse(nxt, mutable.ArrayBuffer.empty)
             .filter(i => !used(i))
-          if (cands.isEmpty) return None // dangling boundary
+          if (cands.isEmpty) throw OverlayException(s"polygon overlay $op stitch failed: " +
+            f"dangling boundary at (${nxt.lngDegrees}%.12g ${nxt.latDegrees}%.12g) (${edges.size} edges)")
           val sameRing = cands.find(i => edges(i).ring == edges(cur).ring)
           cur = sameRing.getOrElse(cands.head)
         }
@@ -321,17 +323,16 @@ object PolyOverlay {
       // OUTSIDE vertex-merge range (e.g. 1.02e-12 rad apart) leaves a stub
       // edge whose turn-angle curvature is fp noise — collapse it here
       // (changes the boundary by <= 4e-12 rad, well inside snap semantics)
-      val cyc = dedupeTol(PolyClip.dedupeRing(ring.toVector), 4 * tol)
+      val cyc = dedupeTol(dedupeRing(ring.toVector), 4 * tol)
       if (cyc.size >= 3) rings += cyc
     }
     // canonical storage: small-side rings rotated to lex-min start,
-    // parity-nested groups sorted — same form as PolyClip.dissolveSeams
-    val stored = rings.toVector.map(PolyClip.normRing).map { r =>
+    // parity-nested groups sorted
+    val stored = rings.toVector.map(normRing).map { r =>
       val k = r.indices.minBy(i => (r(i).x, r(i).y, r(i).z))
       r.drop(k) ++ r.take(k)
     }
-    Some(PolyClip.regroupNested(stored)
-      .sortBy(g => (g.shell.head.x, g.shell.head.y, g.shell.head.z)))
+    regroupNested(stored).sortBy(g => (g.shell.head.x, g.shell.head.y, g.shell.head.z))
   }
 
   /** Drop consecutive vertices within `tol` radians in a cyclic chain. */
@@ -359,5 +360,125 @@ object PolyOverlay {
     if (nn < 1e-30) return false
     if (Math.abs(w.dot(n)) / nn > tol) return false
     w.dot(n.cross(u)) > 0 && w.dot(v.cross(n)) > 0
+  }
+
+  /** Robust spherical edge intersection point of crossing edges. The
+    * double-precision cross-product chain has direction error ~eps/|x|
+    * where |x| ~ sin(crossing angle): near-PARALLEL crossings (shared
+    * borders digitized twice with ulp drift cross at ~1e-11 rad) would be
+    * off by meters. Below a safe norm threshold the direction is recomputed
+    * with exact BigDecimal arithmetic (doubles are exact in BigDecimal, so
+    * (a x b) x (c x d) is exact; only the final normalize rounds), keeping
+    * the error ~1 ulp at ANY crossing angle. */
+  def intersectionPoint(a: S2Point, b: S2Point, c: S2Point, d: S2Point): S2Point = {
+    val x = a.cross(b).cross(c.cross(d))
+    val n = x.norm
+    val p =
+      if (n >= 1e-6) x * (1.0 / n)
+      else exactIntersectionDir(a, b, c, d).getOrElse((a + b + c + d).normalize)
+    if (p.dot(a + b) < 0) -p else p
+  }
+
+  private def exactIntersectionDir(a: S2Point, b: S2Point,
+                                   c: S2Point, d: S2Point): Option[S2Point] = {
+    import java.math.{BigDecimal => BD}
+    def bd(v: Double) = new BD(v)
+    def cross(x1: BD, y1: BD, z1: BD, x2: BD, y2: BD, z2: BD): (BD, BD, BD) =
+      (y1.multiply(z2).subtract(z1.multiply(y2)),
+       z1.multiply(x2).subtract(x1.multiply(z2)),
+       x1.multiply(y2).subtract(y1.multiply(x2)))
+    val (n1x, n1y, n1z) = cross(bd(a.x), bd(a.y), bd(a.z), bd(b.x), bd(b.y), bd(b.z))
+    val (n2x, n2y, n2z) = cross(bd(c.x), bd(c.y), bd(c.z), bd(d.x), bd(d.y), bd(d.z))
+    val (xx, xy, xz) = cross(n1x, n1y, n1z, n2x, n2y, n2z)
+    val m = xx.abs.max(xy.abs).max(xz.abs)
+    if (m.signum == 0) return None
+    // rescale so the largest component is O(1) before the double convert
+    // (|x| can underflow a double for femto-angle crossings)
+    val shift = -(m.precision - m.scale - 1)
+    val v = S2Point(xx.scaleByPowerOfTen(shift).doubleValue,
+      xy.scaleByPowerOfTen(shift).doubleValue,
+      xz.scaleByPowerOfTen(shift).doubleValue)
+    val nn = v.norm
+    if (nn == 0.0 || nn.isNaN || nn.isInfinite) None else Some(v * (1.0 / nn))
+  }
+
+  /** Normalize a ring to enclose its small side (engine storage form). */
+  private def normRing(r: Ring): Ring =
+    if (r.size >= 3 && new S2Loop(r.toArray).isInverted) r.reverse else r
+
+  private def groupArea(g: Group): Double =
+    new S2Loop(normRing(g.shell).toArray).area -
+      g.holes.map(h => new S2Loop(normRing(h).toArray).area).sum
+
+  /** Containment probe for ring nesting that avoids the container's
+    * boundary: a ring touching another at a point (T-junction, corner
+    * touch) must not be classified by that touch point — S2Loop.contains
+    * is unspecified ON the boundary. Picks the first vertex (then edge
+    * midpoint) of `r` clearly off `container`'s boundary; falls back to
+    * the head vertex only when every probe is boundary-incident (rings
+    * sharing their entire boundary — ambiguous either way). */
+  private def offBoundaryContains(container: S2Loop, containerRing: Ring,
+                                  r: Ring): Boolean = {
+    val btol = 1e-9
+    def onBoundary(p: S2Point): Boolean = {
+      var i = 0
+      while (i < containerRing.size) {
+        val u = containerRing(i); val v = containerRing((i + 1) % containerRing.size)
+        if (p == u || p.angle(u) <= btol) return true
+        val n = u.cross(v); val nn = n.norm
+        if (nn >= 1e-30 && Math.abs(p.dot(n)) / nn <= btol &&
+            p.dot(n.cross(u)) > 0 && p.dot(v.cross(n)) > 0) return true
+        i += 1
+      }
+      false
+    }
+    var i = 0
+    while (i < r.size) {
+      if (!onBoundary(r(i))) return container.contains(r(i))
+      i += 1
+    }
+    i = 0
+    while (i < r.size) {
+      val m = (r(i) + r((i + 1) % r.size)).normalize
+      if (!onBoundary(m)) return container.contains(m)
+      i += 1
+    }
+    container.contains(r.head)
+  }
+
+  /** Parity-aware nesting of stitched rings: a ring inside an EVEN number
+    * of other rings is a shell, odd makes it a hole of its innermost
+    * container — an island nested inside a hole becomes its own polygon,
+    * not a second hole of the outer shell. */
+  private def regroupNested(rings: Vector[Ring]): Vector[Group] = {
+    if (rings.size <= 1) return rings.map(r => Group(r, Vector.empty))
+    val loops = rings.map(r => new S2Loop(r.toArray))
+    val order = rings.indices.sortBy(i => -loops(i).area)
+    val holesOf = mutable.LinkedHashMap[Int, mutable.ArrayBuffer[Ring]]()
+    for ((i, k) <- order.zipWithIndex) {
+      val containers = order.take(k).filter(j =>
+        offBoundaryContains(loops(j), rings(j), rings(i)))
+      if (containers.size % 2 == 0) holesOf(i) = mutable.ArrayBuffer()
+      else {
+        val parent = containers.minBy(j => loops(j).area)
+        // in well-formed nesting the innermost container of an odd-depth
+        // ring is a shell; fall back to own-shell if it is not
+        if (holesOf.contains(parent)) holesOf(parent) += rings(i)
+        else holesOf(i) = mutable.ArrayBuffer()
+      }
+    }
+    holesOf.iterator.map { case (i, hs) => Group(rings(i), hs.toVector) }.toVector
+  }
+
+  /** Drop consecutive (near-)duplicate vertices: crossings computed next
+    * to an existing vertex land within ulp of it, and a doubled vertex
+    * corrupts the turn-angle curvature sum (garbage loop areas). ~6 um
+    * tolerance on Earth. */
+  private def dedupeRing(r: Ring): Ring = {
+    @inline def near(a: S2Point, b: S2Point): Boolean = a == b || a.angle(b) < 1e-12
+    val out = mutable.ArrayBuffer[S2Point]()
+    for (p <- r) if (out.isEmpty || !near(out.last, p)) out += p
+    while (out.size > 1 && near(out.head, out.last)) out.remove(out.size - 1)
+    out.toVector
   }
 }

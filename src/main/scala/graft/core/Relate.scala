@@ -353,7 +353,7 @@ object Relate {
       }
     def addCut(c: S2Point, d: S2Point): Unit = {
       if (S2Pred.crossingSign(p, q, c, d) > 0) {
-        val t = theta(PolyClip.intersectionPoint(p, q, c, d))
+        val t = theta(PolyOverlay.intersectionPoint(p, q, c, d))
         if (t > CoverEps && t < total - CoverEps) cuts += t
       }
       vertexCut(c); vertexCut(d)

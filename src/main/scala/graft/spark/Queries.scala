@@ -658,7 +658,7 @@ object Queries {
   // from src/s2_binary_index_ops.cpp:157-448). Every value is a pinned
   // canonical output, so the snap engine's robustness claims are
   // oracle-pinned, not just invariant-pinned (the invariants run in
-  // tools/FuzzOverlay classes 0-9).
+  // SnapOverlaySpec over the OverlayFuzz classes, mixed dimension included).
   private val qOverlayDegen = sqlQ(
     """WITH sq AS (SELECT s2_geogfromtext('POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))') AS a),
       |tj AS (SELECT a, s2_geogfromtext('POLYGON ((10 2, 18 2, 18 8, 10 8, 10 2))') AS b FROM sq),

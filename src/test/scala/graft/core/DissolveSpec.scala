@@ -2,9 +2,10 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Canonical union boundaries: the A ⊎ (B \ A) decomposition's seam edges
-  * are dissolved, so overlapping multi-ring / hole-bearing unions emit ONE
-  * boundary per connected region (deterministic WKT), with area and
+/** Canonical union boundaries: the overlay stitches the union from one
+  * planar subdivision of both inputs, so overlapping multi-ring /
+  * hole-bearing unions emit ONE boundary per connected region, with no
+  * seam between overlapping pieces (deterministic WKT), and area and
   * containment exactly preserved. */
 class DissolveSpec extends AnyFunSuite {
   private def g(w: String) = Wkt.read(w)
@@ -67,14 +68,10 @@ class DissolveSpec extends AnyFunSuite {
       R(x0, y0, x0 + 2 + rnd.nextInt(12), y0 + 2 + rnd.nextInt(12))
     }
     // Degenerate-touch filter: rects sharing a boundary coordinate touch
-    // along an edge or at a vertex. Exactly-coplanar touches (equator,
-    // prime meridian) and simple meridian touches are handled, but a
-    // vertex landing ulp-near the other ring's edge great circle can
-    // still produce an odd crossing count that breaks the Weiler-Atherton
-    // node pairing — full robustness there needs snap rounding
-    // (S2BooleanOperation's model). The fuzz therefore drives the
-    // PROPER-CROSSING-or-disjoint space, which is what the overlay
-    // algebra guarantees exact.
+    // along an edge or at a vertex. Touching and ulp-near inputs are
+    // SnapOverlaySpec's fuzz; this property drives the
+    // PROPER-CROSSING-or-disjoint space, where the union's point set is
+    // exact.
     def touches(a: R, b: R): Boolean =
       Seq(a.x0, a.x1).exists(x => x == b.x0 || x == b.x1) ||
         Seq(a.y0, a.y1).exists(y => y == b.y0 || y == b.y1)
@@ -109,7 +106,7 @@ class DissolveSpec extends AnyFunSuite {
         assert(!back.isEmpty, s"round trip lost the union of\n$aW\n$bW")
         // 2. point-set oracle: union contains p <=> A contains p or B does.
         // Probes must stay OFF the input edges: closed-model containment of
-        // an exactly-on-boundary point is fp-fragile once the dissolve
+        // an exactly-on-boundary point is fp-fragile once the overlay
         // splits an edge at a computed intersection (the sub-edge plane is
         // 1 ulp off the original great circle) — the same artifact class as
         // any computed-crossing representation. Irrational-ish start/step

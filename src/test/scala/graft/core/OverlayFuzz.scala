@@ -1,11 +1,9 @@
-package graft.tools
-
-import graft.core.{Geography, Overlay, S2Measure, Wkt}
+package graft.core
 
 /**
- * Bulk overlay robustness fuzzer — the degenerate-input stress harness
- * behind the snap-overlay engine's claims (SnapOverlaySpec covers 60
- * seeds in CI; this runs thousands on demand).
+ * Overlay robustness fuzz generators and checks: the degenerate-input
+ * classes behind the snap-overlay engine's claims, run by SnapOverlaySpec
+ * (classes 0-8 at 30 seeds each, the mixed class at 200 seeds).
  *
  * Generates the input classes that break naive clippers (klass 0-8):
  *   0. shared straight border digitized twice, ±ulp perturbed, with a
@@ -22,22 +20,21 @@ import graft.core.{Geography, Overlay, S2Measure, Wkt}
  *   6. B shares a double-digitized border with A's HOLE (donut A)
  *   7. B bridges TWO disjoint A rectangles (multi-group classification)
  *   8. rotated lattice neighbors (nothing axis-aligned)
+ * and a mixed-dimension class ([[genMixedPair]]).
  *
- * For every seed it checks the area algebra (|A∪B| = |A|+|B|-|A∩B|,
+ * [[checkPair]] checks the area algebra (|A∪B| = |A|+|B|-|A∩B|,
  * |A∩B|+|A\B| = |A|, |A∩B|+|B\A| = |B|) to a sliver tolerance and
  * reports any violation or thrown error with the reproducing WKT.
- *
- * Usage: runMain graft.tools.FuzzOverlay [nSeeds] [classFilter]
  */
-object FuzzOverlay {
+object OverlayFuzz {
   private def g(w: String) = Wkt.read(w, validate = false)
   private def area(x: Geography) = S2Measure.areaMeters2(x)
 
   private def poly(coords: Seq[(Double, Double)]): String =
     "POLYGON ((" + (coords :+ coords.head).map { case (x, y) => s"$x $y" }.mkString(", ") + "))"
 
-  /** Deterministic degenerate-pair generator for `seed`; `klass` 0-4 as in
-    * the class list above. Shared with SnapOverlaySpec's CI subset. */
+  /** Deterministic degenerate-pair generator for `seed`; `klass` 0-8 as in
+    * the class list above. */
   def genPair(seed: Int, klass: Int): (String, String) = {
     val rnd = new scala.util.Random(20260813L + seed * 7919L)
     def eps() = (rnd.nextDouble() - 0.5) * 1.2e-10
@@ -224,33 +221,4 @@ object FuzzOverlay {
     } catch {
       case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}\n  A=$aW\n  B=$bW")
     }
-
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("repro")) {
-      val a = g(args(1)); val b = g(args(2))
-      val aA = area(a); val bA = area(b)
-      println(f"|A|=$aA%.6g |B|=$bA%.6g")
-      println(f"|A∪B|=${area(Overlay.union(a, b))}%.6g")
-      println(f"|A∩B|=${area(Overlay.intersection(a, b))}%.6g")
-      println(f"|A\\B|=${area(Overlay.difference(a, b))}%.6g")
-      println(f"|B\\A|=${area(Overlay.difference(b, a))}%.6g")
-      println("A\\B = " + Wkt.write(Overlay.difference(a, b)))
-      println("B\\A = " + Wkt.write(Overlay.difference(b, a)))
-      return
-    }
-    val n = args.headOption.map(_.toInt).getOrElse(2000)
-    val only = args.drop(1).headOption.map(_.toInt)
-    var failures = 0
-    for (seed <- 0 until n) {
-      val klass = only.getOrElse(seed % 10)
-      val res =
-        if (klass == 9) { val (lW, aW) = genMixedPair(seed); checkMixedPair(lW, aW) }
-        else { val (aW, bW) = genPair(seed, klass); checkPair(aW, bW) }
-      res.foreach { msg =>
-        failures += 1
-        println(s"FAIL seed=$seed class=$klass $msg")
-      }
-    }
-    println(s"[fuzz-overlay] $n seeds, $failures failures")
-  }
 }

@@ -125,6 +125,45 @@ class OverlaySpec extends AnyFunSuite {
     assert(checked === 40)
   }
 
+  test("a degenerate polygon side is the empty region") {
+    def raw(w: String) = Wkt.read(w, validate = false)
+    def fmt(x: Geography) = Wkt.write(x, 6)
+    val aW = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+    val a = raw(aW)
+    val empty = "GEOMETRYCOLLECTION EMPTY"
+    // B -> B \ A
+    val cases = Seq(
+      // no ring of 3 or more vertices: the disjoint coverings return B as is
+      "POLYGON ((0 0, 1 1, 0 0))" -> "POLYGON ((0 0, 1 1, 0 0))",
+      // a degenerate shell bounds nothing, so its hole goes with it
+      "POLYGON ((0 0, 1 1, 0 0), (2 2, 3 2, 3 3, 2 2))" -> empty,
+      // a triangle below the snap radius collapses onto A's corner
+      "POLYGON ((10 10, 10.00000000001 10, 10 10.00000000001, 10 10))" -> empty)
+    for ((bW, bMinusA) <- cases) {
+      val b = raw(bW)
+      assert(fmt(Overlay.intersection(a, b)) === empty, bW)
+      assert(fmt(Overlay.difference(a, b)) === aW, bW)
+      assert(fmt(Overlay.union(a, b)) === aW, bW)
+      assert(fmt(Overlay.difference(b, a)) === bMinusA, bW)
+    }
+  }
+
+  test("an overlay the engine cannot complete throws OverlayException") {
+    def ring(lngLat: (Double, Double)*) =
+      lngLat.map { case (x, y) => S2Point.fromLatLngDegrees(y, x) }.toVector
+    val a = Vector(PolyOverlay.Group(ring((0, 0), (10, 0), (10, 10), (0, 10)), Vector.empty))
+    val b = Vector(PolyOverlay.Group(
+      ring((5, 5), (15, 5), (15, 15)) :+ S2Point(Double.NaN, 0, 0), Vector.empty))
+    val e = intercept[PolyOverlay.OverlayException](PolyOverlay.union(a, b))
+    assert(e.getMessage.startsWith("polygon overlay"), e.getMessage)
+    // members sharing an edge pass validation, but the engine classifies a
+    // side's edges only against the other side: a typed error, not a value
+    val adjacent = Wkt.read(
+      "MULTIPOLYGON (((6 6, 9 6, 9 10, 6 10, 6 6)), ((5 6, 6 6, 6 10, 5 10, 5 6)))")
+    val top = Wkt.read("POLYGON ((6 7, 8 7, 8 11, 6 11, 6 7))")
+    intercept[PolyOverlay.OverlayException](Overlay.intersection(adjacent, top))
+  }
+
   test("line clipped by polygon") {
     val line = g("LINESTRING (-5 5, 15 5)")
     val poly = g("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))")

@@ -3,30 +3,38 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Snap-rounded overlay robustness (VERDICT r7 item 1): shared borders
-  * digitized twice land vertices ulp-NEAR the other ring's edges — the one
-  * input class the legacy Weiler-Atherton clipper could corrupt. The
-  * planar-graph engine ([[PolyOverlay]]) snap-aligns those incidences
-  * exact; this spec fuzzes ±ulp-perturbed shared-border polygon pairs and
+  * digitized twice land vertices ulp-NEAR the other ring's edges — the
+  * input class that corrupts a ring-pair traversal. The planar-graph
+  * engine ([[PolyOverlay]]) snap-aligns those incidences exact; this spec
+  * fuzzes ±ulp-perturbed shared-border polygon pairs ([[OverlayFuzz]]) and
   * checks the area/containment invariants on every seed. */
 class SnapOverlaySpec extends AnyFunSuite {
   private def g(w: String) = Wkt.read(w, validate = false)
   private def areaSr(x: Geography) = S2Measure.areaMeters2(x)
 
-  private def groupsOf(x: Geography): Vector[PolyClip.Group] = x match {
+  private def groupsOf(x: Geography): Vector[PolyOverlay.Group] = x match {
     case p: Geography.Polygons =>
-      p.ringGroups.map(rs => PolyClip.Group(rs.head, rs.tail))
+      p.ringGroups.map(rs => PolyOverlay.Group(rs.head, rs.tail))
     case _ => fail(s"not a polygon: $x")
   }
+  private def areaOf(gs: Vector[PolyOverlay.Group]): Double =
+    areaSr(Geography.Polygons(gs.map(x => x.shell +: x.holes)))
 
   test("PolyOverlay engages (no silent fallback) on clean and degenerate input") {
     val a = groupsOf(g("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"))
     val b = groupsOf(g("POLYGON ((5 5, 15 5, 15 15, 5 15, 5 5))"))
-    assert(PolyOverlay.intersect(a, b).isDefined)
-    assert(PolyOverlay.union(a, b).isDefined)
-    assert(PolyOverlay.diff(a, b).isDefined)
     // vertex ulp-near the other ring's edge interior
     val c = groupsOf(g("POLYGON ((10.0000000000001 5, 20 5, 20 15, 10.0000000000001 15, 10.0000000000001 5))"))
-    assert(PolyOverlay.union(a, c).isDefined)
+    for ((x, y) <- Seq((a, b), (a, c))) {
+      val xA = areaOf(x); val yA = areaOf(y)
+      val i = areaOf(PolyOverlay.intersect(x, y))
+      val u = areaOf(PolyOverlay.union(x, y))
+      val m = areaOf(PolyOverlay.diff(x, y))
+      val tol = 1e-9 * (xA + yA)
+      assert(Math.abs(i + m - xA) <= tol, s"|A∩B|+|A\\B| != |A|: $i + $m vs $xA")
+      assert(Math.abs(u - (xA + yA - i)) <= tol, s"|A∪B| != |A|+|B|-|A∩B|: $u vs ${xA + yA - i}")
+    }
+    assert(areaOf(PolyOverlay.intersect(a, b)) > 0.2 * areaOf(a))
   }
 
   test("shared border digitized twice: exact and ±ulp-perturbed unions stay consistent") {
@@ -73,14 +81,13 @@ class SnapOverlaySpec extends AnyFunSuite {
   }
 
   test("fuzz: five degenerate classes hold area invariants (round-8 generators)") {
-    // 30 seeds x 9 classes of graft.tools.FuzzOverlay (double-digitized
-    // polygons, exact/perturbed T-junctions, angled shared edges,
-    // perturbed chains) — the CI slice of the 20k-seed offline run that
-    // drove the adaptive snap radius + off-boundary nesting probe fixes
-    import graft.tools.FuzzOverlay
+    // 30 seeds x 9 classes of OverlayFuzz (double-digitized polygons,
+    // exact/perturbed T-junctions, angled shared edges, perturbed chains):
+    // the classes that drove the adaptive snap radius + off-boundary
+    // nesting probe fixes
     for (seed <- 0 until 30; klass <- 0 until 9) {
-      val (aW, bW) = FuzzOverlay.genPair(seed, klass)
-      FuzzOverlay.checkPair(aW, bW).foreach(msg => fail(s"seed=$seed class=$klass $msg"))
+      val (aW, bW) = OverlayFuzz.genPair(seed, klass)
+      OverlayFuzz.checkPair(aW, bW).foreach(msg => fail(s"seed=$seed class=$klass $msg"))
     }
   }
 
@@ -88,10 +95,9 @@ class SnapOverlaySpec extends AnyFunSuite {
     // line riding on / crossing through / vertexed exactly on a polygon's
     // meridian edge: |L∩A| + |L\A| = |L| whichever side the CLOSED model
     // routes boundary-riding pieces to
-    import graft.tools.FuzzOverlay
     for (seed <- 0 until 200) {
-      val (lW, aW) = FuzzOverlay.genMixedPair(seed)
-      FuzzOverlay.checkMixedPair(lW, aW).foreach(msg => fail(s"seed=$seed $msg"))
+      val (lW, aW) = OverlayFuzz.genMixedPair(seed)
+      OverlayFuzz.checkMixedPair(lW, aW).foreach(msg => fail(s"seed=$seed $msg"))
     }
   }
 
