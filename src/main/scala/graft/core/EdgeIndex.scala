@@ -195,9 +195,9 @@ object EdgeIndex {
     } else false
   }
 
-  /** Like anyProperCrossing but RING edges on BOTH sides: probe's ring
-    * edges against indexed's ring edges only (containment checks for
-    * polygon content of a mixed collection — indexed's polyline content
+  /** Index-accelerated "any RING edge of probe properly crosses any RING
+    * edge of indexed" (strict crossings only — containment checks for
+    * polygon content of a mixed collection: indexed's polyline content
     * cannot reduce its polygon coverage, so a line crossing a contained
     * ring must not disqualify containment). Edge ordinals in the index
     * follow foreachEdge order (lines first), so ring edges are exactly the
@@ -219,33 +219,6 @@ object EdgeIndex {
     probe.foreachRingEdge { (p1, p2) =>
       val cands = idx.candidates(p1, p2)
       var i = cands.nextSetBit(firstRing)
-      while (i >= 0 && !crossed) {
-        if (properCross(p1, p2, idx.starts(i), idx.ends(i))) crossed = true
-        i = cands.nextSetBit(i + 1)
-      }
-      !crossed
-    }
-    crossed
-  }
-
-  /** Index-accelerated "any edge of probe properly crosses any edge of
-    * indexed" (strict crossings only — containment checks). */
-  def anyProperCrossing(probe: GeoShapes, indexed: GeoShapes): Boolean = {
-    if (indexed.numEdges < MinEdges) {
-      var crossed = false
-      indexed.foreachEdge { (q1, q2) =>
-        probe.foreachEdge { (p1, p2) =>
-          if (properCross(p1, p2, q1, q2)) { crossed = true; false } else true
-        }
-        !crossed
-      }
-      return crossed
-    }
-    val idx = indexed.edgeIndex
-    var crossed = false
-    probe.foreachEdge { (p1, p2) =>
-      val cands = idx.candidates(p1, p2)
-      var i = cands.nextSetBit(0)
       while (i >= 0 && !crossed) {
         if (properCross(p1, p2, idx.starts(i), idx.ends(i))) crossed = true
         i = cands.nextSetBit(i + 1)

@@ -34,20 +34,20 @@ object TextAnalysis {
       .replaceAll("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")
       .replaceAll("\\s+", " ").trim
 
-  /** [[normalizeTextFn]] as a column — a native codegen expression
-    * (spark/TextExpressions) since r13: the declared hot ingest surface
-    * should not ride a per-row ScalaUDF converter. Built DIRECTLY as an
+  /** [[normalizeTextFn]] as a column — the `text_normalize` kernel call
+    * (spark/SqlFunctions) inside whole-stage codegen: the declared hot
+    * ingest surface should not ride a per-row ScalaUDF converter. Built DIRECTLY as an
     * expression (GraftShim), not through a session's function registry,
     * so the Column is session-free like the UDF form was — it analyzes
     * correctly in whatever session the frame belongs to. */
   def normalizeText(text: Column): Column =
     org.apache.spark.sql.GraftShim.column(
-      graft.spark.TextExpressions.TextNormalizeExpr(
+      graft.spark.NativeCall("text_normalize", Seq(
         // unconditional cast: the child may be unresolved here, so its
         // type can't be inspected; string->string folds away at analysis
         org.apache.spark.sql.catalyst.expressions.Cast(
           org.apache.spark.sql.GraftShim.expression(text),
-          org.apache.spark.sql.types.StringType)))
+          org.apache.spark.sql.types.StringType))))
 
   /** BPE-ish subword count: letter runs, digits, and punctuation each count;
     * a long letter run costs ceil(len/4) tokens (crude BPE cost model). */
@@ -722,9 +722,9 @@ object TextAnalysis {
   def register(spark: SparkSession): Unit = {
     spark.udf.register("doc_lang_id", langIdFn)
     spark.udf.register("doc_fingerprint", fingerprintFn)
-    // doc_normalize is registered as the NATIVE codegen expression (not a
-    // ScalaUDF) so SQL users get the same whole-stage-codegen plan as the
-    // Column API's normalizeText
+    // doc_normalize is the text_normalize kernel call (not a ScalaUDF), so
+    // SQL users get the same whole-stage-codegen plan as the Column API's
+    // normalizeText
     graft.spark.TextExpressions.ensureRegistered(spark)
     ()
   }

@@ -1,20 +1,19 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Add, And, BinaryExpression, CaseWhen, Cast, EqualTo, Expression, GetArrayItem, GreaterThan, If, LessThanOrEqual, Literal, Multiply, Size, Subtract, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Add, And, CaseWhen, EqualTo, Expression, GetArrayItem, GreaterThan, If, LessThanOrEqual, Literal, Multiply, Size, Subtract}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 
 /**
- * Static, primitive-typed kernel entry points for whole-stage codegen: the
- * generated Java calls these directly (no Scala-function boxing, no
- * Option allocation, no catalyst<->scala converters). Null handling stays in
- * the expression layer (nullIntolerant): null in, null out, for predicates
- * too (null, not false).
+ * The geography and cell kernels of the `s2_*` SQL names, one static method
+ * per name, typed in Catalyst types (`Array[Byte]` for GEOGRAPHY and WKB,
+ * `UTF8String`, `ArrayData`, primitives). Whole-stage codegen calls them
+ * directly (no Scala-function boxing, no catalyst<->scala converters);
+ * [[NativeCall]] invokes the same method when it is interpreted. Null
+ * handling stays in the expression (null in, null out, for predicates too):
+ * a kernel never sees a null argument and never returns null.
  */
 object S2Native {
 
@@ -106,16 +105,16 @@ object S2Native {
   }
 
   def geogPoint(lon: Double, lat: Double): Array[Byte] =
-    GeoCodec.encode(graft.core.Geography.point(lon, lat))
+    GeoCodec.encode(Geography.point(lon, lat))
 
   def coveringFixedLevel(b: Array[Byte], level: Int): ArrayData =
     new GenericArrayData(RegionCoverer.coverFixedLevel(GeoCodec.decode(b), level))
 
   def cellsWithRing(cov: ArrayData, ring: Int): ArrayData =
-    new GenericArrayData(S2Functions.cellsWithNeighborsRing(cov.toLongArray(), ring))
+    new GenericArrayData(cellsWithNeighborsRing(cov.toLongArray(), ring))
 
   def coveringFixedLevelWithRing(b: Array[Byte], level: Int, ring: Int): ArrayData =
-    new GenericArrayData(S2Functions.cellsWithNeighborsRing(
+    new GenericArrayData(cellsWithNeighborsRing(
       RegionCoverer.coverFixedLevel(GeoCodec.decode(b), level), ring))
 
   def formatBlob(b: Array[Byte], precision: Int): UTF8String =
@@ -149,13 +148,121 @@ object S2Native {
   def maxDistance(a: Array[Byte], b: Array[Byte]): Double =
     Relate.maxDistanceMeters(shapes(a), shapes(b))
 
+  // ---- parsers, serializers, validation and overlays
+  def geogFromText(wkt: UTF8String): Array[Byte] =
+    GeoCodec.encode(Wkt.read(wkt.toString, validate = true))
+  def geogFromTextNoValidate(wkt: UTF8String): Array[Byte] =
+    GeoCodec.encode(Wkt.read(wkt.toString, validate = false))
+  def geogFromWkb(b: Array[Byte]): Array[Byte] = GeoCodec.encode(Wkb.read(b, validate = true))
+  def geogFromWkbNoValidate(b: Array[Byte]): Array[Byte] =
+    GeoCodec.encode(Wkb.read(b, validate = false))
+  def asWkb(b: Array[Byte]): Array[Byte] = Wkb.write(GeoCodec.decode(b))
+  def prepare(b: Array[Byte]): Array[Byte] = GeoCodec.prepare(b)
+
+  def isValidReason(b: Array[Byte]): UTF8String =
+    UTF8String.fromString(Validation.findError(GeoCodec.decode(b)).getOrElse(""))
+
+  /** Overlay prefilter from the STORED blob coverings — skips the per-row
+    * re-cover of both operands inside Overlay (empty blobs don't matter:
+    * the empty-side short-circuits run before the hint is consulted). */
+  private def storedDisjoint(a: Array[Byte], b: Array[Byte]): Some[Boolean] =
+    Some(!Covering.unionsIntersect(GeoCodec.coveringOf(a), GeoCodec.coveringOf(b)))
+
+  def intersection(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    GeoCodec.encode(Overlay.intersection(GeoCodec.decode(a), GeoCodec.decode(b),
+      storedDisjoint(a, b)))
+  def difference(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    GeoCodec.encode(Overlay.difference(GeoCodec.decode(a), GeoCodec.decode(b),
+      storedDisjoint(a, b)))
+  def unionGeog(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    GeoCodec.encode(Overlay.union(GeoCodec.decode(a), GeoCodec.decode(b)))
+
+  /** Re-covers the decoded geometry with RegionCoverer (the reference's
+    * exact cell goldens) rather than reading the inline covering, which
+    * blobs written by the earlier greedy coverer differ in. */
+  def covering(b: Array[Byte]): ArrayData =
+    new GenericArrayData(RegionCoverer.cover(GeoCodec.decode(b)))
+
+  // ---- cell ops (pure long math; no geometry decode)
+  def cellFromLonLat(lon: Double, lat: Double): Long = S2CellId.fromLonLatDegrees(lon, lat)
+  def cellParent(id: Long, level: Int): Long = S2CellId.parentChecked(id, level)
+  def cellChild(id: Long, k: Int): Long = S2CellId.childChecked(id, k)
+  def cellLevel(id: Long): Int = if (S2CellId.isValid(id)) S2CellId.level(id) else -1
+  def cellSortKey(id: Long): Long = id ^ Long.MinValue
+  def cellRangeMin(id: Long): Long =
+    if (S2CellId.isValid(id)) S2CellId.rangeMin(id) else S2CellId.Sentinel
+  def cellRangeMax(id: Long): Long =
+    if (S2CellId.isValid(id)) S2CellId.rangeMax(id) else S2CellId.Sentinel
+  def cellContains(a: Long, b: Long): Boolean = S2CellId.contains(a, b)
+  def cellIntersects(a: Long, b: Long): Boolean = S2CellId.intersects(a, b)
+  def cellToken(id: Long): UTF8String = UTF8String.fromString(S2CellId.toToken(id))
+  def cellFromToken(s: UTF8String): Long = S2CellId.fromToken(s.toString)
+  def cellDebug(id: Long): UTF8String = UTF8String.fromString(S2CellId.toDebugString(id))
+  def cellFromDebug(s: UTF8String): Long = S2CellId.fromDebugString(s.toString)
+  def cellFromWkb(b: Array[Byte]): Long = Wkb.cellFromWkb(b)
+  def arbitraryCellFromWkb(b: Array[Byte]): Long = Wkb.arbitraryCellFromWkb(b)
+
+  def cellEdgeNeighbor(id: Long, k: Int): Long =
+    if (!S2CellId.isValid(id) || k < 0 || k > 3) S2CellId.Sentinel
+    else S2CellId.edgeNeighbors(id)(k)
+
+  def cellAllNeighbors(id: Long): ArrayData =
+    new GenericArrayData(if (S2CellId.isValid(id)) S2CellId.allNeighbors(id) else Array.empty[Long])
+
+  def cellVertex(id: Long, k: Int): Array[Byte] =
+    if (!S2CellId.isValid(id) || k < 0 || k > 3) GeoCodec.encode(Geography.emptyPoint)
+    else GeoCodec.encode(Geography.Points(Vector(S2CellId.vertices(id)(k))))
+
+  /** Distinct union of the input cells and their ring-`r` neighborhoods
+    * (BFS over 8-neighbor steps) — the probe set of the dwithin join.
+    * Crossing `r` rings of level-l cells takes more than r × kMinWidth(l)
+    * of distance, so a ring chosen with r·minWidth >= radius is a
+    * sufficient buffer at ANY level — that is what lets the join trade a
+    * finer level (more shuffle keys) against a wider ring while staying
+    * exact. Cells are deduped across origins so the exploded candidate
+    * space stays minimal. */
+  def cellsWithNeighborsRing(ids: Array[Long], ring: Int): Array[Long] = {
+    val out = new java.util.LinkedHashSet[java.lang.Long]()
+    var frontier = new java.util.ArrayList[java.lang.Long]()
+    var i = 0
+    while (i < ids.length) {
+      if (out.add(ids(i))) frontier.add(ids(i))
+      i += 1
+    }
+    var step = 0
+    while (step < ring) {
+      val next = new java.util.ArrayList[java.lang.Long]()
+      var f = 0
+      while (f < frontier.size()) {
+        val nb = S2CellId.allNeighbors(frontier.get(f))
+        var k = 0
+        while (k < nb.length) {
+          if (out.add(nb(k))) next.add(nb(k))
+          k += 1
+        }
+        f += 1
+      }
+      frontier = next
+      step += 1
+    }
+    val res = new Array[Long](out.size)
+    val it = out.iterator()
+    var j = 0
+    while (it.hasNext) { res(j) = it.next(); j += 1 }
+    res
+  }
+
+  // ---- bundled-data lookups (S2Data)
+  def dataCity(name: UTF8String): Array[Byte] = S2Data.city(name.toString)
+  def dataCountry(name: UTF8String): Array[Byte] = S2Data.country(name.toString)
+
   // ---- cast-graph kernels (SURVEY §1.4): cell <-> geography casts
   def cellCenterToGeog(id: Long): Array[Byte] =
-    GeoCodec.encode(graft.core.Geography.CellCenter(id))
+    GeoCodec.encode(Geography.CellCenter(id))
 
   def cellToGeog(id: Long): Array[Byte] =
-    if (!S2CellId.isValid(id)) GeoCodec.encode(graft.core.Geography.Polygons(Vector.empty))
-    else GeoCodec.encode(graft.core.Geography.Polygons(Vector(Vector(S2CellId.vertices(id).toVector))))
+    if (!S2CellId.isValid(id)) GeoCodec.encode(Geography.Polygons(Vector.empty))
+    else GeoCodec.encode(Geography.Polygons(Vector(Vector(S2CellId.vertices(id).toVector))))
 
   def geogToCellCenter(b: Array[Byte]): Long =
     if (GeoCodec.isEmptyBlob(b)) S2CellId.Sentinel
@@ -168,8 +275,8 @@ object S2Native {
 
   def cellUnionToGeog(ids: ArrayData): Array[Byte] = {
     val valid = ids.toLongArray().filter(S2CellId.isValid)
-    if (valid.isEmpty) GeoCodec.encode(graft.core.Geography.Polygons(Vector.empty))
-    else GeoCodec.encode(graft.core.Geography.Polygons(
+    if (valid.isEmpty) GeoCodec.encode(Geography.Polygons(Vector.empty))
+    else GeoCodec.encode(Geography.Polygons(
       valid.toVector.map(id => Vector(S2CellId.vertices(id).toVector))))
   }
 
@@ -204,150 +311,25 @@ object S2Native {
   }
 }
 
-/**
- * Native Catalyst expressions for the hot geography predicates and
- * constructors (SURVEY §2.4/§2.8 refine path): these sit inside every
- * cover-then-refine join and every scan filter, so they get doGenCode and
- * live inside WholeStageCodegen instead of breaking the span with a UDF.
- * Each builder is the only implementation of its name, on the SQL surface
- * and (via `call_function`) the DataFrame surface alike; the
- * constant-argument contracts of the reference are enforced at build time
- * with the reference's exact error messages
- * (src/s2_functions_io.cpp:166-169, src/s2_bounds.cpp:91-99).
- */
+/** The `s2_dwithin_xyz` composite, also planned by [[SpatialJoinRewrite]]. */
 object GeogExpressions {
-
-  case class S2IntersectsExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      S2Native.intersects(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.spark.S2Native.intersects($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_intersects"
-  }
-
-  case class S2ContainsExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      S2Native.contains(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.spark.S2Native.contains($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_contains"
-  }
-
-  case class S2DwithinExpr(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any, m: Any): Any =
-      S2Native.dwithin(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]],
-        m.asInstanceOf[Double])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b, m) => s"graft.spark.S2Native.dwithin($a, $b, $m)")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-    override def prettyName: String = "s2_dwithin"
-  }
-
-  case class S2GeogPointExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = BinaryType
-    override def nullSafeEval(lon: Any, lat: Any): Any =
-      S2Native.geogPoint(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.spark.S2Native.geogPoint($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_geogpoint"
-  }
-
-  case class S2CoveringFixedLevelExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(b: Any, lvl: Any): Any =
-      S2Native.coveringFixedLevel(b.asInstanceOf[Array[Byte]], lvl.asInstanceOf[Int])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (b, l) => s"graft.spark.S2Native.coveringFixedLevel($b, $l)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_covering_fixed_level"
-  }
-
-  case class S2CellsWithRingExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(cov: Any, ring: Any): Any =
-      S2Native.cellsWithRing(cov.asInstanceOf[ArrayData], ring.asInstanceOf[Int])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (c, r) => s"graft.spark.S2Native.cellsWithRing($c, $r)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_cells_with_ring"
-  }
-
-  case class S2CoveringFixedLevelWithRingExpr(first: Expression, second: Expression,
-                                              third: Expression)
-      extends TernaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(b: Any, lvl: Any, ring: Any): Any =
-      S2Native.coveringFixedLevelWithRing(b.asInstanceOf[Array[Byte]],
-        lvl.asInstanceOf[Int], ring.asInstanceOf[Int])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (b, l, r) =>
-        s"graft.spark.S2Native.coveringFixedLevelWithRing($b, $l, $r)")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression,
-                                                   t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-    override def prettyName: String = "s2_covering_fixed_level_with_ring"
-  }
-
-  case class S2FormatExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = StringType
-    override def nullSafeEval(b: Any, p: Any): Any =
-      S2Native.formatBlob(b.asInstanceOf[Array[Byte]], p.asInstanceOf[Int])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (b, p) => s"graft.spark.S2Native.formatBlob($b, $p)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_format"
-  }
-
-  case class S2PointXyzExpr(child: Expression) extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullSafeEval(b: Any): Any = S2Native.pointXyz(b.asInstanceOf[Array[Byte]])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.spark.S2Native.pointXyz($c)")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "s2_point_xyz"
-  }
 
   /**
    * Chord-band dwithin refine over hoisted unit vectors: when BOTH sides
-   * are single plain points (xyz arrays of length 3 from [[S2PointXyzExpr]],
+   * are single plain points (xyz arrays of length 3 from `s2_point_xyz`,
    * computed once per input row), the pair is decided by comparing the
    * squared chord length against constants for radius*(1∓1e-9) — pure
    * codegen arithmetic, no blob decode, no kernel call. Only pairs inside
    * that ±1e-9 relative band (none in practice: fp divergence between this
    * chord and the kernel's atan2 angle is ~1e-15 relative) or with a
-   * non-point side fall back to the exact [[S2DwithinExpr]] kernel, so the
+   * non-point side fall back to the exact `s2_dwithin` kernel, so the
    * result is bit-identical to s2_dwithin on every input. Null semantics
    * match s2_dwithin: xyz is null iff its blob is null, and every null
    * route lands in the nullIntolerant exact expression.
    */
   def dwithinXyzTree(lxyz: Expression, rxyz: Expression,
                      ga: Expression, gb: Expression, meters: Double): Expression = {
-    val exact: Expression = S2DwithinExpr(ga, gb, Literal(meters))
+    val exact = NativeCall("s2_dwithin", Seq(ga, gb, Literal(meters)))
     // chord length caps at 2 (antipodal): beyond ~pi*R the band mapping is
     // no longer monotone, and radius 0 pins the band to a single fp value —
     // both take the kernel directly
@@ -372,145 +354,5 @@ object GeogExpressions {
         (LessThanOrEqual(dxyz2, Literal(lo2)), Literal.TrueLiteral),
         (GreaterThan(dxyz2, Literal(hi2)), Literal.FalseLiteral)), exact),
       exact)
-  }
-
-  /** Generic unary native expression over a static S2Native method —
-    * mechanical accessors share one shape. */
-  case class S2Unary1(child: Expression, method: String, dataType: DataType)
-      extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(b: Any): Any = {
-      val bytes = b.asInstanceOf[Array[Byte]]
-      method match {
-        case "asText" => S2Native.asText(bytes)
-        case "area" => S2Native.area(bytes)
-        case "isEmptyBlob" => S2Native.isEmptyBlob(bytes)
-        case "perimeter" => S2Native.perimeter(bytes)
-        case "lengthM" => S2Native.lengthM(bytes)
-        case "x" => S2Native.x(bytes)
-        case "y" => S2Native.y(bytes)
-        case "dimension" => S2Native.dimension(bytes)
-        case "numPoints" => S2Native.numPoints(bytes)
-        case "isValid" => S2Native.isValid(bytes)
-      }
-    }
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.spark.S2Native.$method($c)")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "s2_" + method.toLowerCase
-  }
-
-  /** Generic binary geography->primitive native expression. */
-  case class S2Binary2(left: Expression, right: Expression, method: String,
-                       dataType: DataType) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val ab = a.asInstanceOf[Array[Byte]]; val bb = b.asInstanceOf[Array[Byte]]
-      method match {
-        case "distance" => S2Native.distance(ab, bb)
-        case "equalsGeog" => S2Native.equalsGeog(ab, bb)
-        case "mayIntersect" => S2Native.mayIntersect(ab, bb)
-        case "maxDistance" => S2Native.maxDistance(ab, bb)
-      }
-    }
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.spark.S2Native.$method($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "s2_" + method.toLowerCase
-  }
-
-  /** Install the native builders in the session's function registry,
-    * enforcing the reference's constant-argument contracts. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String, n: Int)(f: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, { args: Seq[Expression] =>
-        require(args.size == n, s"$name expects $n arguments")
-        f(args)
-      }, "built-in")
-    // IMPLICIT CAST GRAPH into geography slots (r15, closes SURVEY §1.5's
-    // last ergonomic delta; reference src/s2_cell_ops.cpp:1034-1051
-    // registers CELL -> GEOGRAPHY and CELL_UNION -> GEOGRAPHY as IMPLICIT
-    // casts, so `SELECT s2_area(cell)` binds without an explicit
-    // s2_cell_to_geog call). Spark has no distinct CELL type — cells are
-    // BIGINT, unions ARRAY<BIGINT> — so a long/array argument in a
-    // geography slot takes the cell interpretation (invalid ids raise the
-    // reference's "Cell not valid" error, same as the explicit cast).
-    // VARCHAR stays non-implicit exactly like the reference (its
-    // string<->geography casts are registered explicit-only).
-    def bin(e: Expression) = e.dataType match {
-      case BinaryType => e
-      case LongType | IntegerType =>
-        CellExpressions.S2CellToGeogExpr(
-          if (e.dataType == LongType) e else Cast(e, LongType))
-      case ArrayType(LongType, _) => CellExpressions.S2CellUnionToGeogExpr(e)
-      case _ => Cast(e, BinaryType)
-    }
-    def d(e: Expression) = if (e.dataType == DoubleType) e else Cast(e, DoubleType)
-    def i(e: Expression) = if (e.dataType == IntegerType) e else Cast(e, IntegerType)
-
-    put("s2_intersects", 2)(a => S2IntersectsExpr(bin(a(0)), bin(a(1))))
-    put("s2_contains", 2)(a => S2ContainsExpr(bin(a(0)), bin(a(1))))
-    put("s2_astext", 1)(a => S2Unary1(bin(a(0)), "asText", StringType))
-    put("s2_area", 1)(a => S2Unary1(bin(a(0)), "area", DoubleType))
-    put("s2_isempty", 1)(a => S2Unary1(bin(a(0)), "isEmptyBlob", BooleanType))
-    put("s2_distance", 2)(a => S2Binary2(bin(a(0)), bin(a(1)), "distance", DoubleType))
-    put("s2_equals", 2)(a => S2Binary2(bin(a(0)), bin(a(1)), "equalsGeog", BooleanType))
-    put("s2_mayintersect", 2)(a => S2Binary2(bin(a(0)), bin(a(1)), "mayIntersect", BooleanType))
-    put("s2_max_distance", 2)(a => S2Binary2(bin(a(0)), bin(a(1)), "maxDistance", DoubleType))
-    put("s2_perimeter", 1)(a => S2Unary1(bin(a(0)), "perimeter", DoubleType))
-    put("s2_length", 1)(a => S2Unary1(bin(a(0)), "lengthM", DoubleType))
-    put("s2_x", 1)(a => S2Unary1(bin(a(0)), "x", DoubleType))
-    put("s2_y", 1)(a => S2Unary1(bin(a(0)), "y", DoubleType))
-    put("s2_dimension", 1)(a => S2Unary1(bin(a(0)), "dimension", IntegerType))
-    put("s2_num_points", 1)(a => S2Unary1(bin(a(0)), "numPoints", IntegerType))
-    put("s2_is_valid", 1)(a => S2Unary1(bin(a(0)), "isValid", BooleanType))
-    put("s2_dwithin", 3)(a => S2DwithinExpr(bin(a(0)), bin(a(1)), d(a(2))))
-    put("s2_geogpoint", 2)(a => S2GeogPointExpr(d(a(0)), d(a(1))))
-    put("s2_covering_fixed_level", 2) { a =>
-      // reference contract: src/s2_bounds.cpp:91-99
-      if (!a(1).foldable)
-        throw new IllegalArgumentException("s2_covering_fixed_level(): level must be a constant")
-      val lvl = Cast(a(1), IntegerType).eval() match {
-        case x: java.lang.Integer => x.intValue
-        case _ => -1
-      }
-      if (lvl < 0 || lvl > 30)
-        throw new IllegalArgumentException("s2_covering_fixed_level(): level must be between 0 and 30")
-      S2CoveringFixedLevelExpr(bin(a(0)), i(a(1)))
-    }
-    put("s2_cells_with_ring", 2)(a => S2CellsWithRingExpr(a(0), i(a(1))))
-    put("s2_covering_fixed_level_with_ring", 3) { a =>
-      // same constant-level contract as s2_covering_fixed_level
-      if (!a(1).foldable || !a(2).foldable)
-        throw new IllegalArgumentException(
-          "s2_covering_fixed_level_with_ring(): level and ring must be constants")
-      val lvl = Cast(a(1), IntegerType).eval() match {
-        case x: java.lang.Integer => x.intValue
-        case _ => -1
-      }
-      if (lvl < 0 || lvl > 30)
-        throw new IllegalArgumentException(
-          "s2_covering_fixed_level_with_ring(): level must be between 0 and 30")
-      S2CoveringFixedLevelWithRingExpr(bin(a(0)), i(a(1)), i(a(2)))
-    }
-    put("s2_point_xyz", 1)(a => S2PointXyzExpr(bin(a(0))))
-    put("s2_dwithin_xyz", 5) { a =>
-      // internal join-refine surface: meters must fold so the chord-band
-      // constants are computed once at plan time
-      if (!a(4).foldable)
-        throw new IllegalArgumentException("s2_dwithin_xyz(): meters must be a constant")
-      Cast(a(4), DoubleType).eval() match {
-        case m: java.lang.Double => dwithinXyzTree(a(0), a(1), bin(a(2)), bin(a(3)), m.doubleValue)
-        case _ => throw new IllegalArgumentException("s2_dwithin_xyz(): meters must be a constant")
-      }
-    }
-    put("s2_format", 2) { a =>
-      // reference contract: src/s2_functions_io.cpp:166-169
-      if (!a(1).foldable)
-        throw new IllegalArgumentException("Can't use s2_format() with non-constant precision")
-      S2FormatExpr(bin(a(0)), i(a(1)))
-    }
   }
 }

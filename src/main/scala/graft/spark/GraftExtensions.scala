@@ -198,17 +198,16 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
     v.filter(d => d >= 0 && !d.isNaN)
   }
 
-  /** Recognize the native spatial predicate expressions, the only form of
-    * these names. Returns (geogA, geogB, probeMeters): probeMeters is None
-    * for intersects/contains, the constant radius for dwithin. The
+  /** Recognize the spatial predicate calls by name (each name has one
+    * form, its [[NativeCall]]). Returns (geogA, geogB, probeMeters):
+    * probeMeters is None for intersects/contains, the constant radius for
+    * dwithin. The
     * predicate expression itself is reused verbatim as the refine filter,
     * so argument order (contains is asymmetric) is never disturbed. */
   private def spatialPredicate(e: Expression): Option[(Expression, Expression, Option[Double])] =
     e match {
-      case GeogExpressions.S2IntersectsExpr(g1, g2) => Some((g1, g2, None))
-      case GeogExpressions.S2ContainsExpr(g1, g2) => Some((g1, g2, None))
-      case GeogExpressions.S2DwithinExpr(g1, g2, m) =>
-        foldedMeters(m).map(d => (g1, g2, Some(d)))
+      case NativeCall("s2_intersects" | "s2_contains", Seq(g1, g2)) => Some((g1, g2, None))
+      case NativeCall("s2_dwithin", Seq(g1, g2, m)) => foldedMeters(m).map(d => (g1, g2, Some(d)))
       case _ => None
     }
 
@@ -310,14 +309,14 @@ object SpatialJoinRewrite extends Rule[LogicalPlan]
                 withNeighbors: Boolean, withXyz: Boolean)
         : (LogicalPlan, Attribute, Attribute, Option[Attribute]) = {
       val cov: Expression =
-        if (withNeighbors) GeogExpressions.S2CoveringFixedLevelWithRingExpr(
-          geog, Literal(level), Literal(ring))
-        else GeogExpressions.S2CoveringFixedLevelExpr(geog, Literal(level))
+        if (withNeighbors)
+          NativeCall("s2_covering_fixed_level_with_ring", Seq(geog, Literal(level), Literal(ring)))
+        else NativeCall("s2_covering_fixed_level", Seq(geog, Literal(level)))
       val covAlias = Alias(cov, s"__${side}_cov")()
       // dwithin only: hoist the point unit vector once per INPUT row so the
       // per-candidate refine is chord arithmetic, not a blob decode
       val xyzAlias =
-        if (withXyz) Some(Alias(GeogExpressions.S2PointXyzExpr(geog), s"__${side}_xyz")())
+        if (withXyz) Some(Alias(NativeCall("s2_point_xyz", Seq(geog)), s"__${side}_xyz")())
         else scala.None
       val tagged = Project(child.output ++ (covAlias +: xyzAlias.toSeq), child)
       // an OUTER explode: a null or empty covering yields one null cell,

@@ -1,10 +1,13 @@
 package graft.spark
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.types.StructType
 
-import graft.core.{GeoCodec, Geography, LatLngRect, S2CellId, Wkb}
+import graft.core.{GeoCodec, LatLngRect, S2CellId, Wkb}
 
 /** S2_BOX surface type: plain struct of degrees (reference S2_BOX is a
   * STRUCT(xmin,ymin,xmax,ymax DOUBLE) alias, src/s2_types.cpp:33-40). */
@@ -13,7 +16,6 @@ case class S2Box(xmin: Double, ymin: Double, xmax: Double, ymax: Double)
 object S2Boxes {
 
   def toBox(r: LatLngRect): S2Box = S2Box(r.xminDeg, r.yminDeg, r.xmaxDeg, r.ymaxDeg)
-  def toRect(b: S2Box): LatLngRect = LatLngRect.fromDegrees(b.xmin, b.ymin, b.xmax, b.ymax)
 
   /** Geography bound in radians; cell-center fast path decodes only the
     * 8-byte id (reference: s2_bounds.cpp:190-193). */
@@ -25,27 +27,31 @@ object S2Boxes {
     } else LatLngRect.bound(GeoCodec.decode(bytes))
   }
 
-  val boundsBox: Array[Byte] => S2Box = (bytes: Array[Byte]) => toBox(boundsRect(bytes))
+  // ---- kernels of the s2_box* SQL names; an S2_BOX value is an
+  // InternalRow of BoxType
+  private def row(xmin: Double, ymin: Double, xmax: Double, ymax: Double): InternalRow =
+    new GenericInternalRow(Array[Any](xmin, ymin, xmax, ymax))
+  private def row(r: LatLngRect): InternalRow = row(r.xminDeg, r.yminDeg, r.xmaxDeg, r.ymaxDeg)
+  private def rect(b: InternalRow): LatLngRect =
+    LatLngRect.fromDegrees(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3))
+
+  def boundsBox(bytes: Array[Byte]): InternalRow = row(boundsRect(bytes))
 
   /** Constructor passes the input degrees through verbatim (the reference
     * S2_BOX constructor copies; only *operations* round-trip radians).
     * ymin > ymax is the EMPTY convention (s2_bounds.cpp:506-512). */
-  val box: (Double, Double, Double, Double) => S2Box =
-    (xmin: Double, ymin: Double, xmax: Double, ymax: Double) =>
-      if (ymin > ymax) toBox(LatLngRect.Empty) else S2Box(xmin, ymin, xmax, ymax)
+  def box(xmin: Double, ymin: Double, xmax: Double, ymax: Double): InternalRow =
+    if (ymin > ymax) row(LatLngRect.Empty) else row(xmin, ymin, xmax, ymax)
 
-  val boxIntersects: (S2Box, S2Box) => Boolean =
-    (a: S2Box, b: S2Box) => toRect(a).intersects(toRect(b))
+  def boxIntersects(a: InternalRow, b: InternalRow): Boolean = rect(a).intersects(rect(b))
 
-  val boxUnion: (S2Box, S2Box) => S2Box =
-    (a: S2Box, b: S2Box) => toBox(toRect(a).union(toRect(b)))
+  def boxUnion(a: InternalRow, b: InternalRow): InternalRow = row(rect(a).union(rect(b)))
 
   /** Identity in Spark — no aliased types to strip (reference
     * s2_bounds.cpp:455-492 exists only because DuckDB aliases structs). */
-  val boxStruct: S2Box => S2Box = (b: S2Box) => b
+  def boxStruct(b: InternalRow): InternalRow = b
 
-  val boxWkb: S2Box => Array[Byte] =
-    (b: S2Box) => Wkb.write(LatLngRect.toWkbGeography(toRect(b)))
+  def boxWkb(b: InternalRow): Array[Byte] = Wkb.write(LatLngRect.toWkbGeography(rect(b)))
 
   /** s2_bounds_box_agg: rect-union aggregate
     * (reference: s2_bounds.cpp:204-348; Update/Combine/Finalize map to
@@ -67,15 +73,14 @@ object S2Boxes {
     def outputEncoder: Encoder[S2Box] = Encoders.product[S2Box]
   }
 
+  /** The S2_BOX struct, as the reference declares it. */
+  val BoxType: StructType = Encoders.product[S2Box].schema
+
+  /** Register the box scalars (rows of the one function table) and the
+    * bounds aggregate, replacing any existing binding. */
   def register(spark: SparkSession): Unit = {
-    val r = spark.udf
-    r.register("s2_bounds_box", boundsBox)
-    r.register("s2_box", box)
-    r.register("s2_box_intersects", boxIntersects)
-    r.register("s2_box_union", boxUnion)
-    r.register("s2_box_struct", boxStruct)
-    r.register("s2_box_wkb", boxWkb)
-    r.register("s2_bounds_box_agg", udaf(new BoundsBoxAgg))
+    SqlFunctions.install(spark, SqlFunctions.boxes, replace = true)
+    spark.udf.register("s2_bounds_box_agg", udaf(new BoundsBoxAgg))
     ()
   }
 }

@@ -95,8 +95,7 @@ object S2Data {
 
   /** Register the scalar lookups + temp views so SQL can reach the data. */
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("s2_data_city", (n: String) => city(n))
-    spark.udf.register("s2_data_country", (n: String) => country(n))
+    SqlFunctions.install(spark, SqlFunctions.data, replace = true)
     cities(spark).createOrReplaceTempView("s2_data_cities")
     countries(spark).createOrReplaceTempView("s2_data_countries")
     dependencies(spark).createOrReplaceTempView("s2_dependencies")

@@ -1,23 +1,21 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native codegen kernel for ingest-time text canonicalization (the
- * CCNet/Gopher/RefinedWeb pre-dedup normalize: NFC composition, C0/DEL
- * control strip, whitespace-run collapse, trim). This sits on the
+ * Kernel of `text_normalize` / `doc_normalize`, ingest-time text
+ * canonicalization (the CCNet/Gopher/RefinedWeb pre-dedup normalize: NFC
+ * composition, C0/DEL control strip, whitespace-run collapse, trim). This
+ * sits on the
  * DECLARED hot ingest surface — every document flows through it before
  * fingerprinting — and was the last ScalaUDF on such a path: the UDF
  * form pays a catalyst→Scala converter per row AND recompiled both
- * regex patterns per call (String.replaceAll). The native expression
- * runs inside whole-stage codegen against precompiled patterns.
- * Semantics are byte-identical to the previous UDF (TextNormSpec pins
- * the parity; DuckDB's nfc_normalize replays it in the oracle).
+ * regex patterns per call (String.replaceAll). The [[NativeCall]]
+ * runs it inside whole-stage codegen against precompiled patterns.
+ * Semantics are byte-identical to `TextAnalysis.normalizeTextFn`
+ * (PipelineOpsSpec pins the parity; DuckDB's nfc_normalize replays it in
+ * the oracle).
  */
 object TextNative {
   private val Ctrl =
@@ -25,7 +23,6 @@ object TextNative {
   private val Ws = java.util.regex.Pattern.compile("\\s+")
 
   def normalize(s: UTF8String): UTF8String = {
-    if (s == null) return null
     val n = java.text.Normalizer.normalize(s.toString,
       java.text.Normalizer.Form.NFC)
     val c = Ctrl.matcher(n).replaceAll("")
@@ -35,36 +32,11 @@ object TextNative {
 
 object TextExpressions {
 
-  case class TextNormalizeExpr(child: Expression) extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = StringType
-    override def nullSafeEval(a: Any): Any =
-      TextNative.normalize(a.asInstanceOf[UTF8String])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.spark.TextNative.normalize($c)")
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-    override def prettyName: String = "text_normalize"
-  }
-
   /** Collision-proof internal name (same discipline as VecExpressions). */
   val InternalNormalize = "__graft_text_normalize"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, { args: Seq[Expression] =>
-          require(args.size == 1, s"$name expects 1 argument")
-          TextNormalizeExpr(args.head.dataType match {
-            case StringType => args.head
-            case _ => Cast(args.head, StringType)
-          })
-        }, "built-in")
-    put(InternalNormalize)
-    put("text_normalize")
-    // the TextAnalysis SQL-surface alias rides the same native expression;
-    // registering it here (not as a ScalaUDF) keeps SQL plans codegen-clean
-    put("doc_normalize")
-  }
+  /** Claims `text_normalize`, its internal name and the TextAnalysis
+    * SQL-surface alias `doc_normalize`, each only while it is free. */
+  def ensureRegistered(spark: SparkSession): Unit =
+    SqlFunctions.install(spark, SqlFunctions.text, replace = false)
 }

@@ -1,17 +1,14 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /**
- * Native codegen kernels for embedding-vector scoring (`ARRAY<FLOAT>`
- * dot product and L2 norm). These sit on every candidate pair of the
- * LSH / IVF / near-dup joins — the UDF form pays a catalyst→Scala
- * converter that ALLOCATES AND COPIES both arrays per pair; the native
- * expressions read the UnsafeArrayData buffers in place inside
+ * Kernels of the `vec_*` SQL names (`ARRAY<FLOAT>` dot product, L2 norm,
+ * packed SRP signature). These sit on every candidate pair of the
+ * LSH / IVF / near-dup joins — a UDF form pays a catalyst→Scala
+ * converter that ALLOCATES AND COPIES both arrays per pair; the
+ * [[NativeCall]] reads the UnsafeArrayData buffers in place inside
  * whole-stage codegen, so a candidate pair costs one float loop and
  * zero allocations.
  */
@@ -67,41 +64,6 @@ object VecNative {
 
 object VecExpressions {
 
-  case class VecDotExpr(left: Expression, right: Expression) extends BinaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      VecNative.vecDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.spark.VecNative.vecDot($a, $b)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "vec_dot"
-  }
-
-  case class VecNormExpr(child: Expression) extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any): Any =
-      VecNative.vecNorm(a.asInstanceOf[ArrayData])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.spark.VecNative.vecNorm($c)")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "vec_norm"
-  }
-
-  case class VecSrpPackedExpr(child: Expression, bits: Int, seed: Int)
-      extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any): Any =
-      VecNative.srpPacked(a.asInstanceOf[ArrayData], bits, seed)
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.spark.VecNative.srpPacked($c, $bits, $seed)")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "vec_srp_packed"
-  }
-
   /** Collision-proof names the library join paths resolve through — a
     * user-registered `vec_dot` must never be able to hijack (or be
     * clobbered by) graft's internal scoring. */
@@ -110,50 +72,12 @@ object VecExpressions {
   val InternalSrpPacked = "__graft_vec_srp_packed"
 
   /** Idempotent session registration — the ANN join paths call this at
-    * build time so library users need no explicit register step. The
-    * `__graft_`-prefixed internal names are always (re)bound; the public
-    * `vec_*` aliases are claimed only while the name is free, so calling
-    * a library method like lshTopK can never silently replace a function
-    * the user registered under the same name. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String, n: Int)(f: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, { args: Seq[Expression] =>
-        require(args.size == n, s"$name expects $n arguments")
-        f(args)
-      }, "built-in")
-    def putIfAbsent(name: String, n: Int)(f: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(
-            org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        put(name, n)(f)
-    def arrF(e: Expression) = e.dataType match {
-      case ArrayType(FloatType, _) => e
-      case _ => Cast(e, ArrayType(FloatType))
-    }
-    val dotB = (a: Seq[Expression]) => VecDotExpr(arrF(a(0)), arrF(a(1)))
-    val normB = (a: Seq[Expression]) => VecNormExpr(arrF(a(0)))
-    // the __graft_ prefix makes an existing binding necessarily ours, so
-    // register-if-absent is correct for the internal names too (and keeps
-    // repeated ensureRegistered calls from logging replace warnings)
-    putIfAbsent(InternalDot, 2)(dotB)
-    putIfAbsent(InternalNorm, 1)(normB)
-    putIfAbsent("vec_dot", 2)(dotB)
-    putIfAbsent("vec_norm", 1)(normB)
-    val srpB = (a: Seq[Expression]) => {
-      def c(e: Expression, what: String): Int = {
-        if (!e.foldable)
-          throw new IllegalArgumentException(s"vec_srp_packed(): $what must be a constant")
-        Cast(e, IntegerType).eval() match {
-          case x: java.lang.Integer => x.intValue
-          case _ => throw new IllegalArgumentException(
-            s"vec_srp_packed(): $what must be a constant")
-        }
-      }
-      val bits = c(a(1), "bits"); val seed = c(a(2), "seed")
-      require(bits > 0 && bits <= 63, "vec_srp_packed(): bits must be in [1, 63]")
-      VecSrpPackedExpr(arrF(a(0)), bits, seed)
-    }
-    putIfAbsent(InternalSrpPacked, 3)(srpB)
-    putIfAbsent("vec_srp_packed", 3)(srpB)
-  }
+    * build time so library users need no explicit register step. Every
+    * name, the public `vec_*` aliases and the `__graft_` internal names
+    * alike, is claimed only while it is free: a library method like
+    * lshTopK can never silently replace a function the user registered
+    * under the same name, and the `__graft_` prefix makes an existing
+    * internal binding necessarily ours. */
+  def ensureRegistered(spark: SparkSession): Unit =
+    SqlFunctions.install(spark, SqlFunctions.vec, replace = false)
 }

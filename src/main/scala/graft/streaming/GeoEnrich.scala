@@ -122,7 +122,7 @@ object GeoEnrich {
       var done = false
       while (!done && lvl >= 0) {
         kept = 0
-        val cells = graft.spark.S2Functions.cellsWithNeighborsRing(
+        val cells = graft.spark.S2Native.cellsWithNeighborsRing(
           Array(graft.core.S2CellId.parent(c30, lvl)), 1)
         var ci = 0
         while (ci < cells.length) {

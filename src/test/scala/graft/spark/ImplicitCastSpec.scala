@@ -21,6 +21,7 @@ class ImplicitCastSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("graft-implicit-cast-test").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     S2Functions.register(spark)
+    S2Boxes.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -62,5 +63,46 @@ class ImplicitCastSpec extends AnyFunSuite with BeforeAndAfterAll {
     val implicitC = outcome("SELECT s2_astext(CAST(-1 AS BIGINT))")
     assert(implicitC === explicit,
       "the implicit CELL -> GEOGRAPHY conversion must match the explicit function on invalid ids")
+  }
+
+  /** A query's value (byte and cell arrays as sequences) or its error's
+    * message. */
+  private def outcome(sql: String): Either[String, Any] =
+    try Right(one(sql) match {
+      case b: Array[Byte] => b.toSeq
+      case a: scala.collection.Seq[_] => a.toSeq
+      case v => v
+    })
+    catch { case e: Exception => Left(Option(e.getMessage).getOrElse("").take(80)) }
+
+  test("every geography slot takes a cell like the explicit cast route") {
+    val cell = "s2_cellfromlonlat(-64.0, 45.0)"
+    val parent = s"s2_cell_parent($cell, 12)"
+    val area = "s2_geogfromtext('POLYGON ((-64.5 44.5, -63.5 44.5, -63.5 45.5, -64.5 45.5, -64.5 44.5))')"
+    val calls = Seq(
+      "s2_aswkb(%s)", "s2_prepare(%s)", "s2_covering(%s)", "s2_is_valid_reason(%s)",
+      s"s2_intersection(%s, $area)", s"s2_difference($area, %s)", s"s2_union(%s, $area)",
+      "s2_geog_to_cellcenter(%s)", "s2_bounds_box(%s)")
+    for (c <- calls; id <- Seq(cell, parent)) {
+      val explicit = outcome("SELECT " + c.format(s"s2_cell_to_geog($id)"))
+      val implicitC = outcome("SELECT " + c.format(id))
+      assert(implicitC === explicit, c.format(id))
+    }
+    // a value, not only an error, crosses the implicit route
+    assert(outcome("SELECT s2_aswkb(" + parent + ")").isRight)
+    // two cells into the two slots of an overlay
+    assert(outcome(s"SELECT s2_union($cell, $parent)") ===
+      outcome(s"SELECT s2_union(s2_cell_to_geog($cell), s2_cell_to_geog($parent))"))
+  }
+
+  test("the WKB slots stay plain BINARY: a cell there is not a geography") {
+    for (name <- Seq("s2_geogfromwkb", "s2_geogfromwkb_novalidate", "s2_cellfromwkb",
+        "s2_arbitrarycellfromwkb")) {
+      val plan =
+        try spark.sql(s"SELECT $name(s2_cellfromlonlat(-64.0, 45.0))").queryExecution.analyzed
+          .toString
+        catch { case _: org.apache.spark.sql.AnalysisException => "" }
+      assert(!plan.contains("s2_cell_to_geog"), s"$name took a cell as a geography:\n$plan")
+    }
   }
 }

@@ -46,7 +46,7 @@ class S2JoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("s2_cells_with_ring(cov, ring) AS cells")
       .as[Array[Long]].collect()
     val want = cases.map { case (cov, ring) =>
-      S2Functions.cellsWithNeighborsRing(cov, ring) }
+      S2Native.cellsWithNeighborsRing(cov, ring) }
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(g.toSeq === w.toSeq, s"case $i: ${cases(i)}")
     }

@@ -272,7 +272,7 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     * the dwithin neighbour ring. */
   private def ringSide(plan: LogicalPlan): String = {
     def hasRing(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(
-      _.exists(_.isInstanceOf[GeogExpressions.S2CoveringFixedLevelWithRingExpr])))
+      _.exists { case NativeCall(n, _) => n == "s2_covering_fixed_level_with_ring"; case _ => false }))
     val sides = plan.collect { case j: Join if hasRing(j) =>
       (hasRing(j.left), hasRing(j.right)) }
     sides match {
@@ -389,8 +389,7 @@ class SpatialJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     def coverings(df: DataFrame): Int =
       new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan)(p => p)
         .flatMap(_.expressions).map(_.collect {
-          case e: GeogExpressions.S2CoveringFixedLevelExpr => e
-          case e: GeogExpressions.S2CoveringFixedLevelWithRingExpr => e
+          case e @ NativeCall("s2_covering_fixed_level" | "s2_covering_fixed_level_with_ring", _) => e
         }.size).sum
     def counted(df: DataFrame): (Seq[String], Long, Long) = {
       pointCalls.reset(); prepareCalls.reset()
